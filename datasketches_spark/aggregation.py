@@ -20,11 +20,29 @@ of the raw rows, and the map phase is embarrassingly parallel.  The
 alternative single-phase pandas grouped-agg UDFs (functions/aggregates)
 are provided for SQL ergonomics but shuffle raw rows; use this module
 for large inputs.
+
+Every phase-1 builder is one (init, update, emit) triple over the
+shared fold kernel :func:`_fold_partitions`:
+
+  ``sketch_partial`` / ``sketch_agg_multi``: one empty slot per spec /
+      create each spec's sketch from its first coerced batch, then
+      ``update_sketch`` (weighted: ``update_series(v, weights=w)``) /
+      one blob per spec.
+  ``tuple_sketch_partial``: ``AodSketch(lg_k, n_values)`` /
+      ``update_batch`` over keys and summary rows coerced together /
+      the blob.
+  ``theta_partial_state``: ``ThetaSketch(lg_k)`` / ``update_values``
+      on the coerced column / ``(hashes, theta)``.
+  ``runtime_filter.bloomfilter_blob``: ``ApacheBloomFilter(num_bits,
+      num_hashes, seed)`` / ``update_series`` on the coerced column /
+      the wire bytes.
+
+Every blob merge (phase 2) is :func:`_merge_specs`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -44,10 +62,152 @@ from .families import (
     update_sketch,
 )
 
+# accumulate Arrow batches into larger chunks before grouping so the
+# pandas groupby + sketch-update cost is amortized (an Arrow batch is
+# ~10k rows; a chunk is up to 512k) -- bounded memory per task
+_CHUNK_ROWS = 1 << 19
 
-def _out_schema(df: DataFrame, group_cols: list[str], output_col: str) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(list(fields) + [StructField(output_col, BinaryType(), True)])
+
+def _blob_schema(
+    df: DataFrame, group_cols: list[str], blob_cols: list[str]
+) -> StructType:
+    return StructType(
+        [df.schema[c] for c in group_cols]
+        + [StructField(c, BinaryType(), True) for c in blob_cols]
+    )
+
+
+def _fold_partitions(
+    df: DataFrame,
+    group_cols: list[str],
+    cols: list[str],
+    schema: StructType,
+    init: Callable[[], object],
+    update: Callable[[object, pd.DataFrame], None],
+    emit: Callable[[object], list],
+) -> DataFrame:
+    """The one phase-1 fold: per partition, one state per group key.
+
+    ``df`` is narrowed to ``group_cols + cols``; every chunk of up to
+    ``_CHUNK_ROWS`` rows is split by group (NULL keys form their own
+    group), a new key's state is ``init()``, and every rows slice is
+    folded in with ``update(state, rows)``.  At partition end
+    each state yields one row ``key + emit(state)`` in ``schema``; a
+    partition that saw no rows yields no row, so empty partitions
+    never reach the merge."""
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict[tuple, object] = {}
+        buf: list[pd.DataFrame] = []
+        nbuf = 0
+
+        def fold(key: tuple, sub: pd.DataFrame) -> None:
+            st = acc.get(key)
+            if st is None:
+                st = acc[key] = init()
+            update(st, sub)
+
+        def flush() -> None:
+            nonlocal buf, nbuf
+            if not buf:
+                return
+            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+            buf, nbuf = [], 0
+            if group_cols:
+                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
+                    fold(key if isinstance(key, tuple) else (key,), sub)
+            else:
+                fold((), pdf)
+
+        for pdf in batches:
+            if len(pdf):
+                buf.append(pdf)
+                nbuf += len(pdf)
+            if nbuf >= _CHUNK_ROWS:
+                flush()
+        flush()
+        if acc:
+            rows = [list(key) + list(emit(st)) for key, st in acc.items()]
+            yield pd.DataFrame(rows, columns=schema.names)
+
+    return df.select(*(group_cols + cols)).mapInPandas(build, schema=schema)
+
+
+def _merge_specs(
+    partial: DataFrame,
+    specs: list[tuple],
+    group_cols: list[str],
+    finalize=None,
+    finalize_schema: str | StructType | None = None,
+) -> DataFrame:
+    """The one phase-2 merge: per group, merge each ``(blob_col,
+    family, k)`` spec's blobs into one sketch, then emit the merged
+    blobs, or ``finalize({blob_col: sketch})`` in ``finalize_schema``.
+    ``groupBy()`` with no columns is the global group."""
+    if finalize is None:
+        fields = [StructField(s[0], BinaryType(), True) for s in specs]
+    elif finalize_schema is None:
+        raise ValueError("finalize requires finalize_schema")
+    elif isinstance(finalize_schema, str):
+        fields = StructType.fromDDL(finalize_schema).fields
+    else:
+        fields = finalize_schema.fields
+    schema = StructType([partial.schema[c] for c in group_cols] + list(fields))
+    out_names = [f.name for f in fields]
+
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        merged: dict[str, object] = {}
+        for col, family, k in specs:
+            # the un-dropped series: an all-NULL blob group still yields
+            # an empty sketch (build_params on an empty series cannot
+            # infer a quantile dtype)
+            series = pdf[col]
+            sk = merged[col] = create_sketch(family, build_params(family, k, series))
+            update_sketch(family, sk, series, merge=True)  # blob series
+        if finalize is not None:
+            vals = finalize(merged)
+        else:
+            vals = {c: sk.serialize() for c, sk in merged.items()}
+        row = [pdf[c].iloc[0] for c in group_cols] + [vals[n] for n in out_names]
+        return pd.DataFrame([row], columns=group_cols + out_names)
+
+    return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
+
+
+def _sketch_partials(
+    df: DataFrame,
+    specs: list[tuple],
+    group_cols: list[str],
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Phase 1 of :func:`sketch_partial` and :func:`sketch_agg_multi`:
+    one blob column per ``(input_col, family, k, output_col)`` spec."""
+    in_cols = list(dict.fromkeys([s[0] for s in specs]))  # stable unique
+    if weight_col is not None:
+        in_cols.append(weight_col)
+    # captured Spark-side types: a null-bearing Arrow batch of an
+    # integral column arrives float64 and must be coerced back (5 and
+    # 5.0 hash differently — families.coerce_value_batch)
+    kinds = [spark_value_kind(df.schema[s[0]].dataType) for s in specs]
+
+    def update(sks: list, sub: pd.DataFrame) -> None:
+        for i, (col, family, k, _out) in enumerate(specs):
+            if weight_col is None:
+                series = coerce_value_batch(sub[col], kinds[i])
+            else:
+                series, w = coerce_value_batch(sub[col], kinds[i], sub[weight_col])
+            if sks[i] is None:
+                sks[i] = create_sketch(family, build_params(family, k, series))
+            if weight_col is None:
+                update_sketch(family, sks[i], series)
+            else:
+                sks[i].update_series(series, weights=w)
+
+    return _fold_partitions(
+        df, group_cols, in_cols, _blob_schema(df, group_cols, [s[3] for s in specs]),
+        lambda: [None] * len(specs), update,
+        lambda sks: [sk.serialize() for sk in sks],
+    )
 
 
 def sketch_partial(
@@ -73,68 +233,9 @@ def sketch_partial(
             "weight_col is only supported by the sampling families "
             "(reservoir, ebpps)"
         )
-    schema = _out_schema(df, group_cols, output_col)
-    cols = group_cols + [input_col]
-    if weight_col is not None:
-        cols.append(weight_col)
-    # captured Spark-side type: a null-bearing Arrow batch of an
-    # integral column arrives float64 and must be coerced back (5 and
-    # 5.0 hash differently — families.coerce_value_batch)
-    kind = spark_value_kind(df.schema[input_col].dataType)
-
-    def _update(sk, sub) -> None:
-        if weight_col is not None:
-            v, w = coerce_value_batch(sub[input_col], kind, sub[weight_col])
-            sk.update_series(v, weights=w)
-        else:
-            update_sketch(family, sk, coerce_value_batch(sub[input_col], kind))
-
-    # accumulate Arrow batches into larger chunks before grouping so the
-    # pandas groupby + sketch-update cost is amortized (an Arrow batch is
-    # ~10k rows; a chunk is up to 512k) -- bounded memory per task
-    chunk_rows = 1 << 19
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    sk = acc.get(key)
-                    if sk is None:
-                        series = coerce_value_batch(sub[input_col], kind)
-                        sk = acc[key] = create_sketch(
-                            family, build_params(family, k, series)
-                        )
-                    _update(sk, sub)
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    series = coerce_value_batch(pdf[input_col], kind)
-                    sk = acc[()] = create_sketch(family, build_params(family, k, series))
-                _update(sk, pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [list(key) + [sk.serialize()] for key, sk in acc.items()]
-            out = pd.DataFrame(rows, columns=group_cols + [output_col])
-            yield out
-
-    return df.select(*cols).mapInPandas(build, schema=schema)
+    return _sketch_partials(
+        df, [(input_col, family, k, output_col)], group_cols, weight_col
+    )
 
 
 def sketch_merge(
@@ -155,37 +256,11 @@ def sketch_merge(
     (estimate, quantiles, weights) in the SAME Python round as the
     merge instead of a separate Arrow scalar-UDF pass -- one fewer
     Python round-trip per query, identical results."""
-    group_cols = list(group_cols or [])
-    if finalize is not None:
-        if finalize_schema is None:
-            raise ValueError("finalize requires finalize_schema")
-        extra = (
-            StructType.fromDDL(finalize_schema)
-            if isinstance(finalize_schema, str)
-            else finalize_schema
-        )
-        schema = StructType(
-            [partial.schema[c] for c in group_cols] + list(extra.fields)
-        )
-        out_names = [f.name for f in extra.fields]
-    else:
-        schema = _out_schema(partial, group_cols, sketch_col)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        series = pdf[sketch_col]
-        sk = create_sketch(family, build_params(family, k, series))
-        update_sketch(family, sk, series, merge=True)  # blob series
-        keys = [pdf[c].iloc[0] for c in group_cols]
-        if finalize is not None:
-            vals = finalize(sk)
-            row = keys + [vals[n] for n in out_names]
-            return pd.DataFrame([row], columns=group_cols + out_names)
-        row = keys + [sk.serialize()]
-        return pd.DataFrame([row], columns=group_cols + [sketch_col])
-
-    if group_cols:
-        return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
-    return partial.groupBy().applyInPandas(merge, schema=schema)
+    fin = None if finalize is None else (lambda m: finalize(m[sketch_col]))
+    return _merge_specs(
+        partial, [(sketch_col, family, k)], list(group_cols or []),
+        fin, finalize_schema,
+    )
 
 
 def sketch_agg(
@@ -244,88 +319,11 @@ def sketch_agg_multi(
     out_cols = [s[3] for s in specs]
     if len(set(out_cols)) != len(out_cols):
         raise ValueError("duplicate output_col in specs")
-    in_cols = list(dict.fromkeys([s[0] for s in specs]))  # stable unique
-    kinds = [spark_value_kind(df.schema[s[0]].dataType) for s in specs]
-
-    fields = [df.schema[c] for c in group_cols]
-    schema = StructType(
-        list(fields) + [StructField(c, BinaryType(), True) for c in out_cols]
+    partial = _sketch_partials(df, specs, group_cols)
+    return _merge_specs(
+        partial, [(out, family, k) for _col, family, k, out in specs],
+        group_cols, finalize, finalize_schema,
     )
-    if finalize is not None:
-        if finalize_schema is None:
-            raise ValueError("finalize requires finalize_schema")
-        extra = (
-            StructType.fromDDL(finalize_schema)
-            if isinstance(finalize_schema, str)
-            else finalize_schema
-        )
-        merge_schema = StructType(list(fields) + list(extra.fields))
-        fin_names = [f.name for f in extra.fields]
-    else:
-        merge_schema = schema
-        fin_names = []
-    chunk_rows = 1 << 19
-
-    def build(batches):
-        acc: dict[tuple, list] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-
-        def fold(key: tuple, sub: pd.DataFrame) -> None:
-            sks = acc.get(key)
-            if sks is None:
-                sks = acc[key] = [None] * len(specs)
-            for i, (col, family, k, _out) in enumerate(specs):
-                series = coerce_value_batch(sub[col], kinds[i])
-                if sks[i] is None:
-                    sks[i] = create_sketch(family, build_params(family, k, series))
-                update_sketch(family, sks[i], series)
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    fold(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                fold((), pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [
-                list(key) + [sk.serialize() if sk is not None else None for sk in sks]
-                for key, sks in acc.items()
-            ]
-            yield pd.DataFrame(rows, columns=group_cols + out_cols)
-
-    partial = df.select(*(group_cols + in_cols)).mapInPandas(build, schema=schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = [pdf[c].iloc[0] for c in group_cols]
-        merged: dict[str, object] = {}
-        for col, family, k, out_col in specs:
-            series = pdf[out_col].dropna()
-            sk = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sk, series, merge=True)  # blob series
-            merged[out_col] = sk
-        if finalize is not None:
-            vals = finalize(merged)
-            row = keys + [vals[n] for n in fin_names]
-            return pd.DataFrame([row], columns=group_cols + fin_names)
-        row = keys + [merged[c].serialize() for c in out_cols]
-        return pd.DataFrame([row], columns=group_cols + out_cols)
-
-    if group_cols:
-        return partial.groupBy(*group_cols).applyInPandas(merge, schema=merge_schema)
-    return partial.groupBy().applyInPandas(merge, schema=merge_schema)
 
 
 def tuple_sketch_partial(
@@ -347,56 +345,21 @@ def tuple_sketch_partial(
 
     group_cols = list(group_cols or [])
     value_cols = list(value_cols)
-    schema = _out_schema(df, group_cols, output_col)
-    cols = group_cols + [key_col] + value_cols
     lgk = lg_k if lg_k is not None else DEFAULT_LG_K
-    m = len(value_cols)
     key_kind = spark_value_kind(df.schema[key_col].dataType)
-    chunk_rows = 1 << 19
 
-    def build(batches) -> "Iterator[pd.DataFrame]":
-        acc: dict[tuple, AodSketch] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
+    def update(sk, sub: pd.DataFrame) -> None:
+        # NULL keys are dropped with their summary rows (update_batch
+        # skips them anyway), and the survivors keep int64 hashing
+        keys, vals = coerce_value_batch(sub[key_col], key_kind, sub[value_cols])
+        sk.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
 
-        def upd(key: tuple, sub: pd.DataFrame) -> None:
-            sk = acc.get(key)
-            if sk is None:
-                sk = acc[key] = AodSketch(lgk, m)
-            keys = sub[key_col]
-            if key_kind == "int64" and keys.dtype.kind == "f":
-                # nullable-int upcast: drop NULL keys (update_batch
-                # skips them anyway) and restore int64 so the key
-                # hashes match the clean partitions'
-                sub = sub[keys.notna()]
-                keys = sub[key_col].astype("int64")
-            sk.update_batch(
-                keys, sub[value_cols].to_numpy(dtype="float64", na_value=0.0)
-            )
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    upd(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                upd((), pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [list(key) + [sk.serialize()] for key, sk in acc.items()]
-            yield pd.DataFrame(rows, columns=group_cols + [output_col])
-
-    return df.select(*cols).mapInPandas(build, schema=schema)
+    return _fold_partitions(
+        df, group_cols, [key_col] + value_cols,
+        _blob_schema(df, group_cols, [output_col]),
+        lambda: AodSketch(lgk, len(value_cols)), update,
+        lambda sk: [sk.serialize()],
+    )
 
 
 def tuple_sketch_agg(
@@ -485,75 +448,54 @@ def theta_partial_state(
     from .hashing import MAX_HASH
 
     group_cols = list(group_cols or [])
-    fields = [df.schema[c] for c in group_cols]
     schema = StructType(
-        list(fields)
+        [df.schema[c] for c in group_cols]
         + [
             StructField(hashes_col, ArrayType(LongType()), True),
             StructField(theta_col, LongType(), True),
         ]
     )
-    chunk_rows = 1 << 19
     kind = spark_value_kind(df.schema[input_col].dataType)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, ThetaSketch] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
+    def emit(sk: ThetaSketch) -> list:
+        sk._consolidate()
+        return [
+            sk.hashes.astype("int64").tolist(),
+            None if sk.theta == MAX_HASH else int(sk.theta),
+        ]
 
-        def fold(key: tuple, series: pd.Series) -> None:
-            sk = acc.get(key)
-            if sk is None:
-                sk = acc[key] = ThetaSketch(lg_k)
-            sk.update_values(coerce_value_batch(series.dropna(), kind))
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    fold(key if isinstance(key, tuple) else (key,), sub[input_col])
-            else:
-                fold((), pdf[input_col])
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = []
-            for key, sk in acc.items():
-                sk._consolidate()
-                rows.append(
-                    list(key)
-                    + [
-                        sk.hashes.astype("int64").tolist(),
-                        None if sk.theta == MAX_HASH else int(sk.theta),
-                    ]
-                )
-            yield pd.DataFrame(rows, columns=group_cols + [hashes_col, theta_col])
-
-    return df.select(*(group_cols + [input_col])).mapInPandas(build, schema=schema)
+    return _fold_partitions(
+        df, group_cols, [input_col], schema,
+        lambda: ThetaSketch(lg_k),
+        lambda sk, sub: sk.update_values(
+            coerce_value_batch(sub[input_col].dropna(), kind)
+        ),
+        emit,
+    )
 
 
-def _theta_survivors(k: int, hashes_col: str = "__h", theta_col: str = "__th"):
-    """Column expr: sorted unique hashes below the merged threshold
-    (NULL threshold = 1.0 = no filter) — the shared KMV-union core of
-    the final estimate and the salted pre-merge."""
+def _theta_union(
+    partials: DataFrame, keys: list[str], k: int, hashes_col: str, theta_col: str
+) -> DataFrame:
+    """Per ``keys`` group: ``__th`` = min threshold and ``__s`` =
+    sorted unique hashes below it (NULL threshold = 1.0 = no filter) —
+    the shared KMV-union core of the final estimate and the salted
+    pre-merge."""
     from pyspark.sql import functions as F
 
-    return F.array_sort(
-        F.array_distinct(
-            F.when(F.col(theta_col).isNull(), F.col(hashes_col)).otherwise(
-                F.filter(F.col(hashes_col), lambda h: h < F.col(theta_col))
-            )
-        )
+    agg = partials.groupBy(*keys).agg(
+        F.min(theta_col).alias("__th"),
+        F.flatten(F.collect_list(hashes_col)).alias("__h"),
     )
+    th, h = F.col("__th"), F.col("__h")
+    return agg.withColumn(
+        "__s",
+        F.array_sort(
+            F.array_distinct(
+                F.when(th.isNull(), h).otherwise(F.filter(h, lambda x: x < th))
+            )
+        ),
+    ).drop("__h")
 
 
 def theta_premerge(
@@ -584,11 +526,7 @@ def theta_premerge(
     salted = partials.withColumn(
         "__salt", (F.rand(seed=7) * num_salts).cast("int")
     )
-    agg = salted.groupBy(*(group_cols + ["__salt"])).agg(
-        F.min(theta_col).alias("__th"),
-        F.flatten(F.collect_list(hashes_col)).alias("__h"),
-    )
-    agg = agg.withColumn("__s", _theta_survivors(k))
+    agg = _theta_union(salted, group_cols + ["__salt"], k, hashes_col, theta_col)
     over = F.size(F.col("__s")) > k
     return agg.select(
         *group_cols,
@@ -631,14 +569,7 @@ def theta_estimate_merge(
         )
     k = 1 << lg_k
     maxd = float(MAX_HASH)
-    grouped = (
-        partials.groupBy(*group_cols) if group_cols else partials.groupBy()
-    )
-    agg = grouped.agg(
-        F.min(theta_col).alias("__th"),
-        F.flatten(F.collect_list(hashes_col)).alias("__h"),
-    )
-    surv = _theta_survivors(k)
+    agg = _theta_union(partials, group_cols, k, hashes_col, theta_col)
     n = F.size(F.col("__s"))
     est = F.when(
         n > k,
@@ -648,11 +579,7 @@ def theta_estimate_merge(
             n.cast("double") / (F.col("__th").cast("double") / maxd)
         )
     )
-    return (
-        agg.withColumn("__s", surv)
-        .withColumn(output_col, est)
-        .drop("__th", "__h", "__s")
-    )
+    return agg.withColumn(output_col, est).drop("__th", "__s")
 
 
 def theta_agg_hybrid(

@@ -30,12 +30,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from . import compat
-from .aggregation import sketch_agg
-from .families import coerce_value_batch
-from .sketches import BloomFilterSketch
+from .aggregation import (
+    _blob_schema,
+    _fold_partitions,
+    sketch_agg,
+    sketch_merge,
+    sketch_partial,
+)
+from .families import coerce_value_batch, spark_value_kind
+from .sketches import ApacheBloomFilter, BloomFilterSketch
 
 
 def _declared_kind(fact: DataFrame, fact_key) -> "str | None":
@@ -47,11 +52,7 @@ def _declared_kind(fact: DataFrame, fact_key) -> "str | None":
     if isinstance(fact_key, Column):
         return None
     try:
-        return (
-            "int64"
-            if isinstance(fact.schema[fact_key].dataType, _INTEGRAL)
-            else None
-        )
+        return spark_value_kind(fact.schema[fact_key].dataType)
     except Exception:
         return None
 
@@ -82,8 +83,17 @@ def bloom_filter_blob(
     Measured (sf0.1, local[32]): the driver-merge path saves the whole
     merge stage, ~0.15 s off the build job.
     """
-    from .aggregation import sketch_partial
+    return _merged_filter_blob(
+        df, lg_m, driver_merge, "bloom", BloomFilterSketch(lg_m),
+        sketch_partial(df, key_col, "bloom", k=lg_m),
+    )
 
+
+def _merged_filter_blob(df, lg_m, driver_merge, family, empty, partial) -> bytes:
+    """Merge a filter's phase-1 ``partial`` blobs (column ``sketch``)
+    into ``empty`` and return its bytes: on the driver while
+    partitions x filter bytes stay bounded (or when ``driver_merge``),
+    else through the blob-only shuffle merge (:func:`sketch_merge`)."""
     if driver_merge is None:
         # one partial per INPUT PARTITION (not per core): gate on the
         # actual scan partition count so the collect stays bounded on
@@ -93,14 +103,35 @@ def bloom_filter_blob(
         # bounded at any cluster width, so it is the safe default
         driver_merge = parts is not None and parts * (1 << lg_m) // 8 <= (64 << 20)
     if not driver_merge:
-        return bloom_filter_of(df, key_col, lg_m=lg_m).collect()[0]["sketch"]
-    rows = sketch_partial(df, key_col, "bloom", k=lg_m).collect()
-    if not rows:
-        return BloomFilterSketch(lg_m).serialize()
-    out = BloomFilterSketch.deserialize(rows[0]["sketch"])
-    for r in rows[1:]:
-        out.merge(BloomFilterSketch.deserialize(r["sketch"]))
-    return out.serialize()
+        # the merge accumulator adopts the partials' geometry on the
+        # first union; an empty input leaves ``empty`` as the answer
+        partial = sketch_merge(partial, family, k=lg_m)
+    for r in partial.collect():
+        empty.merge(type(empty).deserialize(bytes(r["sketch"])))
+    return empty.serialize()
+
+
+def _probe(fact: DataFrame, fact_key, blob: bytes, invert: bool, load, contains):
+    """``fact`` rows whose key ``contains(load(blob), keys)`` answers
+    True (``invert``: False); NULL keys are dropped either way.  The
+    blob is deserialized once per Python worker."""
+    key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
+    kind = _declared_kind(fact, fact_key)
+    bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
+    holder: list = []
+
+    @pandas_udf("boolean")
+    def probe(keys: pd.Series) -> pd.Series:
+        if not holder:
+            holder.append(load(bc.value))
+        out = pd.Series(False, index=keys.index)
+        ok = keys.notna()
+        if ok.any():
+            hits = contains(holder[0], coerce_value_batch(keys[ok], kind))
+            out[ok] = ~hits if invert else hits
+        return out
+
+    return fact.where(probe(key))
 
 
 def bloom_prune_with(
@@ -117,24 +148,10 @@ def bloom_prune_with(
     negatives are exact) — the dedup/novelty direction; NULL keys are
     dropped either way.
     """
-    key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
-    kind = _declared_kind(fact, fact_key)
-    bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
-    holder: list[BloomFilterSketch] = []
-
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
-        if not holder:
-            holder.append(BloomFilterSketch.deserialize(bc.value))
-        sk = holder[0]
-        out = pd.Series(False, index=keys.index)
-        ok = keys.notna()
-        if ok.any():
-            hits = sk.contains_values(coerce_value_batch(keys[ok], kind))
-            out[ok] = ~hits if invert else hits
-        return out
-
-    return fact.where(probe(key))
+    return _probe(
+        fact, fact_key, blob, invert,
+        BloomFilterSketch.deserialize, BloomFilterSketch.contains_values,
+    )
 
 
 def bloomfilter_blob(
@@ -155,36 +172,16 @@ def bloomfilter_blob(
     bounded, the blob-only shuffle otherwise.  ``num_hashes`` and
     ``seed`` flow into BOTH build paths (a filter meant to union with
     an existing java-side filter must match its full geometry)."""
-    import pandas as pd  # noqa: PLC0415
+    def empty() -> ApacheBloomFilter:
+        return ApacheBloomFilter(1 << lg_m, num_hashes, seed)
 
-    from .aggregation import sketch_merge  # noqa: PLC0415
-    from .sketches import ApacheBloomFilter  # noqa: PLC0415
-
-    num_bits = 1 << lg_m
-
-    def build(batches):
-        sk = ApacheBloomFilter(num_bits, num_hashes, seed)
-        for pdf in batches:
-            sk.update_series(pdf[key_col])
-        yield pd.DataFrame({"sketch": [sk.to_wire()]})
-
-    partial = df.select(key_col).mapInPandas(build, "sketch binary")
-    if driver_merge is None:
-        parts = compat.scan_partitions(df)
-        driver_merge = parts is not None and parts * num_bits // 8 <= (64 << 20)
-    if not driver_merge:
-        # blob-only shuffle merge; the empty accumulator adopts the
-        # partials' geometry on the first union
-        return sketch_merge(partial, "bloomfilter", k=lg_m).collect()[0][
-            "sketch"
-        ]
-    rows = partial.collect()
-    if not rows:
-        return ApacheBloomFilter(num_bits, num_hashes, seed).to_wire()
-    out = ApacheBloomFilter.from_wire(bytes(rows[0]["sketch"]))
-    for r in rows[1:]:
-        out.union(ApacheBloomFilter.from_wire(bytes(r["sketch"])))
-    return out.to_wire()
+    kind = spark_value_kind(df.schema[key_col].dataType)
+    partial = _fold_partitions(
+        df, [], [key_col], _blob_schema(df, [], ["sketch"]), empty,
+        lambda sk, sub: sk.update_series(coerce_value_batch(sub[key_col], kind)),
+        lambda sk: [sk.to_wire()],
+    )
+    return _merged_filter_blob(df, lg_m, driver_merge, "bloomfilter", empty(), partial)
 
 
 def bloomfilter_prune_with(
@@ -194,26 +191,10 @@ def bloomfilter_prune_with(
     blob may come from THIS engine or from any other DataSketches
     system (java/cpp/py BloomFilter.toByteArray()) — probe semantics
     are bit-identical either way."""
-    from .sketches import ApacheBloomFilter  # noqa: PLC0415
-
-    key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
-    kind = _declared_kind(fact, fact_key)
-    bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
-    holder: list = []
-
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
-        if not holder:
-            holder.append(ApacheBloomFilter.from_wire(bc.value))
-        sk = holder[0]
-        out = pd.Series(False, index=keys.index)
-        ok = keys.notna()
-        if ok.any():
-            hits = sk.query_series(coerce_value_batch(keys[ok], kind))
-            out[ok] = ~hits if invert else hits
-        return out
-
-    return fact.where(probe(key))
+    return _probe(
+        fact, fact_key, blob, invert,
+        ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series,
+    )
 
 
 # ------------------------- JVM-native fast path (Spark built-in bloom)
@@ -364,7 +345,26 @@ def jvm_bloom_prune_with(
     return fact.where(probe(key.cast("long")))
 
 
-_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+# engine -> (filter build, probe).  The apache filter (bloomfilter_blob)
+# has the same plan shape as the python one, but its blob is loadable
+# by any DataSketches system — pick it when the filter must cross systems
+_ENGINES = {
+    "jvm": (jvm_bloom_filter_bytes, jvm_bloom_prune_with),
+    "python": (bloom_filter_blob, bloom_prune_with),
+    "apache": (bloomfilter_blob, bloomfilter_prune_with),
+}
+
+
+def _resolve_engine(df: DataFrame, key_col: str, engine: str):
+    """The (build, probe) pair of ``engine``; ``auto`` is the JVM
+    filter for an integral ``df[key_col]`` on a classic session, else
+    the python one."""
+    if engine not in ("auto", *_ENGINES):
+        raise ValueError(f"engine ({engine!r}) must be auto/jvm/python/apache")
+    if engine == "auto":
+        integral = spark_value_kind(df.schema[key_col].dataType) == "int64"
+        engine = "jvm" if integral and compat.has_jvm(df) else "python"
+    return _ENGINES[engine]
 
 
 def bloom_prune(
@@ -390,26 +390,8 @@ def bloom_prune(
     billions of keys; only the portable path yields a storable,
     mergeable sketch column.
     """
-    if engine not in ("auto", "jvm", "python", "apache"):
-        raise ValueError(f"engine ({engine!r}) must be auto/jvm/python/apache")
-    if engine == "auto":
-        dim_type = dim.schema[dim_key].dataType
-        engine = (
-            "jvm"
-            if isinstance(dim_type, _INTEGRAL) and compat.has_jvm(dim)
-            else "python"
-        )
-    if engine == "jvm":
-        blob = jvm_bloom_filter_bytes(dim, dim_key, lg_m=lg_m)
-        return jvm_bloom_prune_with(fact, fact_key, blob)
-    if engine == "apache":
-        # Apache-wire filter (bloomfilter_blob): same plan shape as the
-        # python path, but the blob is loadable by any DataSketches
-        # system — pick this when the filter itself must cross systems
-        return bloomfilter_prune_with(
-            fact, fact_key, bloomfilter_blob(dim, dim_key, lg_m=lg_m)
-        )
-    return bloom_prune_with(fact, fact_key, bloom_filter_blob(dim, dim_key, lg_m=lg_m))
+    build, probe = _resolve_engine(dim, dim_key, engine)
+    return probe(fact, fact_key, build(dim, dim_key, lg_m=lg_m))
 
 
 def bloom_pruned_anti_join(
@@ -446,15 +428,7 @@ def bloom_pruned_anti_join(
     raise ``lg_m`` when billions of keys are dropped.  Engine
     dispatch matches :func:`bloom_prune`.
     """
-    if engine not in ("auto", "jvm", "python", "apache"):
-        raise ValueError(f"engine ({engine!r}) must be auto/jvm/python/apache")
-    if engine == "auto":
-        key_type = drop.schema[key_col].dataType
-        engine = (
-            "jvm"
-            if isinstance(key_type, _INTEGRAL) and compat.has_jvm(drop)
-            else "python"
-        )
+    build, probe = _resolve_engine(drop, key_col, engine)
     drop_keys = drop.select(key_col).where(F.col(key_col).isNotNull())
     # NULL keys are routed around the probes entirely (below): besides
     # matching anti-join semantics, this keeps integral key batches
@@ -463,27 +437,15 @@ def bloom_pruned_anti_join(
     # coerce_value_batch disease; the probes also coerce defensively)
     fact_nn = fact.where(F.col(key_col).isNotNull())
     try:
-        if engine == "jvm":
-            blob = jvm_bloom_filter_bytes(drop_keys, key_col, lg_m=lg_m)
-        elif engine == "apache":
-            blob = bloomfilter_blob(drop_keys, key_col, lg_m=lg_m)
-        else:
-            blob = bloom_filter_blob(drop_keys, key_col, lg_m=lg_m)
+        blob = build(drop_keys, key_col, lg_m=lg_m)
     except Exception:
         # the prune is an optimization, the plain join is always
         # correct.  Known case: Spark's DataFrameStatFunctions
         # .bloomFilter throws on an EMPTY build side (zero dropped
         # keys — e.g. a dedup threshold that keeps everything).
         return fact.join(drop, key_col, "left_anti")
-    if engine == "jvm":
-        pos = jvm_bloom_prune_with(fact_nn, key_col, blob)
-        neg = jvm_bloom_prune_with(fact_nn, key_col, blob, invert=True)
-    elif engine == "apache":
-        pos = bloomfilter_prune_with(fact_nn, key_col, blob)
-        neg = bloomfilter_prune_with(fact_nn, key_col, blob, invert=True)
-    else:
-        pos = bloom_prune_with(fact_nn, key_col, blob)
-        neg = bloom_prune_with(fact_nn, key_col, blob, invert=True)
+    pos = probe(fact_nn, key_col, blob)
+    neg = probe(fact_nn, key_col, blob, invert=True)
     checked = pos.join(drop_keys, key_col, "left_anti")
     out = neg.unionByName(checked)
     if fact.schema[key_col].nullable:

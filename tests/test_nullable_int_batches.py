@@ -15,6 +15,7 @@ from datasketches_spark.aggregation import (
     theta_agg_hybrid,
     tuple_sketch_agg,
 )
+from datasketches_spark.runtime_filter import bloom_prune
 
 
 @pytest.fixture(autouse=True)
@@ -93,3 +94,16 @@ def test_tuple_keys_not_inflated(spark):
         finalize=lambda sk: {"e": sk.get_estimate()}, finalize_schema="e double",
     ).first()
     assert row.e == 2.0
+
+
+@pytest.mark.parametrize("engine", ["apache", "python"])
+def test_bloom_prune_keeps_keys_of_null_bearing_batches(spark, engine):
+    """Keys 3 and 4 reach the filter build only inside a null-bearing
+    (float64) batch; the int64 probe must still find every dim key."""
+    rdd = spark.sparkContext.parallelize([(1,), (2,)], 1).union(
+        spark.sparkContext.parallelize([(3,), (4,), (None,)], 1)
+    )
+    dim = spark.createDataFrame(rdd, "v bigint")
+    fact = spark.range(0, 10).withColumnRenamed("id", "v")
+    kept = bloom_prune(fact, "v", dim, "v", lg_m=12, engine=engine)
+    assert {1, 2, 3, 4} <= {r.v for r in kept.collect()}

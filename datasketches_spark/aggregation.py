@@ -12,8 +12,9 @@ map-side-combine pattern (SURVEY.md §3):
   shuffle boundary:            only (group key, serialized sketch blob)
       rows move -- bounded-size state, exactly the reference's
       ``Combine`` hand-off but across nodes;
-  phase 2 (reduce):            ``applyInPandas`` merges the few blobs
-      per group -- ``Combine`` + ``Finalize``.
+  phase 2 (reduce):            the same fold kernel, run once per
+      shuffle partition over the blob rows hash partitioned by group
+      key, merges each group's blobs -- ``Combine`` + ``Finalize``.
 
 At 100 TB this shuffles kilobytes per (group x input-partition) instead
 of the raw rows, and the map phase is embarrassingly parallel.  The
@@ -37,13 +38,17 @@ shared fold kernel :func:`_fold_partitions`:
       num_hashes, seed)`` / ``update_series`` on the coerced column /
       the wire bytes.
 
-Every blob merge (phase 2) is :func:`_merge_specs`.
+Every blob merge (phase 2) is :func:`_merge_specs`, a fourth triple
+over the same kernel: one empty slot per spec / create each spec's
+sketch from its first blob series, then ``update_sketch(...,
+merge=True)`` / the merged blobs, or the fused ``finalize`` values.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -77,6 +82,22 @@ def _blob_schema(
     )
 
 
+def _hashable(v):
+    """A hashable view of an array (ndarray/list) or struct (dict) key
+    cell: tuples all the way down."""
+    if isinstance(v, (np.ndarray, list)):
+        return tuple(_hashable(x) for x in v)
+    if isinstance(v, dict):
+        return tuple((k, _hashable(x)) for k, x in v.items())
+    return v
+
+
+def _canonical(key: tuple) -> tuple:
+    """NULL key parts (None, NaN, NaT) become ``None``: ``nan != nan``,
+    so a NaN dict key would split one NULL group across flushes."""
+    return tuple(None if x is None or x != x else x for x in key)
+
+
 def _fold_partitions(
     df: DataFrame,
     group_cols: list[str],
@@ -85,27 +106,41 @@ def _fold_partitions(
     init: Callable[[], object],
     update: Callable[[object, pd.DataFrame], None],
     emit: Callable[[object], list],
+    merge: bool = False,
 ) -> DataFrame:
-    """The one phase-1 fold: per partition, one state per group key.
+    """The one fold: per partition, one state per group key.
 
     ``df`` is narrowed to ``group_cols + cols``; every chunk of up to
-    ``_CHUNK_ROWS`` rows is split by group (NULL keys form their own
-    group), a new key's state is ``init()``, and every rows slice is
-    folded in with ``update(state, rows)``.  At partition end
-    each state yields one row ``key + emit(state)`` in ``schema``; a
-    partition that saw no rows yields no row, so empty partitions
-    never reach the merge."""
+    ``_CHUNK_ROWS`` rows is split by group (NULL keys form one group),
+    a new key's state is ``init()``, and every rows slice is folded in
+    with ``update(state, rows)``.  At partition end each state yields
+    one row ``key + emit(state)`` in ``schema``, the key as Spark sent
+    its first row; a partition that saw no rows yields no row, so
+    empty partitions never reach the merge.
+
+    ``merge`` (phase 2, :func:`_merge_specs`) folds every Arrow batch
+    as it arrives -- blob rows are KBs, so a row-count chunk would not
+    bound memory -- and names the plan node ``merge``, not ``build``.
+
+    Array and struct keys arrive as ndarray/dict cells; they are
+    grouped on a hashable view (:func:`_hashable`)."""
+    nested = {
+        c for c in group_cols
+        if isinstance(df.schema[c].dataType, (ArrayType, StructType))
+    }
+    chunk_rows = 1 if merge else _CHUNK_ROWS
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
+        acc: dict[tuple, tuple[list, object]] = {}
         buf: list[pd.DataFrame] = []
         nbuf = 0
 
         def fold(key: tuple, sub: pd.DataFrame) -> None:
-            st = acc.get(key)
-            if st is None:
-                st = acc[key] = init()
-            update(st, sub)
+            ck = _canonical(key)
+            ent = acc.get(ck)
+            if ent is None:
+                ent = acc[ck] = ([sub[c].iat[0] for c in group_cols], init())
+            update(ent[1], sub)
 
         def flush() -> None:
             nonlocal buf, nbuf
@@ -114,7 +149,11 @@ def _fold_partitions(
             pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
             buf, nbuf = [], 0
             if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
+                by = [
+                    pdf[c].map(_hashable) if c in nested else pdf[c]
+                    for c in group_cols
+                ]
+                for key, sub in pdf.groupby(by, dropna=False, sort=False):
                     fold(key if isinstance(key, tuple) else (key,), sub)
             else:
                 fold((), pdf)
@@ -123,13 +162,14 @@ def _fold_partitions(
             if len(pdf):
                 buf.append(pdf)
                 nbuf += len(pdf)
-            if nbuf >= _CHUNK_ROWS:
+            if nbuf >= chunk_rows:
                 flush()
         flush()
         if acc:
-            rows = [list(key) + list(emit(st)) for key, st in acc.items()]
+            rows = [key + list(emit(st)) for key, st in acc.values()]
             yield pd.DataFrame(rows, columns=schema.names)
 
+    build.__name__ = "merge" if merge else "build"
     return df.select(*(group_cols + cols)).mapInPandas(build, schema=schema)
 
 
@@ -140,10 +180,13 @@ def _merge_specs(
     finalize=None,
     finalize_schema: str | StructType | None = None,
 ) -> DataFrame:
-    """The one phase-2 merge: per group, merge each ``(blob_col,
-    family, k)`` spec's blobs into one sketch, then emit the merged
-    blobs, or ``finalize({blob_col: sketch})`` in ``finalize_schema``.
-    ``groupBy()`` with no columns is the global group."""
+    """The one phase-2 merge: the fold kernel over ``partial`` hash
+    partitioned by ``group_cols`` (one partition for the global
+    group).  Per group, each ``(blob_col, family, k)`` spec's blobs
+    merge into one sketch, then the merged blobs are emitted, or
+    ``finalize({blob_col: sketch})`` in ``finalize_schema``.  The plan
+    is Exchange -> ``MapInPandas merge``: one Python call per shuffle
+    partition, not one per group."""
     if finalize is None:
         fields = [StructField(s[0], BinaryType(), True) for s in specs]
     elif finalize_schema is None:
@@ -154,24 +197,33 @@ def _merge_specs(
         fields = finalize_schema.fields
     schema = StructType([partial.schema[c] for c in group_cols] + list(fields))
     out_names = [f.name for f in fields]
+    blob_cols = [s[0] for s in specs]
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged: dict[str, object] = {}
-        for col, family, k in specs:
+    def update(sks: list, sub: pd.DataFrame) -> None:
+        for i, (col, family, k) in enumerate(specs):
             # the un-dropped series: an all-NULL blob group still yields
             # an empty sketch (build_params on an empty series cannot
             # infer a quantile dtype)
-            series = pdf[col]
-            sk = merged[col] = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sk, series, merge=True)  # blob series
-        if finalize is not None:
-            vals = finalize(merged)
-        else:
-            vals = {c: sk.serialize() for c, sk in merged.items()}
-        row = [pdf[c].iloc[0] for c in group_cols] + [vals[n] for n in out_names]
-        return pd.DataFrame([row], columns=group_cols + out_names)
+            series = sub[col]
+            if sks[i] is None:
+                sks[i] = create_sketch(family, build_params(family, k, series))
+            update_sketch(family, sks[i], series, merge=True)  # blob series
 
-    return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
+    def emit(sks: list) -> list:
+        if finalize is None:
+            return [sk.serialize() for sk in sks]
+        vals = finalize(dict(zip(blob_cols, sks)))
+        return [vals[n] for n in out_names]
+
+    # a real shuffle, never coalesce: the merge's width stays
+    # spark.sql.shuffle.partitions
+    shuffled = (
+        partial.repartition(*group_cols) if group_cols else partial.repartition(1)
+    )
+    return _fold_partitions(
+        shuffled, group_cols, blob_cols, schema,
+        lambda: [None] * len(specs), update, emit, merge=True,
+    )
 
 
 def _sketch_partials(

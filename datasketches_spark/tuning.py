@@ -27,8 +27,7 @@ and the per-row check degrades ~6x AND STAYS DEGRADED for the JVM's
 lifetime.  Measured on a 60M-row ``mapInPandas`` pass (local[32]):
 1.4 s -> 8.2 s wall, 24 -> 237 CPU-seconds, with identical results,
 flipping reproducibly with this one conf.  Long-lived executors that
-mix ``applyInPandas`` and ``mapInPandas`` stages — i.e. every
-two-phase sketch aggregation in this package — hit this.
+mix ``applyInPandas`` and ``mapInPandas`` stages hit this.
 
 Setting the sentinel disables the per-row size check entirely; batch
 memory then has to be bounded the other way, by

@@ -1,4 +1,7 @@
-"""Per-head job/stage profile under the exact bench session conf."""
+"""Per-head job/stage profile under the exact bench session conf.
+
+``stages`` counts every stage id of a head's jobs, skipped stages
+included."""
 import os, sys, time, json
 sys.path.insert(0, "/root/repo"); sys.path.insert(0, "/root/repo/scripts")
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,7 +28,10 @@ for _round in range(3):
         q[name](spark, sf_dir).collect()
         dt = time.perf_counter() - t0
         jobs = tracker.getJobIdsForGroup(grp)
-        nstages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+        nstages = 0
+        for j in jobs:
+            info = tracker.getJobInfo(j)  # None once the job is evicted
+            nstages += len(info.stageIds) if info else 0
         spark.catalog.clearCache()
         prev = out.get(name)
         if prev is None or dt < prev["sec"]:

@@ -113,17 +113,22 @@ def test_finalize_fused(spark, tdf):
 
 
 def test_plan_blob_only_shuffle(spark, tdf):
-    """Phase 1 (MapInPandas) runs on scan partitions below the ONE
-    hash exchange; only (group, blob) rows shuffle."""
+    """Phase 1 (``MapInPandas build``) runs on scan partitions below
+    the ONE hash exchange; only (group, blob) rows shuffle, and the
+    merge above it is a map over each shuffle partition -- no Sort, no
+    grouped-map node."""
     df = tuple_sketch_agg(tdf, "key", ["v1", "v2"], group_cols=["g"], lg_k=12)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    m_map = re.search(r"MapInPandas", plan)
+    m_map = re.search(r"MapInPandas build\(", plan)
     m_ex = re.search(r"Exchange hashpartitioning", plan)
     assert m_map and m_ex, plan
     # parents print above children: the exchange sits ABOVE phase 1
     assert m_ex.start() < m_map.start(), plan
     # nothing shuffles below phase 1
     assert "Exchange" not in plan[m_map.start():], plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Sort" not in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_merge_blobs_via_union_agg(spark, tdf):

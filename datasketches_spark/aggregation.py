@@ -22,26 +22,32 @@ alternative single-phase pandas grouped-agg UDFs (functions/aggregates)
 are provided for SQL ergonomics but shuffle raw rows; use this module
 for large inputs.
 
-Every phase-1 builder is one (init, update, emit) triple over the
-shared fold kernel :func:`_fold_partitions`:
+Every phase-1 builder is one (init, prepare, update, emit) quadruple
+over the shared fold kernel :func:`_fold_partitions`.  ``prepare``
+runs once per chunk and returns each input's ``(values, keep)``
+(coerced, NULL-free and, for theta/HLL/CPC, already hashed --
+:func:`~datasketches_spark.families.prepare`); ``update`` folds one
+group's slices of those values:
 
   ``sketch_partial`` / ``sketch_agg_multi``: one empty slot per spec /
-      create each spec's sketch from its first coerced batch, then
-      ``update_sketch`` (weighted: ``update_series(v, weights=w)``) /
-      one blob per spec.
-  ``tuple_sketch_partial``: ``AodSketch(lg_k, n_values)`` /
-      ``update_batch`` over keys and summary rows coerced together /
-      the blob.
-  ``theta_partial_state``: ``ThetaSketch(lg_k)`` / ``update_values``
-      on the coerced column / ``(hashes, theta)``.
+      ``families.prepare`` per spec (a BINARY input column is blobs;
+      weighted: values and weights together) / create each spec's
+      sketch on first sight, then ``update_prepared`` / one blob per
+      spec.
+  ``tuple_sketch_partial``: ``AodSketch(lg_k, n_values)`` / key hashes
+      and summary rows prepared together / ``update_hashes`` / the
+      blob.
+  ``theta_partial_state``: ``ThetaSketch(lg_k)`` / theta hashes of the
+      column / ``update_hashes`` / ``(hashes, theta)``.
   ``runtime_filter.bloomfilter_blob``: ``ApacheBloomFilter(num_bits,
-      num_hashes, seed)`` / ``update_series`` on the coerced column /
+      num_hashes, seed)`` / the coerced column / ``update_series`` /
       the wire bytes.
 
-Every blob merge (phase 2) is :func:`_merge_specs`, a fourth triple
-over the same kernel: one empty slot per spec / create each spec's
-sketch from its first blob series, then ``update_sketch(...,
-merge=True)`` / the merged blobs, or the fused ``finalize`` values.
+Every blob merge (phase 2) is :func:`_merge_specs`, one more
+quadruple over the same kernel: one empty slot per spec / the
+non-NULL blobs per spec / create each spec's sketch on first sight,
+then merge the group's blobs / the merged blobs, or the fused
+``finalize`` values.
 """
 
 from __future__ import annotations
@@ -61,15 +67,16 @@ from pyspark.sql.types import (
 
 from .families import (
     build_params,
-    coerce_value_batch,
     create_sketch,
     spark_value_kind,
-    update_sketch,
+    update_prepared,
 )
+from .families import prepare as families_prepare
 
 # accumulate Arrow batches into larger chunks before grouping so the
-# pandas groupby + sketch-update cost is amortized (an Arrow batch is
-# ~10k rows; a chunk is up to 512k) -- bounded memory per task
+# per-chunk grouping and prepare cost is amortized (an Arrow batch is
+# spark.sql.execution.arrow.maxRecordsPerBatch rows, 10k by default;
+# a chunk is up to 512k) -- bounded memory per task
 _CHUNK_ROWS = 1 << 19
 
 
@@ -84,12 +91,17 @@ def _blob_schema(
 
 def _hashable(v):
     """A hashable view of an array (ndarray/list) or struct (dict) key
-    cell: tuples all the way down."""
+    cell: tuples all the way down, NULL and NaN elements both as
+    ``None`` -- ``nan != nan``, so a NaN element would make every row
+    its own group.  Spark's groupBy keeps a NaN element apart from a
+    NULL one, but the pandas Arrow path cannot: a NULL element of an
+    array<double> arrives as NaN, and a NaN element leaves as NULL
+    (``pa.Array.from_pandas``), so the two are one key here."""
     if isinstance(v, (np.ndarray, list)):
         return tuple(_hashable(x) for x in v)
     if isinstance(v, dict):
         return tuple((k, _hashable(x)) for k, x in v.items())
-    return v
+    return None if v is None or v != v else v
 
 
 def _canonical(key: tuple) -> tuple:
@@ -98,25 +110,40 @@ def _canonical(key: tuple) -> tuple:
     return tuple(None if x is None or x != x else x for x in key)
 
 
+def _slice(values, lo: int, hi: int):
+    if isinstance(values, tuple):
+        return tuple(_slice(v, lo, hi) for v in values)
+    if isinstance(values, pd.Series):
+        return values.iloc[lo:hi]
+    return values[lo:hi]
+
+
 def _fold_partitions(
     df: DataFrame,
     group_cols: list[str],
     cols: list[str],
     schema: StructType,
     init: Callable[[], object],
-    update: Callable[[object, pd.DataFrame], None],
+    prepare: Callable[[pd.DataFrame], list],
+    update: Callable[[object, list], None],
     emit: Callable[[object], list],
     merge: bool = False,
 ) -> DataFrame:
     """The one fold: per partition, one state per group key.
 
-    ``df`` is narrowed to ``group_cols + cols``; every chunk of up to
-    ``_CHUNK_ROWS`` rows is split by group (NULL keys form one group),
-    a new key's state is ``init()``, and every rows slice is folded in
-    with ``update(state, rows)``.  At partition end each state yields
-    one row ``key + emit(state)`` in ``schema``, the key as Spark sent
-    its first row; a partition that saw no rows yields no row, so
-    empty partitions never reach the merge.
+    ``df`` is narrowed to ``group_cols + cols`` and read in chunks of
+    up to ``_CHUNK_ROWS`` rows.  Per chunk the group codes are computed
+    once (NULL keys form one group), one stable argsort reorders the
+    chunk so each group's rows are contiguous and in input order, and
+    ``prepare(chunk)`` is called once: it returns one ``(values, keep)`` pair per builder input,
+    ``values`` aligned to the rows ``keep`` marks (``None``: every row;
+    see :func:`~datasketches_spark.families.prepare`).  A new key's
+    state is ``init()``; every group of the chunk is then folded in
+    with ``update(state, slices)``, one slice of each input's values
+    (possibly empty) per call.  At partition end each state yields one
+    row ``key + emit(state)`` in ``schema``, the key as Spark sent its
+    first row; a partition that saw no rows yields no row, so empty
+    partitions never reach the merge.
 
     ``merge`` (phase 2, :func:`_merge_specs`) folds every Arrow batch
     as it arrives -- blob rows are KBs, so a row-count chunk would not
@@ -135,13 +162,6 @@ def _fold_partitions(
         buf: list[pd.DataFrame] = []
         nbuf = 0
 
-        def fold(key: tuple, sub: pd.DataFrame) -> None:
-            ck = _canonical(key)
-            ent = acc.get(ck)
-            if ent is None:
-                ent = acc[ck] = ([sub[c].iat[0] for c in group_cols], init())
-            update(ent[1], sub)
-
         def flush() -> None:
             nonlocal buf, nbuf
             if not buf:
@@ -153,10 +173,41 @@ def _fold_partitions(
                     pdf[c].map(_hashable) if c in nested else pdf[c]
                     for c in group_cols
                 ]
-                for key, sub in pdf.groupby(by, dropna=False, sort=False):
-                    fold(key if isinstance(key, tuple) else (key,), sub)
+                # codes number the groups in order of first appearance,
+                # so they only decrease where groups interleave
+                codes = pdf.groupby(by, dropna=False, sort=False).ngroup().to_numpy()
+                order = None
+                if (np.diff(codes) < 0).any():
+                    # line each group's rows up, in input order
+                    order = np.argsort(codes, kind="stable")
+                    codes = codes[order]
+                    pdf = pdf.take(order)
+                starts = np.flatnonzero(np.diff(codes, prepend=-1))
+                # ``by`` keeps the chunk's input order
+                first = starts if order is None else order[starts]
+                hkeys = list(zip(*(b.iloc[first].tolist() for b in by)))
+                keys = (
+                    list(zip(*(pdf[c].iloc[starts].tolist() for c in group_cols)))
+                    if nested else hkeys
+                )
             else:
-                fold((), pdf)
+                starts = np.zeros(1, dtype=np.int64)
+                keys = hkeys = [()]
+            bounds = np.append(starts, len(pdf))
+            prepared = []
+            for values, keep in prepare(pdf):
+                b = bounds
+                if keep is not None:  # each group's [lo, hi) in kept rows
+                    b = np.concatenate(([0], np.cumsum(keep)))[bounds]
+                prepared.append((values, b.tolist()))
+            for g, key in enumerate(keys):
+                ck = _canonical(hkeys[g])
+                ent = acc.get(ck)
+                if ent is None:
+                    ent = acc[ck] = (list(key), init())
+                update(ent[1], [
+                    _slice(values, b[g], b[g + 1]) for values, b in prepared
+                ])
 
         for pdf in batches:
             if len(pdf):
@@ -199,15 +250,19 @@ def _merge_specs(
     out_names = [f.name for f in fields]
     blob_cols = [s[0] for s in specs]
 
-    def update(sks: list, sub: pd.DataFrame) -> None:
-        for i, (col, family, k) in enumerate(specs):
-            # the un-dropped series: an all-NULL blob group still yields
-            # an empty sketch (build_params on an empty series cannot
-            # infer a quantile dtype)
-            series = sub[col]
+    def prepare(pdf: pd.DataFrame) -> list:
+        return [
+            families_prepare(family, pdf[col], blobs=True)
+            for col, family, _k in specs
+        ]
+
+    def update(sks: list, blobs: list) -> None:
+        for i, (_col, family, k) in enumerate(specs):
+            # created on first sight, so a group whose blobs are all
+            # NULL still yields an empty sketch
             if sks[i] is None:
-                sks[i] = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sks[i], series, merge=True)  # blob series
+                sks[i] = create_sketch(family, build_params(family, k, None))
+            update_prepared(family, sks[i], blobs[i], blobs=True)
 
     def emit(sks: list) -> list:
         if finalize is None:
@@ -222,7 +277,7 @@ def _merge_specs(
     )
     return _fold_partitions(
         shuffled, group_cols, blob_cols, schema,
-        lambda: [None] * len(specs), update, emit, merge=True,
+        lambda: [None] * len(specs), prepare, update, emit, merge=True,
     )
 
 
@@ -239,25 +294,29 @@ def _sketch_partials(
         in_cols.append(weight_col)
     # captured Spark-side types: a null-bearing Arrow batch of an
     # integral column arrives float64 and must be coerced back (5 and
-    # 5.0 hash differently — families.coerce_value_batch)
+    # 5.0 hash differently — families.coerce_value_batch); a BINARY
+    # column carries sketch blobs, which merge
     kinds = [spark_value_kind(df.schema[s[0]].dataType) for s in specs]
+    blobs = [isinstance(df.schema[s[0]].dataType, BinaryType) for s in specs]
 
-    def update(sks: list, sub: pd.DataFrame) -> None:
-        for i, (col, family, k, _out) in enumerate(specs):
-            if weight_col is None:
-                series = coerce_value_batch(sub[col], kinds[i])
-            else:
-                series, w = coerce_value_batch(sub[col], kinds[i], sub[weight_col])
+    def prepare(pdf: pd.DataFrame) -> list:
+        w = None if weight_col is None else pdf[weight_col]
+        return [
+            families_prepare(family, pdf[col], kinds[i], blobs[i], w)
+            for i, (col, family, _k, _out) in enumerate(specs)
+        ]
+
+    def update(sks: list, values: list) -> None:
+        for i, (_col, family, k, _out) in enumerate(specs):
             if sks[i] is None:
-                sks[i] = create_sketch(family, build_params(family, k, series))
-            if weight_col is None:
-                update_sketch(family, sks[i], series)
-            else:
-                sks[i].update_series(series, weights=w)
+                sks[i] = create_sketch(
+                    family, build_params(family, k, None if blobs[i] else values[i])
+                )
+            update_prepared(family, sks[i], values[i], blobs[i])
 
     return _fold_partitions(
         df, group_cols, in_cols, _blob_schema(df, group_cols, [s[3] for s in specs]),
-        lambda: [None] * len(specs), update,
+        lambda: [None] * len(specs), prepare, update,
         lambda sks: [sk.serialize() for sk in sks],
     )
 
@@ -400,16 +459,16 @@ def tuple_sketch_partial(
     lgk = lg_k if lg_k is not None else DEFAULT_LG_K
     key_kind = spark_value_kind(df.schema[key_col].dataType)
 
-    def update(sk, sub: pd.DataFrame) -> None:
-        # NULL keys are dropped with their summary rows (update_batch
-        # skips them anyway), and the survivors keep int64 hashing
-        keys, vals = coerce_value_batch(sub[key_col], key_kind, sub[value_cols])
-        sk.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
+    def prepare(pdf: pd.DataFrame) -> list:
+        # NULL keys are dropped with their summary rows, and the
+        # survivors keep int64 hashing
+        return [families_prepare("aod", pdf[key_col], key_kind, weights=pdf[value_cols])]
 
     return _fold_partitions(
         df, group_cols, [key_col] + value_cols,
         _blob_schema(df, group_cols, [output_col]),
-        lambda: AodSketch(lgk, len(value_cols)), update,
+        lambda: AodSketch(lgk, len(value_cols)), prepare,
+        lambda sk, values: update_prepared("aod", sk, values[0]),
         lambda sk: [sk.serialize()],
     )
 
@@ -519,9 +578,8 @@ def theta_partial_state(
     return _fold_partitions(
         df, group_cols, [input_col], schema,
         lambda: ThetaSketch(lg_k),
-        lambda sk, sub: sk.update_values(
-            coerce_value_batch(sub[input_col].dropna(), kind)
-        ),
+        lambda pdf: [families_prepare("theta", pdf[input_col], kind)],
+        lambda sk, hashes: sk.update_hashes(hashes[0]),
         emit,
     )
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from .murmur import murmur3_rows, theta_hash_rows
 from .sketches.base import is_framed
 from .sketches import (
     AodSketch,
@@ -80,19 +81,41 @@ def coerce_value_batch(series: pd.Series, kind: "str | None", weights=None):
     overlapping value (int-hashed in one partial, double-hashed in the
     other).  Drops the NULL rows (aligned with ``weights`` when
     given) and restores int64."""
+    series, keep = _coerce_rows(series, kind)
+    if weights is not None:
+        return series, weights if keep is None else weights[keep]
+    return series
+
+
+def _coerce_rows(series: pd.Series, kind: "str | None"):
+    """:func:`coerce_value_batch` as ``(series, keep)``: ``keep`` masks
+    the surviving input rows (``None``: all of them)."""
     if kind == "int64" and series.dtype.kind == "f":
-        keep = series.notna()
-        series = series[keep].astype(np.int64)
-        if weights is not None:
-            weights = weights[keep]
-    return (series, weights) if weights is not None else series
+        keep = series.notna().to_numpy()
+        return series[keep].astype(np.int64), keep
+    return series, None
 
 
-def infer_value_dtype(series: pd.Series) -> str:
-    kind = series.dtype.kind
-    if kind in "iu" or series.dtype == object and isinstance(series.iloc[0], (int, np.integer)):
+def _narrow(keep, sub):
+    """Compose a row mask with a mask over its surviving rows."""
+    if sub is None or sub.all():
+        return keep
+    if keep is None:
+        return sub
+    keep = keep.copy()
+    keep[keep] = sub
+    return keep
+
+
+def infer_value_dtype(series) -> str:
+    """Quantile sketch dtype of a value Series or numpy array."""
+    dtype = series.dtype
+    if dtype.kind in "iu" or dtype == object and len(series) and isinstance(
+        series.iloc[0] if isinstance(series, pd.Series) else series[0],
+        (int, np.integer),
+    ):
         return "int64"
-    if series.dtype == np.float32:
+    if dtype == np.float32:
         return "float32"
     return "float64"
 
@@ -149,67 +172,69 @@ def create_sketch(family: str, params: dict):
     raise ValueError(f"unknown sketch family: {family}")
 
 
-def is_blob_series(series: pd.Series) -> bool:
+def is_blob_series(series) -> bool:
     if series.dtype != object:
         return False
     for v in series:
-        if v is None:
+        if v is None or (isinstance(v, float) and v != v):
             continue
         return isinstance(v, (bytes, bytearray))
     return False
 
 
-def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> None:
-    """Feed one Arrow batch into a sketch: values build, blobs merge.
+def prepare(
+    family: str,
+    series: pd.Series,
+    kind: "str | None" = None,
+    blobs: bool = False,
+    weights=None,
+):
+    """One batch's update input for ``family``, computed once per batch
+    and sliced per group by the fold kernel: ``(values, keep)``.
 
-    ``merge=True`` declares the series is sketch blobs even when every
-    value is NULL (an all-NULL series carries no type evidence).  Only
-    the stats family needs the hint: every other family drops NULLs
-    before doing anything, but stats counts NULLs on its *build* path,
-    so an all-NULL blob series would otherwise be miscounted as rows.
-    """
-    s = series.dropna()
+    ``keep`` masks the input rows that reach the sketch (``None``: all
+    of them) and ``values`` is aligned to those rows:
+
+    - ``blobs``: the non-NULL blob cells (an object array);
+    - otherwise the values coerced through :func:`coerce_value_batch`
+      (``kind``), NULLs dropped -- except for ``stats``, which must see
+      them -- and for theta / HLL / CPC already hashed, without the
+      rows the hash skips (empty strings or bytes, zero theta hashes):
+      theta hashes, HLL ``(h1, coupon values)``, CPC ``(h1, h2)``;
+    - ``weights`` (reservoir / ebpps row weights, or the aod summary
+      columns) ride along: ``(values, weights)`` for sampling (the
+      sketch drops NULL and non-positive weights itself), ``(hashes,
+      summary matrix)`` for aod.
+
+    :func:`update_prepared` folds a slice of ``values`` into a sketch."""
+    if blobs:
+        keep = series.notna().to_numpy()
+        return series.to_numpy()[keep], keep
+    s, keep = _coerce_rows(series, kind)
+    if family in ("reservoir", "ebpps") and weights is not None:
+        return (s, weights if keep is None else weights[keep]), keep
     if family == "stats":
-        # stats is the one family that must SEE the NULLs (its null
-        # count is n - nonnull); blobs still merge like everywhere else
-        if is_blob_series(s) or merge:
-            for blob in s:
-                sk.merge(StatsSketch.deserialize(bytes(blob)))
-        else:
-            sk.update_series(series)
-        return
-    if s.empty:
-        return
-    cls = FAMILY_CLASSES[family]
-    if is_blob_series(s):
-        if family in ("hll", "cpc"):
-            # Reference parity: HLL/CPC accept raw BLOB *values* in
-            # addition to sketch blobs (generator.py:30-44 lists BLOB
-            # among the allowed input types). Spark has no catalog type
-            # alias to distinguish sketch_hll from plain BINARY, so
-            # dispatch per value on the DSKS frame magic OR the Apache
-            # wire preamble (serVer/family/lgK — the reference's typed
-            # blobs ARE that format): sketch blobs merge, anything
-            # else is hashed as a raw byte value.
-            framed = s.map(
-                lambda b: b is not None
-                and (is_framed(b) or cls.sniff_wire(bytes(b)))
-            )
-            for blob in s[framed]:
-                sk.merge(cls.deserialize(bytes(blob)))
-            raw = s[~framed].dropna()
-            if not raw.empty:
-                sk.update_values(raw.map(bytes))
-            return
-        for blob in s:
-            if blob is not None:
-                sk.merge(cls.deserialize(bytes(blob)))
-        return
-    if family in ("theta", "hll", "cpc", "bloom"):
-        sk.update_values(s)
-    elif family == "bloomfilter":
-        sk.update_series(s)
-    elif family in QUANTILE_FAMILIES or family == "tdigest":
+        # the one family that must SEE the NULLs: its null count is
+        # n - nonnull
+        return s, keep
+    nn = s.notna().to_numpy()
+    if not nn.all():
+        s = s[nn]
+        keep = _narrow(keep, nn)
+    if family in ("theta", "aod"):
+        h, sub = theta_hash_rows(s)
+        keep = _narrow(keep, sub)
+        # theta; an aod batch without summary rows is rejected on update
+        if weights is None:
+            return h, keep
+        vals = weights.to_numpy(dtype="float64", na_value=0.0)
+        return (h, vals if keep is None else vals[keep]), keep
+    if family in ("hll", "cpc"):
+        h1, h2, sub = murmur3_rows(s)
+        if family == "hll":
+            h2 = HllSketch.coupon_values(h2)
+        return (h1, h2), _narrow(keep, sub)
+    if family in QUANTILE_FAMILIES or family == "tdigest":
         if s.dtype == object and isinstance(
             next((v for v in s if v is not None), None), str
         ):
@@ -222,17 +247,83 @@ def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> No
                 f"{family} sketches accept numeric values only. "
                 "You might need to add explicit type casts."
             )
-        sk.update(s.to_numpy())
-    elif family in ("frequent_items", "reservoir", "cms", "ebpps", "fdt", "kll_items"):
-        sk.update_series(s)
+        return s.to_numpy(), keep
+    return s, keep
+
+
+def update_prepared(family: str, sk, values, blobs: bool = False) -> None:
+    """Fold a (slice of a) :func:`prepare` result into ``sk``."""
+    if family in ("reservoir", "ebpps") and isinstance(values, tuple):
+        sk.update_series(values[0], weights=values[1])
+        return
+    if family == "stats" and not blobs:
+        sk.update_series(values)
+        return
+    if len(values[0] if isinstance(values, tuple) else values) == 0:
+        return
+    if blobs:
+        cls = FAMILY_CLASSES[family]
+        if family in ("hll", "cpc"):
+            # Reference parity: HLL/CPC accept raw BLOB *values* in
+            # addition to sketch blobs (generator.py:30-44 lists BLOB
+            # among the allowed input types). Spark has no catalog type
+            # alias to distinguish sketch_hll from plain BINARY, so
+            # dispatch per value on the DSKS frame magic OR the Apache
+            # wire preamble (serVer/family/lgK — the reference's typed
+            # blobs ARE that format): sketch blobs merge, anything
+            # else is hashed as a raw byte value.
+            raw = []
+            for blob in values:
+                b = bytes(blob)
+                if is_framed(b) or cls.sniff_wire(b):
+                    sk.merge(cls.deserialize(b))
+                else:
+                    raw.append(b)
+            if raw:
+                sk.update_values(pd.Series(raw, dtype=object))
+            return
+        for blob in values:
+            sk.merge(cls.deserialize(bytes(blob)))
+        return
+    if family == "theta":
+        sk.update_hashes(values)
+    elif family == "hll":
+        sk.update_coupons(*values)
+    elif family == "cpc":
+        sk.update_hashes(*values)
+    elif family == "bloom":
+        sk.update_values(values)
+    elif family in QUANTILE_FAMILIES or family == "tdigest":
+        sk.update(values)
+    elif family in (
+        "bloomfilter", "frequent_items", "reservoir", "cms", "ebpps", "fdt",
+        "kll_items",
+    ):
+        sk.update_series(values)
     elif family == "aod":
-        raise ValueError(
-            "datasketch_aod builds from (key, values) pairs — use "
-            "aggregation.tuple_sketch_agg or the datasketch_aod SQL "
-            "aggregate; this path only merges tuple sketch blobs"
-        )
+        if not isinstance(values, tuple):
+            raise ValueError(
+                "datasketch_aod builds from (key, values) pairs — use "
+                "aggregation.tuple_sketch_agg or the datasketch_aod SQL "
+                "aggregate; this path only merges tuple sketch blobs"
+            )
+        sk.update_hashes(*values)
     else:  # pragma: no cover
         raise ValueError(f"unknown sketch family: {family}")
+
+
+def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> None:
+    """Feed one Arrow batch into a sketch: values build, blobs merge --
+    :func:`prepare` and :func:`update_prepared` composed.
+
+    ``merge=True`` declares the series is sketch blobs even when every
+    value is NULL (an all-NULL series carries no type evidence).  Only
+    the stats family needs the hint: every other family drops NULLs
+    before doing anything, but stats counts NULLs on its *build* path,
+    so an all-NULL blob series would otherwise be miscounted as rows.
+    """
+    blobs = merge or is_blob_series(series)
+    update_prepared(family, sk, prepare(family, series, blobs=blobs)[0], blobs)
 
 
 def build_params(family: str, k: int | None, series: pd.Series | None) -> dict:

@@ -245,8 +245,24 @@ def canonical_u64(values: np.ndarray) -> np.ndarray:
 
 def theta_hash_values(values, seed: int = DEFAULT_UPDATE_SEED) -> np.ndarray:
     """Apache-compatible theta hashes: murmur3.h1 >> 1, zeros dropped."""
-    h1, _ = murmur3_values(values, seed)
-    return _screen(h1)
+    return theta_hash_rows(values, seed)[0]
+
+
+def theta_hash_rows(
+    values, seed: int = DEFAULT_UPDATE_SEED
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """:func:`theta_hash_values` plus the mask of the input rows that
+    kept a hash (``None``: every row did)."""
+    h1, _, keep = murmur3_rows(values, seed)
+    h = h1 >> np.uint64(1)
+    nz = h != 0
+    if nz.all():
+        return h, keep
+    if keep is None:
+        return h[nz], nz
+    keep = keep.copy()
+    keep[keep] = nz
+    return h[nz], keep
 
 
 def murmur3_values(
@@ -260,13 +276,22 @@ def murmur3_values(
     update(const std::string&) returns without updating on empty).
     Theta uses h1 only; HLL/CPC coupons need (h1, h2).
     """
+    h1, h2, _ = murmur3_rows(values, seed)
+    return h1, h2
+
+
+def murmur3_rows(
+    values, seed: int = DEFAULT_UPDATE_SEED
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """:func:`murmur3_values` plus the mask of the input rows that were
+    hashed (``None``: every row was; empty strings/bytes are not)."""
     if isinstance(values, pd.Series) and not (
         values.dtype == object or pd.api.types.is_string_dtype(values.dtype)
     ):
-        return murmur3_u64(canonical_u64(values.to_numpy()), seed)
+        return (*murmur3_u64(canonical_u64(values.to_numpy()), seed), None)
     arr = np.asarray(values) if not isinstance(values, pd.Series) else None
     if arr is not None and arr.dtype != object:
-        return murmur3_u64(canonical_u64(arr), seed)
+        return (*murmur3_u64(canonical_u64(arr), seed), None)
     # string/bytes path via Arrow buffers (flat bytes + offsets)
     ser = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
     first = next((v for v in ser if v is not None), None)
@@ -282,18 +307,19 @@ def murmur3_values(
             raise TypeError(
                 f"unsupported value type for hashing: {type(first).__name__}"
             ) from exc
-        return murmur3_u64(canonical_u64(num.to_numpy()), seed)
+        return (*murmur3_u64(canonical_u64(num.to_numpy()), seed), None)
     typ = pa.large_binary() if isinstance(first, (bytes, bytearray)) else pa.large_utf8()
     pa_arr = pa.array(ser, type=typ, from_pandas=True)
     data, off = arrow_byte_buffers(pa_arr)
     lens = np.diff(off)
     if (lens == 0).any():  # Apache skips empty strings/bytes
-        keep = np.flatnonzero(lens > 0)
-        if keep.size == 0:
+        keep = lens > 0
+        if not keep.any():
             empty = np.empty(0, dtype=np.uint64)
-            return empty, empty
-        data, off = arrow_byte_buffers(pa_arr.take(pa.array(keep)))
-    return murmur3_bytes(data, off, seed)
+            return empty, empty, keep
+        data, off = arrow_byte_buffers(pa_arr.take(pa.array(np.flatnonzero(keep))))
+        return (*murmur3_bytes(data, off, seed), keep)
+    return (*murmur3_bytes(data, off, seed), None)
 
 
 def arrow_byte_buffers(pa_arr) -> tuple[np.ndarray, np.ndarray]:
@@ -311,11 +337,6 @@ def arrow_byte_buffers(pa_arr) -> tuple[np.ndarray, np.ndarray]:
         else np.empty(0, dtype=np.uint8)
     )
     return d, o
-
-
-def _screen(h1: np.ndarray) -> np.ndarray:
-    h = h1 >> np.uint64(1)
-    return h[h != 0]
 
 
 def smhasher_verification() -> int:

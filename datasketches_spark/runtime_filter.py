@@ -39,7 +39,7 @@ from .aggregation import (
     sketch_merge,
     sketch_partial,
 )
-from .families import coerce_value_batch, spark_value_kind
+from .families import coerce_value_batch, prepare, spark_value_kind, update_prepared
 from .sketches import ApacheBloomFilter, BloomFilterSketch
 
 
@@ -178,7 +178,8 @@ def bloomfilter_blob(
     kind = spark_value_kind(df.schema[key_col].dataType)
     partial = _fold_partitions(
         df, [], [key_col], _blob_schema(df, [], ["sketch"]), empty,
-        lambda sk, sub: sk.update_series(coerce_value_batch(sub[key_col], kind)),
+        lambda pdf: [prepare("bloomfilter", pdf[key_col], kind)],
+        lambda sk, values: update_prepared("bloomfilter", sk, values[0]),
         lambda sk: [sk.to_wire()],
     )
     return _merged_filter_blob(df, lg_m, driver_merge, "bloomfilter", empty(), partial)

@@ -137,7 +137,10 @@ class CpcSketch:
         return max(16, self._m // 2)
 
     def update_values(self, values) -> None:
-        h1, h2 = murmur3_values(values)
+        self.update_hashes(*murmur3_values(values))
+
+    def update_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
+        """Fold both murmur lanes of already-hashed values."""
         if h1.size == 0:
             return
         row = h1 & np.uint64(self._m - 1)

@@ -170,13 +170,15 @@ class HllSketch:
         if self.sparse.size > self._sparse_limit:
             self._promote()
 
+    @staticmethod
+    def coupon_values(h2: np.ndarray) -> np.ndarray:
+        """Apache coupon value of each h2 lane: min(NLZ(h2), 62) + 1
+        (6-bit range 1..63)."""
+        return (np.minimum(64 - _bit_length_u64(h2), 62) + 1).astype(np.uint8)
+
     def update_values(self, values) -> None:
         h1, h2 = murmur3_values(values)
-        if h1.size == 0:
-            return
-        # Apache coupon value: min(NLZ(h2), 62) + 1  (6-bit range 1..63)
-        vals = (np.minimum(64 - _bit_length_u64(h2), 62) + 1).astype(np.uint8)
-        self.update_coupons(h1, vals)
+        self.update_coupons(h1, self.coupon_values(h2))
 
     def _promote(self) -> None:
         self.registers = np.zeros(self._m, dtype=np.uint8)

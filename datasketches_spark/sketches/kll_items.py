@@ -74,6 +74,8 @@ class KllItemsSketch(KllSketch):
 
     # -- building -------------------------------------------------------
     def update(self, values) -> None:
+        """NULLs (whatever ``pandas.isna`` calls missing: None, NaN,
+        pd.NA, NaT) are dropped; any other non-``str`` value raises."""
         arr = np.asarray(values, dtype=object).ravel()
         if not arr.size:
             return

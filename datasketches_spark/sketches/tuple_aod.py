@@ -65,7 +65,7 @@ import numpy as np
 import pandas as pd
 
 from ..hashing import MAX_HASH
-from ..murmur import DEFAULT_SEED_HASH, murmur3_values
+from ..murmur import DEFAULT_SEED_HASH, theta_hash_rows
 from .base import FAMILY_AOD, SketchDeserializeError, frame, is_framed, unframe
 
 DEFAULT_LG_K = 12
@@ -80,28 +80,6 @@ _WIRE_TYPE_COMPACT = 3
 _WIRE_FLAG_BIG_ENDIAN = 1 << 0
 _WIRE_FLAG_EMPTY = 1 << 2
 _WIRE_FLAG_HAS_ENTRIES = 1 << 3
-
-
-def _row_hashes(keys: pd.Series | np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Apache theta hashes for a key series, row-aligned.
-
-    Returns ``(hashes, kept_row_positions)``: NULL keys, empty
-    strings/bytes (Apache update() no-ops) and the measure-zero
-    ``h >> 1 == 0`` case are dropped, and ``kept`` maps each hash back
-    to its input row so the caller can slice the summary matrix.
-    """
-    ser = keys if isinstance(keys, pd.Series) else pd.Series(keys)
-    notnull = ser.notna().to_numpy()
-    if ser.dtype == object or pd.api.types.is_string_dtype(ser.dtype):
-        lens = ser.map(lambda v: len(v) if isinstance(v, (str, bytes, bytearray)) else 1)
-        notnull &= lens.fillna(0).to_numpy() > 0
-    kept = np.flatnonzero(notnull)
-    if kept.size == 0:
-        return np.empty(0, dtype=np.uint64), kept
-    h1, _ = murmur3_values(ser.iloc[kept], seed=9001)
-    h = h1 >> np.uint64(1)
-    nz = h != 0
-    return h[nz], kept[np.flatnonzero(nz)] if not nz.all() else kept
 
 
 def _sum_duplicates(
@@ -191,13 +169,19 @@ class AodSketch:
         0.0 (SQL SUM semantics) before reaching here, and the Arrow
         float transfer conflates NULL with NaN — avoid NaN summaries
         in DataFrame inputs."""
-        h, kept = _row_hashes(keys)
+        ser = keys if isinstance(keys, pd.Series) else pd.Series(keys)
+        keep = ser.notna().to_numpy(copy=True)
+        # theta_hash_rows also skips empty strings/bytes (Apache update()
+        # no-ops) and the measure-zero ``h >> 1 == 0`` case
+        h, sub = theta_hash_rows(ser if keep.all() else ser[keep])
         if h.size == 0:
             return
+        if sub is not None:
+            keep[keep] = sub
         v = np.asarray(vals, dtype=np.float64)
         if v.ndim == 1:
             v = v.reshape(-1, 1)
-        self.update_hashes(h, v[kept])
+        self.update_hashes(h, v[keep])
 
     def _consolidate(self) -> None:
         if self._pk:

@@ -14,19 +14,34 @@ global merge of an empty input is zero rows."""
 
 from contextlib import contextmanager
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from datasketches_spark.aggregation import (
+    _sketch_partials,
     sketch_agg,
     sketch_agg_multi,
     sketch_merge,
+    sketch_partial,
     theta_agg_hybrid,
+    theta_partial_state,
     tuple_sketch_agg,
+    tuple_sketch_partial,
 )
+from datasketches_spark.families import (
+    FAMILY_CLASSES,
+    build_params,
+    coerce_value_batch,
+    create_sketch,
+    update_sketch,
+)
+from datasketches_spark.hashing import MAX_HASH
 from datasketches_spark.runtime_filter import bloomfilter_blob
 from datasketches_spark.sketches import (
     AodSketch,
+    ApacheBloomFilter,
     HllSketch,
     KllSketch,
     ThetaSketch,
@@ -223,3 +238,207 @@ def test_merge_plan_is_a_map_over_the_shuffle(frames, name):
     assert "MapInPandas merge(" in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "Sort" not in plan, plan
+
+
+# ------------------------------------------------ golden byte identity
+#
+# The kernel groups each chunk once, prepares (coerces, drops NULLs,
+# hashes) each input column once, and folds per-group slices.  Every
+# group's output must equal a sketch built by create_sketch +
+# update_sketch over that group's rows in input order, byte for byte.
+
+GOLDEN_SCHEMA = "g int, v bigint, x double, s string, w double, a array<string>"
+
+
+def _golden_rows():
+    xs = [1.5, float("nan"), -0.0, 0.0, None, 2.25, -3.0]
+    ss = ["a", "", None, "bb", "a", "", "ccc"]
+    rows = []
+    for i in range(60):
+        g = None if i % 11 == 5 else i % 4
+        if g == 2:  # an all-NULL value group
+            rows.append((g, None, None, None, None, None))
+            continue
+        rows.append((
+            g,
+            None if i % 5 == 0 else i % 17,
+            xs[i % len(xs)],
+            ss[i % len(ss)],
+            None if i % 9 == 0 else float(i % 4),
+            None if i % 7 == 0 else [ss[i % 7] or "z", str(i % 3)],
+        ))
+    return rows
+
+
+# (input column, family, k); k is lg_k / k / lg_m per family
+GOLDEN_SPECS = [
+    ("v", "theta", 5), ("s", "theta", 12), ("x", "theta", 12),
+    ("v", "hll", 8), ("s", "hll", 10), ("s", "cpc", 10), ("x", "cpc", 10),
+    ("x", "kll", 8), ("v", "kll", 200), ("x", "quantiles", 8),
+    ("x", "req", 12), ("v", "tdigest", 100), ("s", "kll_items", 8),
+    ("s", "frequent_items", 3), ("s", "cms", 8), ("v", "bloom", 12),
+    ("v", "bloomfilter", 12), ("v", "stats", None), ("x", "stats", None),
+    ("s", "stats", None), ("a", "fdt", 6),
+    ("s", "reservoir", 64), ("v", "ebpps", 64),
+]
+KINDS = {"v": "int64"}
+
+
+def _series(rows, col):
+    """A group's column as the kernel's chunk renders it."""
+    vals = [r[col] for r in rows]
+    if col in ("v", "x", "w"):  # a NULL-bearing bigint batch is float64
+        return pd.Series(vals, dtype="float64")
+    return pd.Series(
+        [np.array(v, dtype=object) if isinstance(v, list) else v for v in vals],
+        dtype=object,
+    )
+
+
+def _reference(family, k, series, kind):
+    series = coerce_value_batch(series, kind)
+    sk = create_sketch(family, build_params(family, k, series))
+    update_sketch(family, sk, series)
+    return sk
+
+
+def _answer(family, blob):
+    """The blob's bytes; exact-mode answers for the randomized (unseeded
+    RNG) families."""
+    if family == "reservoir":
+        sk = FAMILY_CLASSES[family].deserialize(bytes(blob))
+        return sk.n, sorted(sk.get_items())
+    if family == "ebpps":
+        sk = FAMILY_CLASSES[family].deserialize(bytes(blob))
+        return sk.n, sk.cumulative_wt, sk.wt_max, sk.rho
+    return bytes(blob)
+
+
+@pytest.fixture(scope="module")
+def golden(spark):
+    rows = _golden_rows()
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), GOLDEN_SCHEMA)
+    groups: dict = {}
+    for r in df.collect():  # input order, per group
+        groups.setdefault(r.g, []).append(r)
+    return df, groups
+
+
+def _by_group(rows):
+    return {r.g: r for r in rows}
+
+
+def test_golden_sketch_partials_match_update_sketch(spark, golden):
+    df, groups = golden
+    specs = [(c, f, k, f"o{i}") for i, (c, f, k) in enumerate(GOLDEN_SPECS)]
+    with _batch_rows(spark, 2):
+        out = _by_group(_sketch_partials(df, specs, ["g"]).collect())
+    assert set(out) == set(groups)
+    for g, rows in groups.items():
+        for col, family, k, o in specs:
+            ref = _reference(family, k, _series(rows, col), KINDS.get(col))
+            assert _answer(family, out[g][o]) == _answer(family, ref.serialize()), (
+                g, col, family,
+            )
+
+
+@pytest.mark.parametrize("family,col", [("reservoir", "s"), ("ebpps", "v")])
+def test_golden_weighted_partials_match_update_series(spark, golden, family, col):
+    df, groups = golden
+    with _batch_rows(spark, 2):
+        out = _by_group(
+            sketch_partial(df, col, family, ["g"], k=64, weight_col="w").collect()
+        )
+    for g, rows in groups.items():
+        series, w = coerce_value_batch(
+            _series(rows, col), KINDS.get(col), _series(rows, "w")
+        )
+        ref = create_sketch(family, build_params(family, 64, series))
+        ref.update_series(series, weights=w)
+        if family == "reservoir":
+            got = FAMILY_CLASSES[family].deserialize(bytes(out[g].sketch))
+            assert got.n == ref.n and got.weighted and ref.weighted
+            assert sorted(zip(got.get_items(), got.get_sample_weights())) == sorted(
+                zip(ref.get_items(), ref.get_sample_weights())
+            ), g
+        else:
+            assert _answer(family, out[g].sketch) == _answer(family, ref.serialize()), g
+
+
+def test_golden_tuple_partial_matches_update_batch(spark, golden):
+    df, groups = golden
+    with _batch_rows(spark, 2):
+        out = _by_group(tuple_sketch_partial(df, "v", ["x", "w"], ["g"], lg_k=5).collect())
+    for g, rows in groups.items():
+        keys, vals = coerce_value_batch(
+            _series(rows, "v"), "int64",
+            pd.DataFrame({"x": _series(rows, "x"), "w": _series(rows, "w")}),
+        )
+        ref = AodSketch(5, 2)
+        ref.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
+        assert bytes(out[g].sketch) == ref.serialize(), g
+
+
+def test_golden_theta_partial_state_matches_update_sketch(spark, golden):
+    df, groups = golden
+    with _batch_rows(spark, 2):
+        out = _by_group(theta_partial_state(df, "s", ["g"], lg_k=4).collect())
+    for g, rows in groups.items():
+        ref = _reference("theta", 4, _series(rows, "s"), None)
+        ref._consolidate()
+        theta = None if ref.theta == MAX_HASH else ref.theta
+        assert (out[g].hashes, out[g].theta) == (
+            ref.hashes.astype("int64").tolist(), theta
+        ), g
+
+
+def test_golden_bloomfilter_blob_matches_update_sketch(spark, golden):
+    df, _ = golden
+    with _batch_rows(spark, 2):
+        got = bytes(bloomfilter_blob(df, "v", lg_m=10, driver_merge=True))
+    ref = ApacheBloomFilter(1 << 10, 6, 9001)
+    update_sketch("bloomfilter", ref, coerce_value_batch(
+        _series(df.collect(), "v"), "int64"
+    ))
+    assert got == ref.to_wire()
+
+
+@pytest.mark.parametrize(
+    "key",
+    # struct<a double> holds NaN, NULL, -0.0 and 0.0 elements; Spark
+    # groups NaN apart from NULL, but a NaN element leaves the pandas
+    # Arrow path as NULL, so the kernel folds the two into one group
+    ["array(g, g * 10)", "named_struct('a', g, 'b', s)", "named_struct('a', x)"],
+)
+def test_golden_nested_keys_match_update_sketch(spark, golden, key):
+    df, _ = golden
+    keyed = df.withColumn("k", F.expr(key))
+    groups: dict = {}
+    for r in keyed.collect():
+        groups.setdefault(_hashable_key(r.k), []).append(r)
+    with _batch_rows(spark, 2):
+        out = _sketch_partials(
+            keyed, [("s", "theta", 12, "o"), ("x", "kll", 8, "q")], ["k"]
+        ).collect()
+    got = {_hashable_key(r.k): r for r in out}
+    spark_keys = {_hashable_key(r.k) for r in keyed.select("k").distinct().collect()}
+    assert set(groups) == spark_keys
+    assert len(out) == len(got) and set(got) == set(groups)  # one row per key
+    for k, rows in groups.items():
+        assert bytes(got[k].o) == _reference("theta", 12, _series(rows, "s"), None).serialize()
+        assert bytes(got[k].q) == _reference("kll", 8, _series(rows, "x"), None).serialize()
+
+
+def _hashable_key(v):
+    """A collected array/struct key as a hashable value; a NaN element
+    is NULL, as the kernel emits it."""
+    if isinstance(v, float) and v != v:
+        return None
+    if isinstance(v, list):
+        return tuple(_hashable_key(x) for x in v)
+    if hasattr(v, "asDict"):
+        return tuple(
+            (k, _hashable_key(x))
+            for k, x in sorted(v.asDict().items(), key=lambda kv: kv[0])
+        )
+    return v

@@ -2,9 +2,13 @@
 Apache KllItemsSketch/ArrayOfStringsSerDe wire, differentially tested
 against the live datasketches-java twin in the bundled jar."""
 
+from decimal import Decimal
+
 import numpy as np
+import pandas as pd
 import pytest
 
+from datasketches_spark.families import prepare, update_prepared, update_sketch
 from datasketches_spark.sketches import KllItemsSketch, KllSketch
 from datasketches_spark.sketches.base import SketchDeserializeError
 
@@ -36,6 +40,33 @@ def test_none_and_nan_dropped_numeric_rejected():
         sk.get_cdf([1.0])
     with pytest.raises(ValueError, match="must be a string"):
         sk.get_rank(3.5)
+
+
+NON_STRING_NULLS = [None, float("nan"), pd.NA, pd.NaT, np.datetime64("NaT")]
+
+
+def _feed(path, sk, values):
+    series = pd.Series(values, dtype=object)
+    if path == "update":
+        sk.update(values)
+    elif path == "update_sketch":
+        update_sketch("kll_items", sk, series)
+    else:  # the fold kernel's per-batch prepare, then one slice
+        values, _keep = prepare("kll_items", series)
+        update_prepared("kll_items", sk, values)
+
+
+@pytest.mark.parametrize("path", ["update", "update_sketch", "prepare"])
+def test_null_semantics_pinned(path):
+    # every pandas-missing scalar is a NULL and is dropped...
+    sk = KllItemsSketch(20)
+    _feed(path, sk, ["b", *NON_STRING_NULLS, "", "a"])
+    assert sk.n == 3
+    assert (sk.get_min_item(), sk.get_max_item()) == ("", "b")
+    # ...every other non-string value raises, NULLs alongside or not
+    for bad in (5, np.int64(5), 1.5, -0.0, True, b"x", Decimal("1.5")):
+        with pytest.raises(ValueError, match="VARCHAR values only"):
+            _feed(path, KllItemsSketch(20), ["a", None, bad])
 
 
 def test_dsks_roundtrip_exact_and_estimation():

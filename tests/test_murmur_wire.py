@@ -255,6 +255,37 @@ def test_live_jvm_reads_our_estimation_blob(jvm_theta):
     assert est == pytest.approx(61_000, rel=0.05)
 
 
+@pytest.fixture(scope="module")
+def jvm_small_estimation_blob(jvm_theta):
+    """A java-built theta at lg_k=6 over 2k values: estimation mode with
+    a theta (~0.03) below our lg_k=12 sketch's over 60k values (~0.07).
+    Built once: every java update is one py4j round trip."""
+    _, build = jvm_theta
+    return build(list(range(59_000, 61_000)), lg_k=6)
+
+
+def test_estimation_mode_union_takes_java_min_theta(jvm_theta, jvm_small_estimation_blob):
+    """Both union sides in estimation mode: java's smaller theta wins
+    the min, and our merge keeps exactly the hashes java's union keeps."""
+    jvm, _ = jvm_theta
+    ours = ThetaSketch.from_wire(_build(list(range(60_000))).to_wire())
+    theirs = ThetaSketch.from_wire(jvm_small_estimation_blob)
+    assert ours.is_estimation_mode and theirs.is_estimation_mode
+    assert theirs.theta < ours.theta
+
+    u = jvm.org.apache.datasketches.theta.SetOperation.builder().buildUnion()
+    for blob in (ours.to_wire(), jvm_small_estimation_blob):
+        mem = jvm.org.apache.datasketches.memory.Memory.wrap(blob)
+        u.union(jvm.org.apache.datasketches.theta.CompactSketch.wrap(mem))
+    java = ThetaSketch.from_wire(bytes(u.getResult().toByteArray()))
+
+    ours.merge(theirs)
+    assert ours.theta == theirs.theta == java.theta
+    assert np.array_equal(ours.hashes, java.hashes)
+    assert ours.get_estimate() == java.get_estimate()
+    assert ours.get_estimate() == pytest.approx(61_000, rel=0.15)
+
+
 def test_decimal_objects_hash_as_doubles():
     """Spark DecimalType arrives as object-dtype decimal.Decimal; DuckDB
     implicitly casts DECIMAL to DOUBLE for the double-typed sketch

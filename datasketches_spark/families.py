@@ -215,8 +215,10 @@ def prepare(
         return (s, weights if keep is None else weights[keep]), keep
     if family == "stats":
         # the one family that must SEE the NULLs: its null count is
-        # n - nonnull
-        return s, keep
+        # n - nonnull, so the rows coercion dropped come back as <NA>
+        if keep is not None:
+            s = series.astype("Int64")
+        return s, None
     nn = s.notna().to_numpy()
     if not nn.all():
         s = s[nn]

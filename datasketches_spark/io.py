@@ -10,6 +10,9 @@ persists through parquet, and validate blobs against it on load.
 from __future__ import annotations
 
 import json
+import threading
+import weakref
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,34 +73,77 @@ def write_sketch_table(
     w.parquet(path)
 
 
+# What a file listing of a sketch table already proved, per session and
+# per (path, sketch_col): ``(input files, inferred schema, family check
+# passed)``.  Spark infers the schema from those same files and takes
+# the check's sample row from them, and Spark writers always create new
+# file names, so an unchanged listing means an unchanged answer.
+_READ_MEMO_TABLES = 64
+_read_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_read_memo_lock = threading.Lock()
+
+
+def _validate(df: DataFrame, path: str, sketch_col: str) -> None:
+    """Raise unless one non-null blob matches the column's family tag."""
+    info = sketch_column_info(df, sketch_col)
+    if info is None:
+        return
+    expected = _FAMILY_BYTES[info["family"]]
+    sample = df.select(sketch_col).filter(F.col(sketch_col).isNotNull()).first()
+    if sample is None:
+        return
+    blob = bytes(sample[0])
+    if expected is None:  # wire-native family: sniff the preamble
+        from .sketches.bloom_apache import ApacheBloomFilter  # noqa: PLC0415
+
+        if not ApacheBloomFilter.sniff_wire(blob):
+            raise ValueError(
+                f"sketch table at {path}: column '{sketch_col}' tagged "
+                f"as family '{info['family']}' but blobs are not "
+                "Apache BloomFilter wire"
+            )
+        return
+    fam = peek_family(blob)
+    if fam != expected:
+        raise ValueError(
+            f"sketch table at {path}: column '{sketch_col}' tagged as "
+            f"family '{info['family']}' but blobs have family byte {fam}"
+        )
+
+
 def read_sketch_table(
     spark: SparkSession, path: str, sketch_col: str = "sketch", validate: bool = True
 ) -> DataFrame:
     """Load a sketch table; optionally validate blob family bytes against
-    the column's metadata tag (cheap scan of one row)."""
-    df = spark.read.parquet(path)
-    info = sketch_column_info(df, sketch_col)
-    if validate and info is not None:
-        expected = _FAMILY_BYTES[info["family"]]
-        sample = df.select(sketch_col).filter(F.col(sketch_col).isNotNull()).first()
-        if sample is not None:
-            blob = bytes(sample[0])
-            if expected is None:  # wire-native family: sniff the preamble
-                from .sketches.bloom_apache import ApacheBloomFilter  # noqa: PLC0415
+    the column's metadata tag.
 
-                if not ApacheBloomFilter.sniff_wire(blob):
-                    raise ValueError(
-                        f"sketch table at {path}: column '{sketch_col}' tagged "
-                        f"as family '{info['family']}' but blobs are not "
-                        "Apache BloomFilter wire"
-                    )
-                return df
-            fam = peek_family(blob)
-            if fam != expected:
-                raise ValueError(
-                    f"sketch table at {path}: column '{sketch_col}' tagged as "
-                    f"family '{info['family']}' but blobs have family byte {fam}"
-                )
+    The first read of a file listing runs Spark's schema-inference job
+    and, with ``validate``, a one-row sample job.  Later reads in the
+    same session whose file listing is unchanged reuse that schema and
+    check result and run no job: listing the files happens on the
+    driver.  Files rewritten in place under the same names by a
+    non-Spark writer are not detected (the contract of ``REFRESH
+    TABLE``)."""
+    key = (path, sketch_col)
+    with _read_memo_lock:
+        memo = _read_memo.setdefault(spark, OrderedDict())
+        entry = memo.get(key)
+    df = None
+    if entry is not None:
+        files, schema, checked = entry
+        df = spark.read.schema(schema).parquet(path)
+        if frozenset(df.inputFiles()) != files:
+            df = None
+    if df is None:  # first read of this listing: infer and check afresh
+        df = spark.read.parquet(path)
+        files, schema, checked = frozenset(df.inputFiles()), df.schema, False
+    if validate and not checked:
+        _validate(df, path, sketch_col)
+    with _read_memo_lock:
+        memo[key] = (files, schema, checked or validate)
+        memo.move_to_end(key)
+        if len(memo) > _READ_MEMO_TABLES:
+            memo.popitem(last=False)
     return df
 
 
@@ -284,7 +330,7 @@ def read_wire_table(
     since the Apache preamble carries no item type.  Requires
     ``datasketches_spark.register(spark)``.
     """
-    df = spark.read.parquet(path)
+    df = read_sketch_table(spark, path, sketch_col, validate=False)
     info = sketch_column_info(df, sketch_col)
     if info and not info.get("wire"):
         # A DSKS-framed table (write_sketch_table) carries the same

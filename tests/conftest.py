@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -31,3 +32,21 @@ def spark():
     register(session)
     yield session
     session.stop()
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn) -> (fn(), number of Spark jobs fn started)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

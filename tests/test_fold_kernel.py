@@ -296,7 +296,8 @@ def _series(rows, col):
 
 
 def _reference(family, k, series, kind):
-    series = coerce_value_batch(series, kind)
+    if family != "stats":  # stats counts the NULL rows coercion drops
+        series = coerce_value_batch(series, kind)
     sk = create_sketch(family, build_params(family, k, series))
     update_sketch(family, sk, series)
     return sk

@@ -107,3 +107,25 @@ def test_bloom_prune_keeps_keys_of_null_bearing_batches(spark, engine):
     fact = spark.range(0, 10).withColumnRenamed("id", "v")
     kept = bloom_prune(fact, "v", dim, "v", lg_m=12, engine=engine)
     assert {1, 2, 3, 4} <= {r.v for r in kept.collect()}
+
+
+def test_stats_n_counts_null_rows(spark, split_df):
+    """The NULL row of the float64-rendered batch still counts in n."""
+    row = sketch_agg(
+        split_df, "v", "stats",
+        finalize=lambda sk: {"n": sk.get_n(), "nn": sk.get_nonnull(), "s": sk.get_sum()},
+        finalize_schema="n bigint, nn bigint, s double",
+    ).first()
+    assert (row.n, row.nn, row.s) == (split_df.count(), 4, 6.0)
+
+
+def test_profile_table_n_rows_counts_null_rows(spark):
+    from datasketches_spark.profile import profile_table
+
+    df = spark.range(0, 100).selectExpr(
+        "CAST(IF(id % 7 = 0, NULL, id) AS INT) AS v", "CAST(id AS STRING) AS s"
+    )
+    got = {r.column: r for r in profile_table(df).collect()}
+    assert got["v"].n_rows == got["s"].n_rows == df.count()
+    assert (got["v"].n_nonnull, got["v"].n_null) == (85, 15)
+    assert (got["s"].n_nonnull, got["s"].n_null) == (100, 0)

@@ -18,7 +18,13 @@ pattern, tests/test_arrow_sentinel_canary.py):
 4. minhash/simhash signature fan-out (r15, opt-in): ``fan_out=True``
    must put a round-robin Exchange under the Python pass on a narrow
    scan; the default must not.
+5. sketch-table reads: a warm ``io.read_sketch_table`` plus a scalar
+   query runs exactly one job (the read's schema inference and family
+   check are remembered for an unchanged file listing).
 """
+
+import pytest
+from pyspark.sql import functions as F
 
 from datasketches_spark import compat
 
@@ -118,3 +124,31 @@ class TestSignatureFanOut:
         assert sorted(map(str, fanned.collect())) == sorted(
             map(str, D.simhash64(docs, "doc_id", "text").collect())
         )
+
+
+class TestWarmSketchTableQuery:
+    def test_warm_read_then_scalar_query_runs_one_job(self, spark, tmp_path, job_count):
+        # a warm read_sketch_table starts no job of its own (schema and
+        # family check are remembered for the file listing), so the
+        # scalar query is the only job; an eager action reintroduced on
+        # the read path shows up here as a second one
+        from datasketches_spark import io as dio
+        from datasketches_spark.aggregation import sketch_agg
+
+        if not compat.has_jvm(spark):
+            pytest.skip("job counts need the classic status tracker")
+        df = spark.range(0, 400).selectExpr("id % 8 AS g", "id AS v")
+        path = str(tmp_path / "store")
+        dio.write_sketch_table(
+            sketch_agg(df, "v", "theta", group_cols=["g"], k=10), path, "sketch", "theta", k=10,
+        )
+        dio.read_sketch_table(spark, path)
+
+        def query():
+            return dio.read_sketch_table(spark, path).select(
+                "g", F.expr("datasketch_theta_estimate(sketch)")
+            ).collect()
+
+        rows, jobs = job_count(query)
+        assert len(rows) == 8
+        assert jobs == 1

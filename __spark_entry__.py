@@ -1732,9 +1732,10 @@ def q_bloom_contains_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = _t(spark, sf_dir, "customer")
     # engine='auto' rides Spark's built-in JVM BloomFilter for the
     # integral key (build = one all-JVM job, no Arrow transfer of the
-    # 600k keys; probe = vectorized numpy over the broadcast bytes --
-    # runtime_filter.SparkBloomFilter).  Measured r7 interleaved
-    # best-of-4: 0.65 s vs 0.79 s for the portable DSKS-blob build.
+    # 600k keys; probe = Catalyst's might_contain over the filter
+    # bytes, a codegen'd Filter with no Python).  Measured r7
+    # interleaved best-of-4: 0.65 s vs 0.79 s for the portable
+    # DSKS-blob build.
     pruned = dss.bloom_prune(customer, "c_custkey", orders, "o_custkey", lg_m=20)
     # left-semi needs no distinct() on the build side (it would add a
     # whole extra shuffle for nothing -- semi joins dedup by nature).

@@ -14,7 +14,7 @@ applyInPandas), every SQL/Column function, io wire tables, streaming
 foreachBatch.  What the helpers shim: planner size statistics (used
 only as OPTIMIZATION gates — fallbacks pick the safe branch), task
 broadcasts (fall back to closure capture), filesystem probes, and the
-JVM-native bloom build (falls back to the portable Python engine).
+JVM-native bloom build and probe (auto picks the Python engine).
 """
 
 from __future__ import annotations
@@ -24,7 +24,9 @@ import io
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def has_jvm(obj: "SparkSession | DataFrame") -> bool:
@@ -162,6 +164,20 @@ def broadcast_value(spark: SparkSession, value):
                 stacklevel=2,
             )
         return _ClosureBroadcast(value)
+
+
+def bloom_might_contain(key: Column, blob: bytes) -> Column:
+    """Catalyst's ``might_contain(blob, CAST(key AS BIGINT))`` over
+    serialized Spark BloomFilter bytes: a codegen'd expression, NULL
+    for a NULL key.  It is not in the SQL function registry, so it is
+    built through the py4j bridge (classic sessions only)."""
+    jvm = SparkContext._active_spark_context._jvm
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    expr = jvm.org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
+        utils.expression(F.lit(bytearray(blob))._jc),
+        utils.expression(key.cast("long")._jc),
+    )
+    return Column(utils.column(expr))
 
 
 def physical_plan_string(df: DataFrame) -> str:

@@ -6,10 +6,12 @@ expensive downstream join or shuffle.  A real semi-join shuffles the
 fact side; broadcasting the raw keyset is limited by driver memory.  A
 Bloom filter of the keyset is a few KB-MB regardless of key count, so:
 
-  phase 1: two-phase sketch build over the dim keys (blob-only shuffle)
-  phase 2: broadcast the single filter row; probe it with an
-           Arrow-vectorized UDF — the fact table streams through its
-           scan, no shuffle, no driver collect of the keyset.
+  phase 1: build the filter over the dim keys (Spark's BloomFilter in
+           one all-JVM job, or a two-phase sketch build)
+  phase 2: probe every fact row — Catalyst's ``might_contain`` for
+           Spark's filter, an Arrow-vectorized UDF otherwise; the fact
+           table streams through its scan, no shuffle, no driver
+           collect of the keyset.
 
 False positives pass the filter (tune via ``lg_m``) — downstream exact
 joins stay correct, they just see slightly more rows; false negatives
@@ -23,9 +25,7 @@ and the filter itself is a storable, mergeable sketch column.
 from __future__ import annotations
 
 import math
-import struct
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -111,47 +111,19 @@ def _merged_filter_blob(df, lg_m, driver_merge, family, empty, partial) -> bytes
     return empty.serialize()
 
 
-def _probe(fact: DataFrame, fact_key, blob: bytes, invert: bool, load, contains):
-    """``fact`` rows whose key ``contains(load(blob), keys)`` answers
-    True (``invert``: False); NULL keys are dropped either way.  The
-    blob is deserialized once per Python worker."""
-    key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
-    kind = _declared_kind(fact, fact_key)
-    bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
-    holder: list = []
-
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
-        if not holder:
-            holder.append(load(bc.value))
-        out = pd.Series(False, index=keys.index)
-        ok = keys.notna()
-        if ok.any():
-            hits = contains(holder[0], coerce_value_batch(keys[ok], kind))
-            out[ok] = ~hits if invert else hits
-        return out
-
-    return fact.where(probe(key))
-
-
 def bloom_prune_with(
     fact: DataFrame, fact_key, blob: bytes, invert: bool = False
 ) -> DataFrame:
-    """Filter ``fact`` by a pre-built Bloom filter blob.
-
-    The blob travels to executors as a task broadcast (bounded size:
-    2^lg_m/8 bytes regardless of key count) and is deserialized ONCE
-    per Python worker — never shipped per-row through Arrow, which is
-    what makes probing O(keys) instead of O(keys x filter_size).
+    """Filter ``fact`` by a pre-built Bloom filter blob.  The blob
+    (2^lg_m/8 bytes regardless of key count) is never shipped per-row
+    through Arrow, so probing is O(keys), not O(keys x filter_size).
 
     ``invert=True`` keeps only *definitely-unseen* keys (Bloom
     negatives are exact) — the dedup/novelty direction; NULL keys are
     dropped either way.
     """
-    return _probe(
-        fact, fact_key, blob, invert,
-        BloomFilterSketch.deserialize, BloomFilterSketch.contains_values,
-    )
+    hit = _probe(fact, fact_key, blob, "python")
+    return fact.where(~hit if invert else hit)
 
 
 def bloomfilter_blob(
@@ -192,113 +164,8 @@ def bloomfilter_prune_with(
     blob may come from THIS engine or from any other DataSketches
     system (java/cpp/py BloomFilter.toByteArray()) — probe semantics
     are bit-identical either way."""
-    return _probe(
-        fact, fact_key, blob, invert,
-        ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series,
-    )
-
-
-# ------------------------- JVM-native fast path (Spark built-in bloom)
-#
-# Spark ships a BloomFilter (util.sketch.BloomFilterImpl -- the same
-# machinery AQE's InjectRuntimeFilter aggregates with) whose BUILD runs
-# entirely JVM-side via DataFrameStatFunctions.bloomFilter: one
-# all-JVM job over the dim keys, zero Arrow transfer.  Scala-only API,
-# so reach it through the DataFrame's underlying _jdf.  The probe side
-# re-implements BloomFilterImpl.mightContainLong as vectorized numpy
-# (Murmur3_x86_32 over the long's two int halves, h1 + i*h2 double
-# hashing) so the fact side still streams through an Arrow-batched
-# UDF against broadcast filter bytes.  Integral keys only; the
-# portable DSKS sketch path below handles everything else and remains
-# the storable/mergeable surface.
-
-_M32_C1 = np.uint32(0xCC9E2D51)
-_M32_C2 = np.uint32(0x1B873593)
-
-
-def _mm32_rotl(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
-
-
-def _mm32_hash_long(vals: np.ndarray, seed) -> np.ndarray:
-    """Vectorized Murmur3_x86_32.hashLong (uint32 out).  ``seed`` is a
-    scalar or per-element uint32 array — the double-hashing scheme
-    seeds the second hash with the first."""
-    with np.errstate(over="ignore"):
-        low = (vals & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-        high = (vals >> np.uint64(32)).astype(np.uint32)
-        h1 = np.asarray(seed, dtype=np.uint32)
-        for half in (low, high):
-            k1 = half * _M32_C1
-            k1 = _mm32_rotl(k1, 15) * _M32_C2
-            h1 = _mm32_rotl(h1 ^ k1, 13) * np.uint32(5) + np.uint32(0xE6546B64)
-        h1 ^= np.uint32(8)  # fmix(h1, 8 bytes)
-        h1 ^= h1 >> np.uint32(16)
-        h1 *= np.uint32(0x85EBCA6B)
-        h1 ^= h1 >> np.uint32(13)
-        h1 *= np.uint32(0xC2B2AE35)
-        h1 ^= h1 >> np.uint32(16)
-        return h1
-
-
-class SparkBloomFilter:
-    """Parsed Spark BloomFilter stream, probe-only.
-
-    Handles both wire versions: V1 (BloomFilterImpl — int32
-    double-hashing ``h1 + i*h2``) and V2 (BloomFilterImplV2, the
-    Spark 4 default — seeded hash pair, int64 accumulator
-    ``hi*0x7FFFFFFF + i*lo``).  Layouts recovered from the bundled
-    spark-sketch jar's bytecode (writeTo/scatterHashAndGetAllBits)."""
-
-    def __init__(self, version: int, num_hashes: int, seed: int, words: np.ndarray):
-        self.version = int(version)
-        self.num_hashes = int(num_hashes)
-        self.seed = np.uint32(seed & 0xFFFFFFFF)
-        self.words = words  # uint64, java BitArray layout
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "SparkBloomFilter":
-        (version,) = struct.unpack_from(">i", blob, 0)
-        if version == 1:
-            num_hashes, num_words = struct.unpack_from(">ii", blob, 4)
-            seed, off = 0, 12
-        elif version == 2:
-            num_hashes, seed, num_words = struct.unpack_from(">iii", blob, 4)
-            off = 16
-        else:
-            raise ValueError(f"unsupported Spark BloomFilter version {version}")
-        words = np.frombuffer(blob, dtype=">u8", count=num_words, offset=off)
-        return cls(version, num_hashes, seed, words.astype(np.uint64))
-
-    def _bit_test(self, idx: np.ndarray, out: np.ndarray) -> None:
-        bits = (self.words[idx >> 6] >> (idx.astype(np.uint64) & np.uint64(63))) & np.uint64(1)
-        out &= bits.astype(bool)
-
-    def contains_longs(self, keys: np.ndarray) -> np.ndarray:
-        """Vectorized mightContainLong over int64 keys."""
-        vals = np.ascontiguousarray(keys, dtype=np.int64).view(np.uint64)
-        hi = _mm32_hash_long(vals, self.seed)
-        lo = _mm32_hash_long(vals, hi)
-        bit_size = np.int64(self.words.size * 64)
-        out = np.ones(vals.shape, dtype=bool)
-        with np.errstate(over="ignore"):
-            if self.version == 2:
-                hi64 = hi.view(np.int32).astype(np.int64)
-                lo64 = lo.view(np.int32).astype(np.int64)
-                acc = hi64 * np.int64(0x7FFFFFFF)
-                for _ in range(self.num_hashes):
-                    acc = acc + lo64
-                    comb = np.where(acc < 0, ~acc, acc)
-                    self._bit_test(comb % bit_size, out)
-            else:
-                h1i = hi.view(np.int32).astype(np.int64)
-                h2i = lo.view(np.int32).astype(np.int64)
-                for i in range(1, self.num_hashes + 1):
-                    # int32 wrap-around like java, then flip negatives
-                    comb = (h1i + i * h2i).astype(np.int32)
-                    comb = np.where(comb < 0, ~comb, comb).astype(np.int64)
-                    self._bit_test(comb % bit_size, out)
-        return out
+    hit = _probe(fact, fact_key, blob, "apache")
+    return fact.where(~hit if invert else hit)
 
 
 def jvm_bloom_filter_bytes(
@@ -307,7 +174,9 @@ def jvm_bloom_filter_bytes(
     """Serialized Spark BloomFilter of an integral key column, built by
     the JVM in one job (no Python, no Arrow).  ``2^lg_m`` bits;
     expectedNumItems is back-derived so java picks ``num_hashes``
-    hash functions (k = round(numBits/n * ln 2))."""
+    hash functions (k = round(numBits/n * ln 2)).  An input with no
+    non-NULL key yields an empty filter of the same geometry."""
+    from py4j.protocol import Py4JJavaError  # noqa: PLC0415
     if not compat.has_jvm(df):
         raise RuntimeError(
             "engine='jvm' needs a classic py4j session "
@@ -316,56 +185,77 @@ def jvm_bloom_filter_bytes(
         )
     num_bits = 1 << lg_m
     expected = max(1, int(round(num_bits * math.log(2) / num_hashes)))
-    jbf = df._jdf.stat().bloomFilter(key_col, expected, num_bits)
     jvm = df.sparkSession.sparkContext._jvm
+    try:
+        jbf = df._jdf.stat().bloomFilter(key_col, expected, num_bits)
+    except Py4JJavaError:
+        # the bloomFilter aggregate has no zero value: with no
+        # non-NULL key it fails deserializing a null buffer
+        if not df.where(F.col(key_col).isNotNull()).isEmpty():
+            raise
+        jbf = jvm.org.apache.spark.util.sketch.BloomFilter.create(expected, num_bits)
     baos = jvm.java.io.ByteArrayOutputStream()
     jbf.writeTo(baos)
     return bytes(baos.toByteArray())
 
 
-def jvm_bloom_prune_with(
-    fact: DataFrame, fact_key, blob: bytes, invert: bool = False
-) -> DataFrame:
-    """Filter ``fact`` by Spark BloomFilter bytes (integral keys)."""
+# engine -> filter build.  The apache filter (bloomfilter_blob) has the
+# same plan shape as the python one, but its blob is loadable by any
+# DataSketches system — pick it when the filter must cross systems
+_BUILDS = {
+    "jvm": jvm_bloom_filter_bytes,
+    "python": bloom_filter_blob,
+    "apache": bloomfilter_blob,
+}
+
+# engine -> (blob loader, vectorized membership) for the pandas UDF probe
+_UDF_PROBES = {
+    "python": (BloomFilterSketch.deserialize, BloomFilterSketch.contains_values),
+    "apache": (ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series),
+}
+
+
+def _probe(fact: DataFrame, fact_key, blob: bytes, engine: str) -> Column:
+    """Boolean Column: might ``fact_key`` be in ``engine``'s filter
+    ``blob``?  NULL for a NULL key, so ``where(c)`` and ``where(~c)``
+    both drop NULL keys.
+
+    The jvm filter is Spark's own BloomFilter, probed by Catalyst's
+    ``might_contain`` — a codegen'd Filter, no Python in the plan.
+    The python/apache blobs are probed by a pandas UDF; the blob
+    travels as a task broadcast and is deserialized once per Python
+    worker."""
     key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
+    if engine == "jvm":
+        return compat.bloom_might_contain(key, blob)
+    load, contains = _UDF_PROBES[engine]
+    kind = _declared_kind(fact, fact_key)
     bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
-    holder: list[SparkBloomFilter] = []
+    holder: list = []
 
     @pandas_udf("boolean")
     def probe(keys: pd.Series) -> pd.Series:
         if not holder:
-            holder.append(SparkBloomFilter.from_bytes(bc.value))
-        sk = holder[0]
-        out = pd.Series(False, index=keys.index)
+            holder.append(load(bc.value))
+        out = pd.Series(pd.NA, index=keys.index, dtype="boolean")
         ok = keys.notna()
         if ok.any():
-            hits = sk.contains_longs(keys[ok].to_numpy(dtype="int64"))
-            out[ok] = ~hits if invert else hits
+            out[ok] = contains(holder[0], coerce_value_batch(keys[ok], kind))
         return out
 
-    return fact.where(probe(key.cast("long")))
+    return probe(key)
 
 
-# engine -> (filter build, probe).  The apache filter (bloomfilter_blob)
-# has the same plan shape as the python one, but its blob is loadable
-# by any DataSketches system — pick it when the filter must cross systems
-_ENGINES = {
-    "jvm": (jvm_bloom_filter_bytes, jvm_bloom_prune_with),
-    "python": (bloom_filter_blob, bloom_prune_with),
-    "apache": (bloomfilter_blob, bloomfilter_prune_with),
-}
-
-
-def _resolve_engine(df: DataFrame, key_col: str, engine: str):
-    """The (build, probe) pair of ``engine``; ``auto`` is the JVM
-    filter for an integral ``df[key_col]`` on a classic session, else
-    the python one."""
-    if engine not in ("auto", *_ENGINES):
+def _resolve_engine(df: DataFrame, key_col: str, engine: str) -> str:
+    """``engine``, with ``auto`` resolved: the JVM filter for an
+    integral ``df[key_col]`` on a classic session, else the python
+    one."""
+    if engine not in ("auto", *_BUILDS):
         raise ValueError(f"engine ({engine!r}) must be auto/jvm/python/apache")
     if engine == "auto":
         integral = spark_value_kind(df.schema[key_col].dataType) == "int64"
         engine = "jvm" if integral and compat.has_jvm(df) else "python"
-    return _ENGINES[engine]
+    return engine
 
 
 def bloom_prune(
@@ -383,16 +273,18 @@ def bloom_prune(
     (FPP ~ (1-e^(-6n/m))^6); follow with an exact join if needed.
 
     ``engine='auto'`` rides Spark's built-in JVM BloomFilter when the
-    dim key is integral (build = one all-JVM job; probe = vectorized
-    numpy over the broadcast bytes — ``SparkBloomFilter``), and the
-    portable two-phase DSKS sketch path otherwise
+    dim key is integral (build = one all-JVM job; probe = Catalyst's
+    ``might_contain`` over the filter bytes as a plan literal — a
+    codegen'd Filter, no Python), and the portable two-phase DSKS
+    sketch path otherwise
     (``bloom_filter_blob``: driver-merged partials when bounded, else
     the blob-only shuffle).  Both scale unchanged when ``dim`` has
     billions of keys; only the portable path yields a storable,
     mergeable sketch column.
     """
-    build, probe = _resolve_engine(dim, dim_key, engine)
-    return probe(fact, fact_key, build(dim, dim_key, lg_m=lg_m))
+    engine = _resolve_engine(dim, dim_key, engine)
+    blob = _BUILDS[engine](dim, dim_key, lg_m=lg_m)
+    return fact.where(_probe(fact, fact_key, blob, engine))
 
 
 def bloom_pruned_anti_join(
@@ -423,32 +315,24 @@ def bloom_pruned_anti_join(
     cheap: it is the small side, typically checkpointed/persisted by
     callers), the fact side is scanned per branch instead of shuffled
     once (scans with pushdown beat a corpus-wide shuffle at scale),
-    and the ``2^lg_m``-bit filter is broadcast.  Default ``lg_m=23``
-    (1 MB) holds ~1M dropped keys at <1% FPP; beyond that the prune
-    degrades gracefully (more rows re-checked exactly, never wrong) —
-    raise ``lg_m`` when billions of keys are dropped.  Engine
+    and the ``2^lg_m``-bit filter ships to every task.  Default
+    ``lg_m=23`` (1 MB) holds ~1M dropped keys at <1% FPP; beyond that
+    the prune degrades gracefully (more rows re-checked exactly, never
+    wrong) — raise ``lg_m`` when billions of keys are dropped.  Engine
     dispatch matches :func:`bloom_prune`.
     """
-    build, probe = _resolve_engine(drop, key_col, engine)
+    engine = _resolve_engine(drop, key_col, engine)
     drop_keys = drop.select(key_col).where(F.col(key_col).isNotNull())
-    # NULL keys are routed around the probes entirely (below): besides
-    # matching anti-join semantics, this keeps integral key batches
-    # int64 in pandas — ONE null in a batch renders the whole batch
-    # float64, and ints hash differently from doubles (the
-    # coerce_value_batch disease; the probes also coerce defensively)
+    # NULL keys are routed around the probe (below): besides matching
+    # anti-join semantics, this keeps integral key batches int64 in
+    # pandas for the UDF probes (one NULL renders a batch float64, and
+    # ints hash differently from doubles).  An empty drop side builds
+    # an empty filter: every fact row takes the exact-negative branch.
     fact_nn = fact.where(F.col(key_col).isNotNull())
-    try:
-        blob = build(drop_keys, key_col, lg_m=lg_m)
-    except Exception:
-        # the prune is an optimization, the plain join is always
-        # correct.  Known case: Spark's DataFrameStatFunctions
-        # .bloomFilter throws on an EMPTY build side (zero dropped
-        # keys — e.g. a dedup threshold that keeps everything).
-        return fact.join(drop, key_col, "left_anti")
-    pos = probe(fact_nn, key_col, blob)
-    neg = probe(fact_nn, key_col, blob, invert=True)
-    checked = pos.join(drop_keys, key_col, "left_anti")
-    out = neg.unionByName(checked)
+    blob = _BUILDS[engine](drop_keys, key_col, lg_m=lg_m)
+    hit = _probe(fact_nn, key_col, blob, engine)
+    checked = fact_nn.where(hit).join(drop_keys, key_col, "left_anti")
+    out = fact_nn.where(~hit).unionByName(checked)
     if fact.schema[key_col].nullable:
         # both probe branches drop NULL keys; anti-join keeps them
         out = out.unionByName(fact.where(F.col(key_col).isNull()))
@@ -462,14 +346,9 @@ def anti_join_pruned(
     planner would otherwise shuffle it (SortMergeJoin/ShuffledHashJoin
     against a small-but-unknown-stats ``drop`` side).  When the plain
     join already broadcasts ``drop`` — one corpus scan, no shuffle —
-    that plan is strictly better than the split and is kept; likewise
-    when the plan cannot be inspected (the prune is an optimization,
-    the plain join is always correct)."""
+    that plan is strictly better than the split and is kept."""
     plain = fact.join(drop, key_col, "left_anti")
-    try:
-        plan = compat.physical_plan_string(plain)
-    except Exception:
-        return plain
+    plan = compat.physical_plan_string(plain)
     if "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan:
         return plain
     return bloom_pruned_anti_join(fact, drop, key_col, lg_m=lg_m)

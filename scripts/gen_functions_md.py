@@ -397,11 +397,12 @@ lines.append(
     "- **Bloom runtime filter engine selection** "
     "(`runtime_filter.bloom_prune(engine='auto')`): integral dimension "
     "keys build via Spark's JVM `DataFrameStatFunctions.bloomFilter` "
-    "(whole-stage scan, no Python) and probe via a bit-parity numpy "
-    "reimplementation of BloomFilterImplV2 (tests/test_bloom.py); "
-    "non-integral keys fall back to the DSKS python builder.  Force "
-    "either with `engine='jvm'|'python'`.  The filter BYTES broadcast "
-    "via `sc.broadcast`, never as a DataFrame column.")
+    "(whole-stage scan, no Python) and probe via Catalyst's "
+    "`might_contain` over the filter bytes — a codegen'd Filter, no "
+    "Python node (tests/test_plan_canaries.py); non-integral keys fall "
+    "back to the DSKS python builder.  Force one with "
+    "`engine='jvm'|'python'|'apache'`.  The python/apache filter BYTES "
+    "broadcast via `sc.broadcast`, never as a DataFrame column.")
 lines.append(
     "- **Integer-typed quantile wire blobs**: export an int64 "
     "KLL/Quantiles/REQ sketch with the family's `*_to_wire` (emits "

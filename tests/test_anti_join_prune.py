@@ -53,9 +53,10 @@ class TestBloomPrunedAntiJoin:
 
     @pytest.mark.parametrize("engine", ["jvm", "python", "apache"])
     def test_empty_drop_side_keeps_everything(self, spark, fact_drop, engine):
-        # regression: Spark's stat().bloomFilter THROWS on an empty
-        # build side (a dedup threshold that drops nothing) — the
-        # prune must fall back to the plain join, not crash
+        # regression: Spark's stat().bloomFilter alone THROWS on an
+        # empty build side (a dedup threshold that drops nothing); the
+        # empty filter built instead sends every row down the
+        # exact-negative branch
         fact, drop = fact_drop
         empty = drop.where("doc_id < 0")
         out = bloom_pruned_anti_join(fact, empty, "doc_id", engine=engine)

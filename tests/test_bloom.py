@@ -175,37 +175,11 @@ def test_bloom_prune_no_false_negatives(spark):
     assert len(got) <= len(expect) * 1.05  # few false positives at this m/n
 
 
-def test_spark_bloom_probe_matches_jvm(spark):
-    """The vectorized numpy probe reproduces java's mightContain bit
-    for bit on the SAME serialized filter (BloomFilterImplV2 wire)."""
-    from datasketches_spark.runtime_filter import (
-        SparkBloomFilter,
-        jvm_bloom_filter_bytes,
-    )
-
-    dim = spark.range(0, 20000, 3).withColumnRenamed("id", "d")
-    blob = jvm_bloom_filter_bytes(dim, "d", lg_m=16)
-    sbf = SparkBloomFilter.from_bytes(blob)
-    jbf = spark.sparkContext._jvm.org.apache.spark.util.sketch.BloomFilter.readFrom(
-        spark.sparkContext._jvm.java.io.ByteArrayInputStream(bytearray(blob))
-    )
-    rng = np.random.default_rng(3)
-    keys = np.concatenate(
-        [np.arange(0, 20000, 3), rng.integers(-(10**12), 10**12, 500)]
-    ).astype(np.int64)
-    ours = sbf.contains_longs(keys)
-    theirs = np.array([jbf.mightContain(int(k)) for k in keys])
-    assert (ours == theirs).all()
-    assert ours[: len(range(0, 20000, 3))].all()  # members always hit
-
-
-def test_spark_bloom_probe_v1_wire(spark):
-    """The V1 (BloomFilterImpl) stream still parses and probes
-    bit-for-bit: Spark 4 writes V2, but V1 blobs exist in the wild.
-    Constructed reflectively (the package-local ctor) and filled with
-    java's own putLong."""
-    from datasketches_spark.runtime_filter import SparkBloomFilter
-
+def _java_v1_filter(spark, members):
+    """A V1-wire (BloomFilterImpl) Spark filter, 6 hashes over 2^16
+    bits.  Spark 4 writes V2, but V1 blobs exist in the wild; the
+    package-local ctor is reached reflectively and filled with java's
+    own putLong."""
     jvm = spark.sparkContext._jvm
     cls = jvm.java.lang.Class.forName(
         "org.apache.spark.util.sketch.BloomFilterImpl"
@@ -220,21 +194,39 @@ def test_spark_bloom_probe_v1_wire(spark):
     args[0] = jvm.java.lang.Integer(6)
     args[1] = jvm.java.lang.Long(1 << 16)
     jbf = ctor.newInstance(args)
-    for k in range(0, 5000, 7):
-        jbf.putLong(k)
+    for k in members:
+        jbf.putLong(int(k))
     baos = jvm.java.io.ByteArrayOutputStream()
     jbf.writeTo(baos)
-    blob = bytes(baos.toByteArray())
-    sbf = SparkBloomFilter.from_bytes(blob)
-    assert sbf.version == 1 and sbf.num_hashes == 6
+    return bytes(baos.toByteArray())
+
+
+@pytest.mark.parametrize("version", [2, 1])
+def test_jvm_probe_matches_java_might_contain(spark, version):
+    """The jvm engine's probe (Catalyst's might_contain over the blob)
+    keeps exactly the keys java's BloomFilter.mightContain accepts, on
+    the V2 wire jvm_bloom_filter_bytes writes and on the V1 wire."""
+    from datasketches_spark.runtime_filter import _probe, jvm_bloom_filter_bytes
+
+    members = np.arange(0, 5000, 7)
+    if version == 2:
+        dim = spark.range(0, 5000, 7).withColumnRenamed("id", "d")
+        blob = jvm_bloom_filter_bytes(dim, "d", lg_m=16)
+    else:
+        blob = _java_v1_filter(spark, members)
+    assert int.from_bytes(blob[:4], "big") == version
+    jvm = spark.sparkContext._jvm
+    jbf = jvm.org.apache.spark.util.sketch.BloomFilter.readFrom(
+        jvm.java.io.ByteArrayInputStream(bytearray(blob))
+    )
     rng = np.random.default_rng(9)
     keys = np.concatenate(
-        [np.arange(0, 5000, 7), rng.integers(-(10**12), 10**12, 500)]
+        [members, rng.integers(-(10**12), 10**12, 500)]
     ).astype(np.int64)
-    ours = sbf.contains_longs(keys)
-    theirs = np.array([jbf.mightContain(int(k)) for k in keys])
-    assert (ours == theirs).all()
-    assert ours[: len(range(0, 5000, 7))].all()
+    fact = spark.createDataFrame(pd.DataFrame({"k": keys}))
+    kept = {r["k"] for r in fact.where(_probe(fact, "k", blob, "jvm")).collect()}
+    assert kept == {int(k) for k in keys if jbf.mightContain(int(k))}
+    assert set(members.tolist()) <= kept  # members always hit
 
 
 def test_bloom_prune_engines_agree(spark):
@@ -255,6 +247,21 @@ def test_bloom_prune_engines_agree(spark):
     assert {str(k) for k in expect} <= got
     with pytest.raises(ValueError, match="engine"):
         bloom_prune(fact, "k", dim, "d", engine="nope")
+
+
+@pytest.mark.parametrize("engine", ["jvm", "python", "apache"])
+@pytest.mark.parametrize("dim_rows", ["empty", "all_null"])
+def test_bloom_prune_empty_dim_keeps_nothing(spark, engine, dim_rows):
+    """A dimension with no non-NULL key builds an empty filter on every
+    engine (Spark's stat().bloomFilter alone throws on such input)."""
+    from datasketches_spark import bloom_prune
+
+    fact = spark.range(0, 100).withColumnRenamed("id", "k")
+    if dim_rows == "empty":
+        dim = spark.range(0, 100).withColumnRenamed("id", "d").where("d < 0")
+    else:
+        dim = spark.range(0, 100).selectExpr("CAST(NULL AS BIGINT) AS d")
+    assert bloom_prune(fact, "k", dim, "d", lg_m=12, engine=engine).count() == 0
 
 
 def test_jvm_engine_integral_widths_no_false_negatives(spark):

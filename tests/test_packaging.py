@@ -30,7 +30,7 @@ def test_declared_deps_match_imports():
     deps = {d.split(">=")[0].split("==")[0].strip() for d in proj["dependencies"]}
     assert {"pyspark", "numpy", "pandas", "pyarrow"} <= deps
     # import-gated optional tiers: distribution name -> import name
-    extra_mods = {"pillow": "PIL", "opencv-python-headless": "cv2", "protobuf": "google"}
+    extra_mods = {"pillow": "PIL", "opencv-python-headless": "cv2"}
     for group in proj["optional-dependencies"].values():
         for d in group:
             dist = d.split(">=")[0].split("==")[0].strip()

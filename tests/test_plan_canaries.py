@@ -21,6 +21,9 @@ pattern, tests/test_arrow_sentinel_canary.py):
 5. sketch-table reads: a warm ``io.read_sketch_table`` plus a scalar
    query runs exactly one job (the read's schema inference and family
    check are remembered for an unchanged file listing).
+6. jvm Bloom engine: ``bloom_prune`` plans Catalyst's ``might_contain``
+   Filter with no Python node, and ``bloom_pruned_anti_join`` pushes
+   ``IsNotNull(key)`` into both probed fact scans.
 """
 
 import pytest
@@ -152,3 +155,40 @@ class TestWarmSketchTableQuery:
         rows, jobs = job_count(query)
         assert len(rows) == 8
         assert jobs == 1
+
+
+class TestJvmBloomProbe:
+    _PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython")
+
+    @pytest.fixture()
+    def fact(self, spark, tmp_path):
+        path = str(tmp_path / "fact")
+        spark.range(0, 2000).selectExpr("id AS k", "id % 7 AS v").write.parquet(path)
+        return spark.read.parquet(path)
+
+    def test_bloom_prune_is_a_might_contain_filter(self, spark, fact):
+        from datasketches_spark.runtime_filter import bloom_prune
+
+        dim = spark.range(0, 2000, 9).withColumnRenamed("id", "d")
+        plan = compat.physical_plan_string(
+            bloom_prune(fact, "k", dim, "d", lg_m=12, engine="jvm")
+        )
+        assert not any(n in plan for n in self._PYTHON_NODES), plan
+        assert any(
+            _is_node(ln, "Filter") and "might_contain(" in ln
+            for ln in plan.splitlines()
+        ), "jvm probe is no longer Catalyst's might_contain"
+
+    def test_anti_join_pushes_is_not_null_into_both_fact_scans(self, spark, fact):
+        from datasketches_spark.runtime_filter import bloom_pruned_anti_join
+
+        drop = spark.createDataFrame([(i,) for i in range(0, 2000, 5)], "k long")
+        plan = compat.physical_plan_string(
+            bloom_pruned_anti_join(fact, drop, "k", lg_m=12, engine="jvm")
+        )
+        assert not any(n in plan for n in self._PYTHON_NODES), plan
+        probed = [
+            ln for ln in plan.splitlines()
+            if _is_node(ln, "FileScan parquet") and "PushedFilters: [IsNotNull(k)]" in ln
+        ]
+        assert len(probed) == 2, plan

@@ -18,7 +18,7 @@ map-side-combine pattern (SURVEY.md §3):
 
 At 100 TB this shuffles kilobytes per (group x input-partition) instead
 of the raw rows, and the map phase is embarrassingly parallel.  The
-alternative single-phase pandas grouped-agg UDFs (functions/aggregates)
+alternative single-phase grouped-agg Arrow UDFs (functions/aggregates)
 are provided for SQL ergonomics but shuffle raw rows; use this module
 for large inputs.
 

@@ -4,8 +4,10 @@ This is the glue the Spark layer (aggregation.py, functions/) uses so
 that every aggregate behaves like the reference's overload sets: fed
 raw values it *builds*, fed sketch blobs it *merges* (reference
 docs/README.md:346-348 -- "This same aggregate function can perform a
-union of multiple sketches").  Dispatch is on the pandas dtype of the
-incoming batch: binary -> merge, anything else -> build.
+union of multiple sketches").  Dispatch is on the declared Spark/Arrow
+type of the input (:func:`spark_value_kind`, :func:`from_arrow`):
+binary -> merge, anything else -> build, through :func:`prepare` and
+:func:`update_prepared` (composed by :func:`fold`).
 """
 
 from __future__ import annotations
@@ -312,6 +314,59 @@ def update_prepared(family: str, sk, values, blobs: bool = False) -> None:
         sk.update_hashes(*values)
     else:  # pragma: no cover
         raise ValueError(f"unknown sketch family: {family}")
+
+
+def from_arrow(arr) -> "tuple[pd.Series, str | None, bool]":
+    """``(series, kind, blobs)`` of an Arrow UDF argument: the Series a
+    pandas UDF would see (pyspark converts with the same options), the
+    :func:`coerce_value_batch` kind of its type and whether it carries
+    sketch blobs (a BINARY column merges)."""
+    import pyarrow as pa
+
+    series = arr.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    if pa.types.is_timestamp(arr.type) and arr.type.tz is not None:
+        series = series.dt.tz_localize(None)  # session-local wall time
+    kind = "int64" if pa.types.is_integer(arr.type) else None
+    blobs = pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
+    return series, kind, blobs
+
+
+def aod_summaries(arrays, width: "int | None" = None, name: str = "datasketch_aod"):
+    """The aod summary matrix of an ``array<double>`` column (one row
+    per input row, as a DataFrame :func:`prepare` takes for ``weights``)
+    under SQL SUM rules: a NULL array or element counts as 0.0 and the
+    key is still seen.  Every array must have the same length: that of
+    the first non-NULL one, at least ``width``."""
+    first = next((a for a in arrays if a is not None), None)
+    m = max(1 if first is None else len(first), width or 0)
+    mat = np.zeros((len(arrays), m), dtype=np.float64)
+    for i, a in enumerate(arrays):
+        if a is not None:
+            if len(a) != m:
+                raise ValueError(
+                    f"{name}: summary arrays must have a constant length "
+                    f"(got {len(a)}, expected {m})"
+                )
+            mat[i] = np.asarray(a, dtype=np.float64)
+    return pd.DataFrame(mat)
+
+
+def fold(sk, family: str, k, series: pd.Series, kind=None, blobs=False, weights=None):
+    """Fold one batch into ``sk``, creating it on first sight
+    (``sk is None``) from ``k`` and the prepared values' dtype;
+    returns the sketch.  ``weights``: sampling weights, or the
+    :func:`aod_summaries` of an aod build."""
+    values = prepare(family, series, kind, blobs, weights)[0]
+    if sk is None:
+        params = build_params(family, k, None if blobs else values)
+        if family == "aod" and weights is not None:
+            from .sketches.tuple_aod import DEFAULT_LG_K
+
+            params.setdefault("lg_k", DEFAULT_LG_K)
+            params["num_values"] = weights.shape[1]
+        sk = create_sketch(family, params)
+    update_prepared(family, sk, values, blobs)
+    return sk
 
 
 def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> None:

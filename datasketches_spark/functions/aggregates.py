@@ -1,4 +1,4 @@
-"""Sketch-building aggregate functions as pandas grouped-agg UDFs.
+"""Sketch-building aggregate functions as grouped-agg Arrow UDFs.
 
 These give the same SQL surface as the reference's aggregate
 registrations (codegen/generated.cpp.j2:731-788, theta
@@ -7,7 +7,14 @@ t GROUP BY g``, usable from ``spark.sql``, ``df.groupBy().agg`` and
 window frames.  Fed raw values they build; fed sketch blobs they merge
 (the reference's create/merge overload pair).
 
-SCALE NOTE: Spark executes pandas grouped-agg UDFs without partial
+Each aggregate receives its group as ``pyarrow.Array`` arguments, so
+the declared column type picks the path: a BINARY column merges, an
+integral one keeps int64 hashing even when the group holds a NULL
+(a pandas UDF would see that group as float64 and hash doubles).  The
+group is folded by :func:`~datasketches_spark.families.fold` -- the
+same ``prepare`` / ``update_prepared`` pair as the scale path.
+
+SCALE NOTE: Spark executes grouped-agg Python UDFs without partial
 aggregation -- raw rows shuffle to the reducer.  That is fine for
 interactive SQL and small groups; the 100 TB path is
 ``datasketches_spark.aggregation.sketch_agg`` (map-side combine,
@@ -27,36 +34,48 @@ validate the first value per group -- same effect, validated lazily.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 
-from ..families import build_params, create_sketch, update_sketch
-
-
-def _finalize(family: str, sk) -> bytes | None:
-    if family not in ("theta", "frequent_items") and sk.is_empty:
-        return None  # generated families: NULL on empty input
-    return sk.serialize()
+from ..families import aod_summaries, fold, from_arrow
 
 
-def _agg_with_k(family: str):
-    @pandas_udf("binary")
-    def agg(k: pd.Series, v: pd.Series) -> bytes:
-        kk = k.dropna()
-        kval = int(kk.iloc[0]) if kk.size else None
-        sk = create_sketch(family, build_params(family, kval, v))
-        update_sketch(family, sk, v)
-        return _finalize(family, sk)
+def _aggregate(family: str, with_k: bool = True, extra: "str | None" = None):
+    """The grouped-agg UDF of ``family``: an optional leading constant
+    K, the value column, and for ``extra="weight"`` a per-row sampling
+    weight or for ``extra="summary"`` an aod ``array<double>`` summary
+    column (either one makes the call a build, whatever the value
+    column's type)."""
 
-    return agg
+    def run(k, v, w=None) -> bytes | None:
+        k = None if k is None else k.drop_null()
+        k = int(k[0].as_py()) if k is not None and len(k) else None
+        series, kind, blobs = from_arrow(v)
+        weights = None if w is None else from_arrow(w)[0]
+        if extra == "summary":
+            weights = aod_summaries(weights.tolist())
+        sk = fold(None, family, k, series, kind, blobs and w is None, weights)
+        if family not in ("theta", "frequent_items") and sk.is_empty:
+            return None  # generated families: NULL on empty input
+        return sk.serialize()
 
+    if extra is not None:
 
-def _agg_default(family: str):
-    @pandas_udf("binary")
-    def agg(v: pd.Series) -> bytes:
-        sk = create_sketch(family, build_params(family, None, v))
-        update_sketch(family, sk, v)
-        return _finalize(family, sk)
+        @arrow_udf("binary")
+        def agg(k: pa.Array, v: pa.Array, w: pa.Array) -> bytes:
+            return run(k, v, w)
+
+    elif with_k:
+
+        @arrow_udf("binary")
+        def agg(k: pa.Array, v: pa.Array) -> bytes:
+            return run(k, v)
+
+    else:
+
+        @arrow_udf("binary")
+        def agg(v: pa.Array) -> bytes:
+            return run(None, v)
 
     return agg
 
@@ -65,82 +84,49 @@ def build_aggregate_registry() -> dict[str, object]:
     reg: dict[str, object] = {}
     # generated families: K is a required leading argument
     for fam in ("quantiles", "kll", "req", "tdigest", "hll", "cpc"):
-        reg[f"datasketch_{fam}"] = _agg_with_k(fam)
+        reg[f"datasketch_{fam}"] = _aggregate(fam)
     # beyond-reference string-items KLL (Apache KllItemsSketch +
     # ArrayOfStringsSerDe wire — sketches/kll_items.py): quantiles
     # over ordered strings; same K-leading convention, blobs merge
-    reg["datasketch_kll_items"] = _agg_with_k("kll_items")
+    reg["datasketch_kll_items"] = _aggregate("kll_items")
     # the union aggregates are the same machinery fed blobs
     # (DSHLLMergeOperation, codegen/generated.cpp.j2:429-450)
-    reg["datasketch_hll_union"] = _agg_with_k("hll")
-    reg["datasketch_cpc_union"] = _agg_with_k("cpc")
+    reg["datasketch_hll_union"] = _aggregate("hll")
+    reg["datasketch_cpc_union"] = _aggregate("cpc")
     # hand-written families default their size parameter; Spark UDFs
     # cannot overload arity, so the K-taking variant gets a `_lgk` name
-    reg["datasketch_theta"] = _agg_default("theta")
-    reg["datasketch_theta_lgk"] = _agg_with_k("theta")
-    reg["datasketch_frequent_items"] = _agg_default("frequent_items")
-    reg["datasketch_frequent_items_lgk"] = _agg_with_k("frequent_items")
-    # beyond-reference Bloom filter family: K argument is lg(num_bits)
-    reg["datasketch_bloom"] = _agg_with_k("bloom")
-    reg["datasketch_bloom_union_agg"] = _agg_with_k("bloom")
-    # beyond-reference APACHE BloomFilter (filters.bloomfilter wire,
-    # XXH64 bits byte-identical to datasketches-java —
-    # sketches/bloom_apache.py): same K convention; fixed 6 hashes,
-    # seed 9001 (java's builder draws a random seed; a pinned one is
-    # what makes filters reproducible and cross-system mergeable)
-    reg["datasketch_bloomfilter"] = _agg_with_k("bloomfilter")
-    reg["datasketch_bloomfilter_union_agg"] = _agg_with_k("bloomfilter")
-    # beyond-reference FDT (frequent distinct tuples, Apache generic-
-    # tuple wire — sketches/fdt.py): datasketch_fdt(lg_k, array(dims))
-    # samples DISTINCT string tuples; *_top_groups post-processes
-    reg["datasketch_fdt"] = _agg_with_k("fdt")
-    reg["datasketch_fdt_union_agg"] = _agg_with_k("fdt")
-    # beyond-reference reservoir sample: K is the sample size
-    reg["datasketch_reservoir"] = _agg_with_k("reservoir")
-    reg["datasketch_reservoir_union_agg"] = _agg_with_k("reservoir")
-
-    # weight-proportional variant (Efraimidis-Spirakis keys): the
-    # third argument is the per-row weight
-    @pandas_udf("binary")
-    def reservoir_weighted(k: pd.Series, v: pd.Series, w: pd.Series) -> bytes:
-        kk = k.dropna()
-        kval = int(kk.iloc[0]) if kk.size else None
-        sk = create_sketch("reservoir", build_params("reservoir", kval, v))
-        sk.update_series(v, weights=w)
-        return None if sk.is_empty else sk.serialize()
-
-    reg["datasketch_reservoir_weighted"] = reservoir_weighted
-    # beyond-reference EBPPS: exact-PPS bounded sample (Apache's third
-    # sampling family; sketches/ebpps.py). K is the max sample size.
-    reg["datasketch_ebpps"] = _agg_with_k("ebpps")
-    reg["datasketch_ebpps_union_agg"] = _agg_with_k("ebpps")
-
-    @pandas_udf("binary")
-    def ebpps_weighted(k: pd.Series, v: pd.Series, w: pd.Series) -> bytes:
-        kk = k.dropna()
-        kval = int(kk.iloc[0]) if kk.size else None
-        sk = create_sketch("ebpps", build_params("ebpps", kval, v))
-        sk.update_series(v, weights=w)
-        return None if sk.is_empty else sk.serialize()
-
-    reg["datasketch_ebpps_weighted"] = ebpps_weighted
-    # beyond-reference Count-Min: K argument is lg(width)
-    reg["datasketch_cms"] = _agg_with_k("cms")
-    reg["datasketch_cms_union_agg"] = _agg_with_k("cms")
+    reg["datasketch_theta"] = _aggregate("theta", with_k=False)
+    reg["datasketch_theta_lgk"] = _aggregate("theta")
+    reg["datasketch_frequent_items"] = _aggregate("frequent_items", with_k=False)
+    reg["datasketch_frequent_items_lgk"] = _aggregate("frequent_items")
+    # beyond-reference families, each with a `_union_agg` twin (the
+    # same aggregate; the name documents a blob input):
+    # - bloom: K argument is lg(num_bits);
+    # - bloomfilter: the APACHE BloomFilter (filters.bloomfilter wire,
+    #   XXH64 bits byte-identical to datasketches-java —
+    #   sketches/bloom_apache.py), same K; fixed 6 hashes, seed 9001
+    #   (java's builder draws a random seed; a pinned one is what makes
+    #   filters reproducible and cross-system mergeable);
+    # - fdt: frequent distinct tuples (Apache generic-tuple wire —
+    #   sketches/fdt.py), datasketch_fdt(lg_k, array(dims)) samples
+    #   DISTINCT string tuples; *_top_groups post-processes;
+    # - reservoir: K is the sample size;
+    # - ebpps: exact-PPS bounded sample (Apache's third sampling
+    #   family; sketches/ebpps.py), K is the max sample size;
+    # - cms: Count-Min, K argument is lg(width).
+    for fam in ("bloom", "bloomfilter", "fdt", "reservoir", "ebpps", "cms"):
+        reg[f"datasketch_{fam}"] = _aggregate(fam)
+        reg[f"datasketch_{fam}_union_agg"] = _aggregate(fam)
+    # weight-proportional samples (Efraimidis-Spirakis keys for
+    # reservoir): the third argument is the per-row weight
+    for fam in ("reservoir", "ebpps"):
+        reg[f"datasketch_{fam}_weighted"] = _aggregate(fam, extra="weight")
     # beyond-reference exact summary stats (sketches/stats.py): no K;
-    # like every family the same aggregate also merges blobs
-    reg["datasketch_stats"] = _agg_default("stats")
-
-    # the union variant declares merge context so an all-NULL blob
-    # group yields an empty state (NULL) instead of counting NULL blob
-    # rows into n (families.update_sketch merge hint)
-    @pandas_udf("binary")
-    def stats_union(v: pd.Series) -> bytes:
-        sk = create_sketch("stats", build_params("stats", None, v))
-        update_sketch("stats", sk, v, merge=True)
-        return _finalize("stats", sk)
-
-    reg["datasketch_stats_union_agg"] = stats_union
+    # like every family the same aggregate also merges blobs, and a
+    # BINARY column is a merge even when every blob is NULL (an empty
+    # state, NULL -- not NULL rows counted into n)
+    reg["datasketch_stats"] = _aggregate("stats", with_k=False)
+    reg["datasketch_stats_union_agg"] = _aggregate("stats", with_k=False)
 
     # beyond-reference ArrayOfDoubles tuple family (Apache tuple wire,
     # sketches/tuple_aod.py): distinct keys + element-wise-summed
@@ -148,46 +134,19 @@ def build_aggregate_registry() -> dict[str, object]:
     #   datasketch_aod(lg_k, key, array(v1, v2, ...))
     # NULL keys skip the row; NULL summary arrays and NULL/NaN
     # elements contribute zeros (SQL SUM semantics — the additive
-    # identity; Arrow delivers NULL array elements as NaN, so the two
-    # are indistinguishable here) and the key still counts as seen.
-    # The same rule holds on every Spark entry point
+    # identity; families.aod_summaries) and the key still counts as
+    # seen.  The same rule holds on every Spark entry point
     # (tuple_sketch_agg, the UDTF) — paths agree by construction.
-    @pandas_udf("binary")
-    def aod_agg(k: pd.Series, key: pd.Series, vals: pd.Series) -> bytes:
-        import numpy as np
+    reg["datasketch_aod"] = _aggregate("aod", extra="summary")
 
-        from ..sketches.tuple_aod import AodSketch, DEFAULT_LG_K
-
-        kk = k.dropna()
-        lgk = int(kk.iloc[0]) if kk.size else DEFAULT_LG_K
-        first = next((v for v in vals if v is not None), None)
-        m = len(first) if first is not None else 1
-        sk = AodSketch(lgk, m)
-        mat = np.zeros((len(vals), m), dtype=np.float64)
-        for i, v in enumerate(vals):
-            if v is not None:
-                if len(v) != m:
-                    raise ValueError(
-                        "datasketch_aod: summary arrays must have a "
-                        f"constant length (got {len(v)}, expected {m})"
-                    )
-                mat[i] = np.nan_to_num(
-                    np.asarray(v, dtype=np.float64),
-                    nan=0.0, posinf=np.inf, neginf=-np.inf,
-                )
-        sk.update_batch(key, mat)
-        return None if sk.is_empty else sk.serialize()
-
-    reg["datasketch_aod"] = aod_agg
-
-    @pandas_udf("binary")
-    def aod_union_agg(v: pd.Series) -> bytes:
+    @arrow_udf("binary")
+    def aod_union_agg(v: pa.Array) -> bytes:
         from ..sketches.tuple_aod import AodSketch
 
         # accumulate at the MINIMUM input lg_k (Apache mixed-K union
         # degradation) rather than a fixed default — same-k blobs
         # union LOSSLESSLY regardless of how large their k is
-        sks = [AodSketch.deserialize(bytes(b)) for b in v.dropna()]
+        sks = [AodSketch.deserialize(b) for b in v.drop_null().to_pylist()]
         if not sks:
             return None
         out = AodSketch(min(s.lg_k for s in sks), sks[0].num_values)

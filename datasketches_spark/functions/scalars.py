@@ -1,4 +1,8 @@
-"""Scalar sketch-query functions as Arrow-vectorized pandas UDFs.
+"""Scalar sketch-query functions as Arrow-vectorized UDFs.
+
+Queries of the sketch alone are pandas UDFs; the item probes are Arrow
+UDFs, so the probed column's declared type reaches the coercion
+(:func:`_item_probe`).
 
 One UDF per reference scalar name (SURVEY.md §2.2 tables; generated
 spec /root/reference/codegen/generator.py:132-528, hand-written Theta
@@ -27,8 +31,10 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
+from ..families import coerce_value_batch, from_arrow
 from ..murmur import DEFAULT_SEED_HASH
 from ..sketches import (
     AodSketch,
@@ -173,6 +179,34 @@ def _with_args(cls, fn: Callable, ret: str, nargs: int, opt: tuple = ()):
                         for sk, x, y in zip(sks, a, b)
                     ]
                 )
+
+    return udf
+
+
+def _item_probe(cls, probe: Callable, ret: str):
+    """UDF for ``probe(sketch, items) -> one result per item``: Bloom
+    membership, Count-Min and frequent-items counts.
+
+    Items are coerced with the kind of their declared type, so a NULL
+    in a BIGINT batch does not turn 5 into 5.0 (which hashes as a
+    double and misses).  Rows are grouped per distinct blob: the common
+    case is one broadcast sketch probed by a whole column, which is
+    deserialized once and probed in one pass.  A NULL blob or item
+    gives NULL."""
+
+    @arrow_udf(ret)
+    def udf(s: pa.Array, items: pa.Array) -> pa.Array:
+        series, kind, _ = from_arrow(items)
+        out = np.full(len(s), None, dtype=object)
+        enc = s.dictionary_encode()
+        codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+        live = np.flatnonzero((codes >= 0) & series.notna().to_numpy())
+        order = live[np.argsort(codes[live], kind="stable")]
+        for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+            if idx.size:
+                sk = cls.deserialize(enc.dictionary[codes[idx[0]]].as_py())
+                out[idx] = list(probe(sk, coerce_value_batch(series.iloc[idx], kind)))
+        return pa.array(out.tolist(), type=pa.bool_() if ret == "boolean" else pa.int64())
 
     return udf
 
@@ -603,13 +637,10 @@ def build_scalar_registry() -> dict[str, object]:
     # ---- Frequent Items ----
     p = "datasketch_frequent_items_"
     F = FrequentItemsSketch
-    reg[p + "estimate"] = _with_args(F, lambda sk, it: int(sk.get_estimate(it)), "long", 1)
-    reg[p + "lower_bound"] = _with_args(
-        F, lambda sk, it: int(sk.get_lower_bound(it)), "long", 1
-    )
-    reg[p + "upper_bound"] = _with_args(
-        F, lambda sk, it: int(sk.get_upper_bound(it)), "long", 1
-    )
+    for q in ("estimate", "lower_bound", "upper_bound"):
+        reg[p + q] = _item_probe(
+            F, lambda sk, its, q=q: [int(getattr(sk, "get_" + q)(i)) for i in its], "long"
+        )
     reg[p + "epsilon"] = _unary(F, lambda sk: float(sk.epsilon), "double")
     reg[p + "total_weight"] = _unary(F, lambda sk: int(sk.total_weight()), "long")
     reg[p + "is_empty"] = _unary(F, lambda sk: bool(sk.is_empty), "boolean")
@@ -622,26 +653,9 @@ def build_scalar_registry() -> dict[str, object]:
     p = "datasketch_bloom_"
     B = BloomFilterSketch
 
-    @pandas_udf("boolean")
-    def _might_contain(s: pd.Series, items: pd.Series) -> pd.Series:
-        # vectorize per distinct blob: the common case is one broadcast
-        # filter probed by a whole column, so group row indices by blob
-        # and run one numpy membership pass per filter
-        out = pd.Series([None] * len(s), dtype=object)
-        if not len(s):
-            return out
-        frame_df = pd.DataFrame({"b": s, "i": range(len(s))})
-        for blob, sub in frame_df.dropna(subset=["b"]).groupby("b", sort=False):
-            sk = B.deserialize(bytes(blob))
-            vals = items.iloc[sub["i"].to_numpy()]
-            ok = vals.notna().to_numpy()
-            res = np.full(len(vals), None, dtype=object)
-            if ok.any():
-                res[ok] = sk.contains_values(vals[ok]).tolist()
-            out.iloc[sub["i"].to_numpy()] = res
-        return out
-
-    reg[p + "might_contain"] = _might_contain
+    reg[p + "might_contain"] = _item_probe(
+        B, lambda sk, its: sk.contains_values(its).tolist(), "boolean"
+    )
     reg[p + "union"] = _sketch_pair(B, bloom_union)
     reg[p + "intersect"] = _sketch_pair(B, bloom_intersect)
     reg[p + "estimate"] = _unary(B, lambda sk: float(sk.get_estimate()), "double")
@@ -655,8 +669,8 @@ def build_scalar_registry() -> dict[str, object]:
     # ---- Count-Min (beyond-reference; sketches/cms.py) ----
     p = "datasketch_cms_"
     C = CountMinSketch
-    reg[p + "estimate"] = _with_args(
-        C, lambda sk, it: int(sk.get_estimate(it)), "long", 1
+    reg[p + "estimate"] = _item_probe(
+        C, lambda sk, its: [int(sk.get_estimate(i)) for i in its], "long"
     )
     reg[p + "total_weight"] = _unary(C, lambda sk: int(sk.total_weight()), "long")
     reg[p + "epsilon"] = _unary(C, lambda sk: float(sk.epsilon), "double")
@@ -736,23 +750,9 @@ def build_scalar_registry() -> dict[str, object]:
     p = "datasketch_bloomfilter_"
     AB = ApacheBloomFilter
 
-    @pandas_udf("boolean")
-    def _abf_might_contain(s: pd.Series, items: pd.Series) -> pd.Series:
-        out = pd.Series([None] * len(s), dtype=object)
-        if not len(s):
-            return out
-        frame_df = pd.DataFrame({"b": s, "i": range(len(s))})
-        for blob, sub in frame_df.dropna(subset=["b"]).groupby("b", sort=False):
-            sk = AB.deserialize(bytes(blob))
-            vals = items.iloc[sub["i"].to_numpy()]
-            ok = vals.notna().to_numpy()
-            res = np.full(len(vals), None, dtype=object)
-            if ok.any():
-                res[ok] = sk.query_series(vals[ok]).tolist()
-            out.iloc[sub["i"].to_numpy()] = res
-        return out
-
-    reg[p + "might_contain"] = _abf_might_contain
+    reg[p + "might_contain"] = _item_probe(
+        AB, lambda sk, its: sk.query_series(its).tolist(), "boolean"
+    )
     reg[p + "union"] = _sketch_pair(AB, bloomfilter_union)
     reg[p + "intersect"] = _sketch_pair(AB, bloomfilter_intersect)
     reg[p + "is_empty"] = _unary(AB, lambda sk: bool(sk.is_empty), "boolean")

@@ -1,9 +1,9 @@
 """The two-phase blob-only scale plan from a pure ``spark.sql()`` entry.
 
-The pandas-UDAF registrations (``datasketch_theta(x)`` etc.) shuffle
-RAW ROWS to the reducer — Spark runs grouped-agg pandas UDFs without
-partial aggregation (documented trade-off in
-functions/aggregates.py).  DataFrame users get the scale plan through
+The SQL aggregates (``datasketch_theta(x)`` etc.) shuffle RAW ROWS to
+the reducer — Spark runs grouped-agg Python UDFs without partial
+aggregation (documented trade-off in functions/aggregates.py).
+DataFrame users get the scale plan through
 :func:`datasketches_spark.aggregation.sketch_agg`; this module gives
 SQL-only users the same plan shape without leaving SQL:
 
@@ -45,13 +45,26 @@ the use case; from Python always prefer ``sketch_agg``.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import SparkSession
+from pyspark.sql.udtf import AnalyzeResult
 
 # Values buffered per group before they are folded into the group's
 # sketch.  64k doubles ≈ 512 KB raw (a few MB as a Python list) —
 # large enough to amortize the pandas/update call, small enough that a
 # fat partition cannot blow out executor memory.
 FLUSH_ROWS = 65536
+
+
+@dataclass
+class _Declared(AnalyzeResult):
+    """The analyze result, plus what the value column's declared type
+    says: ``kind`` for :func:`~datasketches_spark.families.prepare`
+    and whether the column carries sketch blobs (BINARY)."""
+
+    kind: "str | None" = None
+    blobs: bool = False
 
 
 class DatasketchPartials:
@@ -64,18 +77,21 @@ class DatasketchPartials:
     FLUSH_ROWS × live groups (bounded-memory contract).
     """
 
-    def __init__(self):
+    def __init__(self, analyze_result: "_Declared | None" = None):
         self._buffers: dict[tuple, list] = {}
         self._sketches: dict[tuple, object] = {}
         self._family: str | None = None
         self._k = None
+        self._kind = getattr(analyze_result, "kind", None)
+        self._blobs = getattr(analyze_result, "blobs", False)
         self._buffered = 0
         self.max_buffered = 0
 
     @staticmethod
     def analyze(table, family, k=None):
-        from pyspark.sql.functions import AnalyzeResult
         from pyspark.sql.types import BinaryType, StructType
+
+        from ..families import spark_value_kind
 
         if not isinstance(table.dataType, StructType):
             raise ValueError("first argument must be TABLE(...)")
@@ -85,22 +101,23 @@ class DatasketchPartials:
                 "family must be a constant string, e.g. 'theta'"
             )
         n_val = 2 if fam in ("reservoir_weighted", "aod") else 1
-        if len(table.dataType.fields) < n_val:
-            raise ValueError(
-                "TABLE argument needs a value column"
-                + (
-                    " and a weight column"
-                    if fam == "reservoir_weighted"
-                    else " (key) and a summary array column"
-                    if fam == "aod"
-                    else ""
-                )
-            )
+        fields = table.dataType.fields
+        if len(fields) < n_val:
+            raise ValueError("TABLE argument needs a value column" + {
+                "reservoir_weighted": " and a weight column",
+                "aod": " (key) and a summary array column",
+            }.get(fam, ""))
         out = StructType()
-        for f in table.dataType.fields[:-n_val]:
+        for f in fields[:-n_val]:
             out = out.add(f.name, f.dataType)
         out = out.add("sketch", BinaryType())
-        return AnalyzeResult(schema=out)
+        value_type = fields[-n_val].dataType
+        return _Declared(
+            schema=out,
+            kind=spark_value_kind(value_type),
+            # a weighted or aod call builds whatever the value type
+            blobs=n_val == 1 and isinstance(value_type, BinaryType),
+        )
 
     def _flush(self, key) -> None:
         vals = self._buffers[key]
@@ -108,58 +125,26 @@ class DatasketchPartials:
             return
         import pandas as pd
 
-        from ..families import build_params, create_sketch, update_sketch
+        from ..families import aod_summaries, fold
 
-        weighted = self._family == "reservoir_weighted"
-        if self._family == "aod":
-            # (key, summary-array) pairs -> ArrayOfDoubles tuple sketch
-            import numpy as np
-
-            from ..sketches.tuple_aod import AodSketch
-
-            first = next((a for _, a in vals if a is not None), None)
-            m = len(first) if first is not None else 1
-            sk = self._sketches.get(key)
-            if sk is None:
-                sk = self._sketches[key] = AodSketch(
-                    int(self._k) if self._k is not None else 12, m
+        fam, weights, sk = self._family, None, self._sketches.get(key)
+        if fam in ("reservoir_weighted", "aod"):
+            vals, extra = zip(*vals)
+            if fam == "aod":
+                weights = aod_summaries(
+                    extra, None if sk is None else sk.num_values,
+                    "datasketch_partials('aod')",
                 )
-            elif m > sk.num_values:
-                # an earlier flush saw only NULL arrays (zero
-                # summaries) — widen it now that the width is known
-                sk._widen_to(m)
-            mat = np.zeros((len(vals), sk.num_values), dtype=np.float64)
-            for i, (_, a) in enumerate(vals):
-                if a is not None:
-                    if len(a) != sk.num_values:
-                        raise ValueError(
-                            "datasketch_partials('aod'): summary arrays "
-                            f"must have a constant length (got {len(a)}, "
-                            f"expected {sk.num_values})"
-                        )
-                    mat[i] = np.nan_to_num(
-                        np.asarray(a, dtype=np.float64),
-                        nan=0.0, posinf=np.inf, neginf=-np.inf,
-                    )
-            sk.update_batch(pd.Series([kv for kv, _ in vals]), mat)
-            self._buffered -= len(vals)
-            self._buffers[key] = []
-            return
-        fam = "reservoir" if weighted else self._family
-        if weighted:
-            s = pd.Series([v for v, _ in vals])
-            w = pd.Series([wt for _, wt in vals], dtype="float64")
-        else:
-            s = pd.Series(vals)
-        sk = self._sketches.get(key)
-        if sk is None:
-            sk = create_sketch(fam, build_params(fam, self._k, s))
-            self._sketches[key] = sk
-        if weighted:
-            sk.update_series(s, weights=w)
-        else:
-            update_sketch(fam, sk, s)
-        self._buffered -= len(vals)
+                if sk is not None and weights.shape[1] > sk.num_values:
+                    # an earlier flush saw only NULL arrays (zero
+                    # summaries) — widen it now that the width is known
+                    sk._widen_to(weights.shape[1])
+            else:
+                fam, weights = "reservoir", pd.Series(extra, dtype="float64")
+        self._sketches[key] = fold(
+            sk, fam, self._k, pd.Series(list(vals)), self._kind, self._blobs, weights
+        )
+        self._buffered -= len(self._buffers[key])
         self._buffers[key] = []
 
     def eval(self, row, family: str, k=None):
@@ -178,9 +163,9 @@ class DatasketchPartials:
                 # a NULL summary array still counts the key (zeros)
         else:
             key, v = tuple(vals[:-1]), vals[-1]
-            if v is None:
-                # NULLs are skipped and never register the group (parity
-                # with the r10 behavior and the UDAF NULL-skipping idiom)
+            if v is None and family != "stats":
+                # NULLs are skipped and never register the group; stats
+                # counts them into n, as on every other route
                 return
         buf = self._buffers.setdefault(key, [])
         buf.append(v)

@@ -14,9 +14,10 @@ one row per group -- O(groups) state regardless of stream length,
 which is the whole point of sketches as streaming state.
 
 ``foreachBatch`` is used instead of a streaming groupBy().agg because
-pandas grouped-agg UDAFs cannot participate in Spark's incremental
-streaming aggregation; the blob store *is* the state store here, and
-restarts resume from it idempotently per epoch via checkpointing.
+Python grouped-agg UDFs (the SQL sketch aggregates) cannot participate
+in Spark's incremental streaming aggregation; the blob store *is* the
+state store here, and restarts resume from it idempotently per epoch
+via checkpointing.
 """
 
 from __future__ import annotations
@@ -28,20 +29,56 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregation import sketch_agg, sketch_merge, sketch_partial
+from .families import spark_value_kind
 
 
-def _value_kind(df: DataFrame, input_col: str) -> "str | None":
-    """Spark-side type hint for families.coerce_value_batch (nullable
-    integral batches arrive float64 in the Arrow workers)."""
-    from .families import spark_value_kind
+class _EpochGuard:
+    """foreachBatch replay guard for a store at ``self.path``.
 
-    try:
-        return spark_value_kind(df.schema[input_col].dataType)
-    except Exception:  # schema lookup can fail for expression inputs
-        return None
+    foreachBatch is at-least-once: after a failure the same epoch can
+    be delivered again.  Distinct sketches (theta/hll/cpc/bloom) are
+    replay-idempotent by set semantics, but quantile / frequent-items /
+    reservoir state double-counts.  Recording the last absorbed epoch
+    and skipping <= it makes replays no-ops.  (A crash between the
+    parquet commit and the marker write degrades that one batch to
+    at-least-once — the window is tiny and counting families are
+    unaffected; full exactly-once needs a transactional table format.)
+    """
+
+    path: str
+
+    def _last_epoch(self) -> int:
+        try:
+            with open(self.path + "__last_epoch", encoding="ascii") as f:
+                return int(f.read().strip())
+        except (OSError, ValueError):
+            return -1
+
+    def _record_epoch(self, epoch_id: int) -> None:
+        try:
+            with open(self.path + "__last_epoch", "w", encoding="ascii") as f:
+                f.write(str(epoch_id))
+        except OSError:  # non-local store path: skip the guard
+            pass
+
+    def _guarded(
+        self, step: Callable[[DataFrame, int], None]
+    ) -> Callable[[DataFrame, int], None]:
+        """The foreachBatch function: skip a replayed epoch and an
+        empty batch, run ``step``, then record the epoch."""
+
+        def fn(batch_df: DataFrame, epoch_id: int) -> None:
+            if epoch_id <= self._last_epoch():
+                return  # replayed epoch: already folded in
+            if batch_df.isEmpty():
+                return
+            step(batch_df, epoch_id)
+            self._record_epoch(epoch_id)
+
+        return fn
 
 
-class SketchStore:
+class SketchStore(_EpochGuard):
     """Parquet-backed store of one sketch blob per group key."""
 
     def __init__(
@@ -92,47 +129,12 @@ class SketchStore:
         # A crash mid-overwrite can still lose the store (true of the
         # staging variant too: its final write had the same window);
         # durable state needs a transactional table format, as the
-        # replay-guard note below already says.
+        # replay-guard note on _EpochGuard already says.
         merged = merged.localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(self.path)
 
-    # -- replay guard -----------------------------------------------------
-    # foreachBatch is at-least-once: after a failure the same epoch can
-    # be delivered again.  Distinct sketches (theta/hll/cpc/bloom) are
-    # replay-idempotent by set semantics, but quantile / frequent-items /
-    # reservoir state double-counts.  Recording the last absorbed epoch
-    # and skipping <= it makes replays no-ops.  (A crash between the
-    # parquet commit and the marker write degrades that one batch to
-    # at-least-once — the window is tiny and counting families are
-    # unaffected; full exactly-once needs a transactional table format.)
-
-    def _epoch_marker(self) -> str:
-        return self.path + "__last_epoch"
-
-    def _last_epoch(self) -> int:
-        try:
-            with open(self._epoch_marker(), encoding="ascii") as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def _record_epoch(self, epoch_id: int) -> None:
-        try:
-            with open(self._epoch_marker(), "w", encoding="ascii") as f:
-                f.write(str(epoch_id))
-        except OSError:  # non-local store path: skip the guard
-            pass
-
     def foreach_batch(self, input_col: str) -> Callable[[DataFrame, int], None]:
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self._last_epoch():
-                return  # replayed epoch: already folded in
-            if batch_df.isEmpty():
-                return
-            self.absorb(batch_df, input_col)
-            self._record_epoch(epoch_id)
-
-        return fn
+        return self._guarded(lambda batch_df, _: self.absorb(batch_df, input_col))
 
 
 class PartitionedSketchStore(SketchStore):
@@ -165,9 +167,6 @@ class PartitionedSketchStore(SketchStore):
     ):
         super().__init__(path, family, group_cols, k, sketch_col)
         self.bucket_col = bucket_col
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
 
     def absorb(self, batch_df: DataFrame, input_col: str) -> None:
         spark = batch_df.sparkSession
@@ -360,7 +359,7 @@ def stateful_sketch_stream(
         family, input_col, group_cols, k, idle_timeout_ms, metric,
         ts_col=ts_col if event_ttl_ms is not None else None,
         event_ttl_ms=event_ttl_ms,
-        value_kind=_value_kind(stream_df, input_col),
+        value_kind=spark_value_kind(stream_df.schema[input_col].dataType),
     )
     if ts_col is not None:
         # Spark's FlatMapGroupsWithStateExec applies the late-event
@@ -410,13 +409,7 @@ def _make_stateful_fn(
     float emitted as a trailing column (see stateful_sketch_stream)."""
     import pandas as pd
 
-    from .families import FAMILY_CLASSES as _BY_NAME
-    from .families import (
-        build_params,
-        coerce_value_batch,
-        create_sketch,
-        update_sketch,
-    )
+    from .families import FAMILY_CLASSES as _BY_NAME, fold
 
     cls = _BY_NAME[family]
     cols = group_cols + ["sketch", "rows_in_batch"]
@@ -446,10 +439,7 @@ def _make_stateful_fn(
         nrows = 0
         max_ts_ms = None
         for pdf in pdfs:
-            series = coerce_value_batch(pdf[input_col], value_kind)
-            if sk is None:
-                sk = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sk, series)
+            sk = fold(sk, family, k, pdf[input_col], value_kind)
             nrows += len(pdf)
             if ts_col is not None and len(pdf):
                 m = pdf[ts_col].max()
@@ -568,7 +558,7 @@ def streaming_dedup(
     )
 
 
-class SimhashDedupStore:
+class SimhashDedupStore(_EpochGuard):
     """Streaming NEAR-duplicate dedup: state = every seen row's 64-bit
     simhash signature, stored as an append-only parquet table beside
     the checkpoint.
@@ -652,21 +642,6 @@ class SimhashDedupStore:
     def absorb_signatures(self, sigs: DataFrame) -> None:
         sigs.write.mode("append").parquet(self._sig_path())
 
-    # -- replay guard (same shape as SketchStore) ------------------------
-    def _last_epoch(self) -> int:
-        try:
-            with open(self.path + "__last_epoch", encoding="ascii") as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def _record_epoch(self, epoch_id: int) -> None:
-        try:
-            with open(self.path + "__last_epoch", "w", encoding="ascii") as f:
-                f.write(str(epoch_id))
-        except OSError:
-            pass
-
     def foreach_batch(
         self,
         id_col: str,
@@ -677,22 +652,17 @@ class SimhashDedupStore:
         history, hand survivors to ``emit``, then absorb the batch's
         signatures (all of them — see the class contract)."""
 
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self._last_epoch():
-                return
-            if batch_df.isEmpty():
-                return
+        def step(batch_df: DataFrame, epoch_id: int) -> None:
             survivors, sigs = self.filter_new(batch_df, id_col, text_col)
             survivors = survivors.localCheckpoint(eager=True)
             emit(survivors, epoch_id)
             self.absorb_signatures(sigs)
-            self._record_epoch(epoch_id)
             sigs.unpersist()
 
-        return fn
+        return self._guarded(step)
 
 
-class BloomDedupStore:
+class BloomDedupStore(_EpochGuard):
     """Approximate cross-batch dedup with constant-size state: a single
     Bloom filter blob (2^lg_m bits) of every id ever emitted.
 
@@ -753,21 +723,6 @@ class BloomDedupStore:
             new.merge(BloomFilterSketch.deserialize(old_blob))
         self._write_blob(new.serialize())
 
-    # -- replay guard (same shape as SketchStore) ------------------------
-    def _last_epoch(self) -> int:
-        try:
-            with open(self.path + "__last_epoch", encoding="ascii") as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def _record_epoch(self, epoch_id: int) -> None:
-        try:
-            with open(self.path + "__last_epoch", "w", encoding="ascii") as f:
-                f.write(str(epoch_id))
-        except OSError:
-            pass
-
     def foreach_batch(
         self, id_col: str, emit: Callable[[DataFrame, int], None]
     ) -> Callable[[DataFrame, int], None]:
@@ -775,21 +730,16 @@ class BloomDedupStore:
         hand survivors to ``emit`` (write them wherever the pipeline
         goes), then fold their ids into the filter."""
 
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self._last_epoch():
-                return
-            if batch_df.isEmpty():
-                return
+        def step(batch_df: DataFrame, epoch_id: int) -> None:
             survivors = self.filter_new(batch_df, id_col)
             survivors = survivors.localCheckpoint(eager=True)
             emit(survivors, epoch_id)
             self.absorb_ids(survivors, id_col)
-            self._record_epoch(epoch_id)
 
-        return fn
+        return self._guarded(step)
 
 
-class NgramCountStore:
+class NgramCountStore(_EpochGuard):
     """Streaming corpus n-gram history for repeated-span dedup.
 
     The streaming face of pipeline/spans' stored-counts route: each
@@ -811,13 +761,6 @@ class NgramCountStore:
         self.text_col = text_col
         self.n = n
 
-    # epoch guard (shared contract with SketchStore)
-    def _epoch_marker(self) -> str:
-        return self.path + "__last_epoch"
-
-    _last_epoch = SketchStore._last_epoch
-    _record_epoch = SketchStore._record_epoch
-
     def exists(self, spark: SparkSession) -> bool:
         from . import compat
 
@@ -836,15 +779,7 @@ class NgramCountStore:
             )
 
     def foreach_batch(self) -> "Callable[[DataFrame, int], None]":
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self._last_epoch():
-                return
-            if batch_df.isEmpty():
-                return
-            self.absorb(batch_df)
-            self._record_epoch(epoch_id)
-
-        return fn
+        return self._guarded(lambda batch_df, _: self.absorb(batch_df))
 
     def compact(self, spark: SparkSession) -> None:
         """Fold appended partial rows (answers unchanged; bounds the
@@ -924,15 +859,7 @@ class CommonLineStore:
         self.store.absorb(self._lines(batch_df), self.id_col)
 
     def foreach_batch(self) -> "Callable[[DataFrame, int], None]":
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self.store._last_epoch():
-                return
-            if batch_df.isEmpty():
-                return
-            self.absorb(batch_df)
-            self.store._record_epoch(epoch_id)
-
-        return fn
+        return self.store._guarded(lambda batch_df, _: self.absorb(batch_df))
 
     def common_keys(self, spark: SparkSession, min_docs: int = 2) -> DataFrame:
         """Line keys whose stored distinct-doc estimate reaches
@@ -1012,15 +939,7 @@ class NgramCmsStore:
         self.store.absorb(self._ngrams(batch_df), "ng")
 
     def foreach_batch(self) -> "Callable[[DataFrame, int], None]":
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id <= self.store._last_epoch():
-                return
-            if batch_df.isEmpty():
-                return
-            self.absorb(batch_df)
-            self.store._record_epoch(epoch_id)
-
-        return fn
+        return self.store._guarded(lambda batch_df, _: self.absorb(batch_df))
 
     def _marked(self, df: DataFrame, min_count: int) -> DataFrame:
         """(id, start) positions whose n-gram's CMS estimate reaches

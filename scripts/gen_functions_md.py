@@ -310,7 +310,7 @@ lines.append("")
 lines.append(
     "- `datasketch_partials` (UDTF) — the two-phase BLOB-ONLY shuffle "
     "plan from pure `spark.sql()`.  The plain AGG registrations above "
-    "shuffle raw rows (Spark runs grouped-agg pandas UDFs without "
+    "shuffle raw rows (Spark runs grouped-agg Arrow UDFs without "
     "partial aggregation); this UDTF over an UNPARTITIONED table "
     "argument evaluates once per existing input partition with no "
     "exchange, emitting one sketch blob per (partition × group) — the "

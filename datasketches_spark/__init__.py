@@ -3,10 +3,10 @@
 Re-expresses the full query surface of the DuckDB DataSketches
 extension (Query-farm/datasketches, studied read-only at
 /root/reference) as idiomatic PySpark: sketch state is a BinaryType
-column, aggregates are map-side-combining two-phase jobs or pandas
-UDAFs, scalar queries are Arrow-vectorized pandas UDFs, and everything
+column, aggregates are map-side-combining two-phase jobs or grouped-agg
+Arrow UDFs, scalar queries are Arrow UDFs from one factory, and everything
 is registered into Spark SQL by :func:`register` -- the analog of the
-extension loader (/root/reference/src/datasketches_extension.cpp:30-46,
+extension loader (src/datasketches_extension.cpp:30-46 of the reference,
 minus the telemetry, which we deliberately do not replicate).
 
 Beyond reference parity, :mod:`datasketches_spark.pipeline` adds the

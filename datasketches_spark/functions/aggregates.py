@@ -46,8 +46,15 @@ def _aggregate(family: str, with_k: bool = True, extra: "str | None" = None):
     weight or for ``extra="summary"`` an aod ``array<double>`` summary
     column (either one makes the call a build, whatever the value
     column's type)."""
+    n_args = with_k + 1 + (extra is not None)
 
-    def run(k, v, w=None) -> bytes | None:
+    @arrow_udf("binary")
+    def agg(*cols: pa.Array) -> bytes:
+        if len(cols) != n_args:
+            raise TypeError(f"the {family} aggregate takes {n_args} arguments, got {len(cols)}")
+        if not with_k:
+            cols = (None, *cols)
+        k, v, w = (*cols, None)[:3]
         k = None if k is None else k.drop_null()
         k = int(k[0].as_py()) if k is not None and len(k) else None
         series, kind, blobs = from_arrow(v)
@@ -58,24 +65,6 @@ def _aggregate(family: str, with_k: bool = True, extra: "str | None" = None):
         if family not in ("theta", "frequent_items") and sk.is_empty:
             return None  # generated families: NULL on empty input
         return sk.serialize()
-
-    if extra is not None:
-
-        @arrow_udf("binary")
-        def agg(k: pa.Array, v: pa.Array, w: pa.Array) -> bytes:
-            return run(k, v, w)
-
-    elif with_k:
-
-        @arrow_udf("binary")
-        def agg(k: pa.Array, v: pa.Array) -> bytes:
-            return run(k, v)
-
-    else:
-
-        @arrow_udf("binary")
-        def agg(v: pa.Array) -> bytes:
-            return run(None, v)
 
     return agg
 
@@ -93,8 +82,9 @@ def build_aggregate_registry() -> dict[str, object]:
     # (DSHLLMergeOperation, codegen/generated.cpp.j2:429-450)
     reg["datasketch_hll_union"] = _aggregate("hll")
     reg["datasketch_cpc_union"] = _aggregate("cpc")
-    # hand-written families default their size parameter; Spark UDFs
-    # cannot overload arity, so the K-taking variant gets a `_lgk` name
+    # hand-written families default their size parameter, and the
+    # K-taking variant has its own `_lgk` name: a varargs UDF could tell
+    # the arities apart, but these names are the public surface
     reg["datasketch_theta"] = _aggregate("theta", with_k=False)
     reg["datasketch_theta_lgk"] = _aggregate("theta")
     reg["datasketch_frequent_items"] = _aggregate("frequent_items", with_k=False)

@@ -60,10 +60,13 @@ FLUSH_ROWS = 65536
 @dataclass
 class _Declared(AnalyzeResult):
     """The analyze result, plus what the value column's declared type
-    says: ``kind`` for :func:`~datasketches_spark.families.prepare`
-    and whether the column carries sketch blobs (BINARY)."""
+    says: ``kind`` for :func:`~datasketches_spark.families.prepare`,
+    the ``dtype`` of the Series its values fold as (FLOAT values stay
+    float32, as in the SQL aggregate) and whether the column carries
+    sketch blobs (BINARY)."""
 
     kind: "str | None" = None
+    dtype: "str | None" = None
     blobs: bool = False
 
 
@@ -83,13 +86,14 @@ class DatasketchPartials:
         self._family: str | None = None
         self._k = None
         self._kind = getattr(analyze_result, "kind", None)
+        self._dtype = getattr(analyze_result, "dtype", None)
         self._blobs = getattr(analyze_result, "blobs", False)
         self._buffered = 0
         self.max_buffered = 0
 
     @staticmethod
     def analyze(table, family, k=None):
-        from pyspark.sql.types import BinaryType, StructType
+        from pyspark.sql.types import BinaryType, DoubleType, FloatType, StructType
 
         from ..families import spark_value_kind
 
@@ -115,13 +119,14 @@ class DatasketchPartials:
         return _Declared(
             schema=out,
             kind=spark_value_kind(value_type),
+            dtype={FloatType: "float32", DoubleType: "float64"}.get(type(value_type)),
             # a weighted or aod call builds whatever the value type
             blobs=n_val == 1 and isinstance(value_type, BinaryType),
         )
 
     def _flush(self, key) -> None:
         vals = self._buffers[key]
-        if not vals:
+        if not vals and key in self._sketches:
             return
         import pandas as pd
 
@@ -129,7 +134,7 @@ class DatasketchPartials:
 
         fam, weights, sk = self._family, None, self._sketches.get(key)
         if fam in ("reservoir_weighted", "aod"):
-            vals, extra = zip(*vals)
+            vals, extra = zip(*vals) if vals else ((), ())
             if fam == "aod":
                 weights = aod_summaries(
                     extra, None if sk is None else sk.num_values,
@@ -142,7 +147,8 @@ class DatasketchPartials:
             else:
                 fam, weights = "reservoir", pd.Series(extra, dtype="float64")
         self._sketches[key] = fold(
-            sk, fam, self._k, pd.Series(list(vals)), self._kind, self._blobs, weights
+            sk, fam, self._k, pd.Series(list(vals), dtype=self._dtype), self._kind,
+            self._blobs, weights,
         )
         self._buffered -= len(self._buffers[key])
         self._buffers[key] = []
@@ -152,22 +158,21 @@ class DatasketchPartials:
             self._family = family
             self._k = k
         vals = list(row)
-        if family == "reservoir_weighted":
+        if family in ("reservoir_weighted", "aod"):
             key, v = tuple(vals[:-2]), (vals[-2], vals[-1])
-            if v[0] is None or v[1] is None:
-                return  # NULL value or weight: skipped like the UDAF
-        elif family == "aod":
-            key, v = tuple(vals[:-2]), (vals[-2], vals[-1])
-            if v[0] is None:
-                return  # NULL tuple key skips the row (UDAF parity);
-                # a NULL summary array still counts the key (zeros)
         else:
             key, v = tuple(vals[:-1]), vals[-1]
-            if v is None and family != "stats":
-                # NULLs are skipped and never register the group; stats
-                # counts them into n, as on every other route
-                return
+        # a group is registered before its NULLs are skipped, so an
+        # all-NULL group still emits its (empty) sketch, as the SQL
+        # aggregate returns the group
         buf = self._buffers.setdefault(key, [])
+        if family == "reservoir_weighted" and (v[0] is None or v[1] is None):
+            return  # NULL value or weight: skipped like the UDAF
+        if family == "aod" and v[0] is None:
+            return  # NULL tuple key skips the row (UDAF parity); a NULL
+            # summary array still counts the key (zeros)
+        if v is None and family != "stats":
+            return  # stats counts NULLs into n, as on every other route
         buf.append(v)
         self._buffered += 1
         if self._buffered > self.max_buffered:

@@ -34,13 +34,19 @@ lines = [
     "build sketches from raw values and merge when fed sketch blobs; all",
     "are also reachable from the Column API (`datasketches_spark.api`).",
     "",
+    "NULL arguments to a SCALAR, as in the reference's scalar functions:",
+    "a NULL sketch or NULL required argument gives NULL; a NULL or omitted",
+    "optional argument takes its default; a NaN DOUBLE argument counts as",
+    "NULL.  A missing required argument, or one argument too many, raises.",
+    "",
 ]
 # Reference twins overload these names by arity to make the trailing
 # argument optional (codegen/generator.py:156-196 inclusive,
-# :244-261/:424-441 describe verbosity).  Spark Python UDFs are not
+# :244-261/:424-441 describe verbosity).  Python UDFs are not
 # arity-checked at analysis time, so one registration with defaulted
 # trailing parameters serves every arity (matching DuckDB's overload
-# set; omitting a REQUIRED argument still raises).
+# set).
+_VERBOSE_DESCRIBE = ("quantiles", "kll", "kll_items", "req", "hll", "cpc")
 _ARITY = {
     "cdf": "trailing `inclusive` BOOL optional, default true (DuckDB parity)",
     "pmf": "trailing `inclusive` BOOL optional, default true (DuckDB parity)",
@@ -283,6 +289,9 @@ def _note(name: str) -> str:
         return f" — {_SPECIAL[name]}"
     if name.startswith("datasketch_tdigest"):
         return ""  # tdigest has no inclusive arg in the reference either
+    fam = name.removeprefix("datasketch_").removesuffix("_describe")
+    if name.endswith("_describe") and fam not in _VERBOSE_DESCRIBE:
+        return ""  # describe without verbosity arguments
     for suffix, note in _ARITY.items():
         if name.endswith("_" + suffix):
             return f" — {note}"

@@ -120,10 +120,10 @@ ROUTE_FAMILIES = {
 
 
 def _answer(family, blob):
-    """What a route's blob says: ``"empty"`` for no sketch (NULL, a
-    missing group or an empty one), the exact-mode answers of the
-    families whose bytes depend on the order partials merge in, and
-    the bytes otherwise."""
+    """What a route's blob says: ``"empty"`` for no sketch (NULL or an
+    empty one), the exact-mode answers (and item type) of the families
+    whose bytes depend on the order partials merge in, and the bytes
+    otherwise."""
     if blob is None:
         return "empty"
     sk = FAMILY_CLASSES[family].deserialize(bytes(blob))
@@ -131,7 +131,7 @@ def _answer(family, blob):
         return "empty"
     if family in ("kll", "quantiles", "req", "tdigest"):
         n = sk.total_weight() if family == "tdigest" else sk.n
-        return (n, [sk.get_quantile(q / 10) for q in range(11)])
+        return (n, getattr(sk, "dtype", None), [sk.get_quantile(q / 10) for q in range(11)])
     if family == "reservoir":
         return (sk.n, sorted(sk.get_items()))
     if family == "ebpps":
@@ -157,30 +157,47 @@ def route_input(spark):
     return df
 
 
-@pytest.mark.parametrize("family", sorted(ROUTE_FAMILIES))
-def test_sql_udaf_udtf_and_sketch_agg_agree(spark, route_input, family):
+def _routes(spark, df, view, family):
+    """The three routes' blobs per group over ``view`` (= ``df``), and
+    what each group's blob says; a missing group reads ``"missing"``."""
     k, call = ROUTE_FAMILIES[family]
     merge = call.replace("(x)", "(sketch)").replace(", x)", ", sketch)")
     k_arg = "" if k is None else f", {k}"
     routes = {
-        "udaf": spark.sql(f"SELECT g, {call} AS b FROM routes_in GROUP BY g"),
+        "udaf": spark.sql(f"SELECT g, {call} AS b FROM {view} GROUP BY g"),
         "udtf": spark.sql(
             f"SELECT g, {merge} AS b FROM datasketch_partials("
-            f"TABLE(SELECT g, x FROM routes_in), '{family}'{k_arg}) GROUP BY g"
+            f"TABLE(SELECT g, x FROM {view}), '{family}'{k_arg}) GROUP BY g"
         ),
-        "sketch_agg": sketch_agg(route_input, "x", family, ["g"], k, "b"),
+        "sketch_agg": sketch_agg(df, "x", family, ["g"], k, "b"),
     }
     got = {}
-    for name, df in routes.items():
-        blobs = {r.g: r.b for r in df.collect()}
-        got[name] = {g: _answer(family, blobs.get(g)) for g in (0, 1)}
+    for name, out in routes.items():
+        blobs = {r.g: r.b for r in out.collect()}
+        got[name] = {g: _answer(family, blobs[g]) if g in blobs else "missing" for g in (0, 1)}
     assert got["udaf"] == got["udtf"] == got["sketch_agg"], got
     assert got["udaf"][0] != "empty"
+    return routes
+
+
+@pytest.mark.parametrize("family", sorted(ROUTE_FAMILIES))
+def test_sql_udaf_udtf_and_sketch_agg_agree(spark, route_input, family):
+    routes = _routes(spark, route_input, "routes_in", family)
     # the NULL rows are counted by stats and skipped by every other family
     if family == "stats":
         sk = FAMILY_CLASSES["stats"].deserialize(bytes(
             routes["udaf"].filter("g = 0").first().b))
         assert (sk.get_n(), sk.get_nonnull()) == (40, 37)
+
+
+@pytest.mark.parametrize("family", sorted(ROUTE_FAMILIES))
+@pytest.mark.parametrize("sql_type", ["float", "double"])
+def test_routes_agree_on_floating_columns(spark, route_input, sql_type, family):
+    """The same input as FLOAT and DOUBLE: a FLOAT column builds float32
+    quantile sketches on every route, the UDTF included."""
+    df = route_input.selectExpr("g", f"CAST(x AS {sql_type}) AS x")
+    df.createOrReplaceTempView(f"routes_{sql_type}")
+    _routes(spark, df, f"routes_{sql_type}", family)
 
 
 def test_aod_routes_agree(spark, route_input):
@@ -259,3 +276,23 @@ def test_no_sketch_updates_outside_families():
                 if attr in _UPDATES and (fn, func, attr) not in _ALLOWED
             ]
     assert bad == [], bad
+
+
+def test_scalars_have_one_factory():
+    """functions/scalars.py builds every sketch scalar through ``_scalar``
+    and the item probes through ``_item_probe``: it imports no pandas
+    UDF, and no other function there makes a UDF."""
+    with open(os.path.join(PKG, "functions", "scalars.py")) as f:
+        tree = ast.parse(f.read())
+    imported = {
+        a.name for n in ast.walk(tree) if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+    }
+    assert not imported & {"pandas", "pandas_udf"}, imported
+    makers = [
+        top.name
+        for top in tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Name) and node.id in ("arrow_udf", "pandas_udf")
+    ]
+    assert sorted(makers) == ["_item_probe", "_scalar"], makers

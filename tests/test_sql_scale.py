@@ -116,7 +116,22 @@ def test_partials_skips_nulls_and_validates_family(spark):
             TABLE(SELECT g, x FROM sql_scale_nulls), 'theta', 14)
         """
     ).collect()
-    assert out == []  # all-null values contribute no partial
+    # the NULL value is skipped, but its group still emits a partial:
+    # an empty sketch, which merges to what the SQL aggregate returns
+    from datasketches_spark.sketches.theta import ThetaSketch
+
+    (row,) = out
+    assert row.g is None and ThetaSketch.deserialize(bytes(row.sketch)).is_empty
+    merged = spark.sql(
+        """
+        SELECT g, datasketch_theta_lgk(14, sketch) AS s FROM datasketch_partials(
+            TABLE(SELECT g, x FROM sql_scale_nulls), 'theta', 14) GROUP BY g
+        """
+    ).collect()
+    direct = spark.sql(
+        "SELECT g, datasketch_theta_lgk(14, x) AS s FROM sql_scale_nulls GROUP BY g"
+    ).collect()
+    assert [bytes(r.s) for r in merged] == [bytes(r.s) for r in direct]
 
 
 def test_partials_eval_memory_bounded(spark, monkeypatch):

@@ -1,6 +1,23 @@
-"""Python-worker daemon module that memoizes per-task spark-files setup.
+"""Python-worker daemon module: two memos that stock pyspark recomputes
+for every task a reused worker runs.
 
-The measured problem (local[32], pyspark 4.1, best-of-10 warm): a
+1. **Spark-files setup** (``_install``), below.
+2. **The heap freeze** (``gc.freeze()`` before the daemon forks).  After
+   every task, a reused worker returns to ``pyspark.daemon``'s loop,
+   which runs a full ``gc.collect()``.  Without the freeze, that
+   collection walks the ~74k container objects the worker inherited
+   from the daemon (this package, pyspark, pandas, pyarrow, numpy),
+   and frees at most a few dozen.  Measured on a 4-vCPU host, local[4]:
+   a median 39 ms of CPU per collect (IQR 36-42 ms), run 4 times per
+   2000-row stored-sketch scalar query and 8 times per 1M-row sketch
+   build.  Freezing once in the daemon moves those objects to the
+   permanent generation.  Each per-task collect then walks only what
+   the worker allocated itself (~130-690 objects, median 0.25-0.31
+   ms): worker CPU per build fell from ~0.6 to ~0.3 s.  Workers also
+   stop dirtying the shared pages, so copy-on-write keeps them shared
+   (perfbench peak RSS -5% on scan_build, -13% on sketch_store).
+
+The spark-files problem (local[32], pyspark 4.1, best-of-10 warm): a
 1-task mapInPandas job on 100 rows costs ~0.15 s wall while the same
 shape in pure JVM costs ~0.02 s.  Phase-timing the worker main loop
 (instrumented daemon) attributes ~115 ms of every Python task to
@@ -59,10 +76,11 @@ Safety properties, all regression-tested (tests/test_fastworker.py):
   status as stock pyspark — this module does not change it.
 - **pyspark upgrades**: `_install()` patches two documented-stable
   names (``pyspark.worker.setup_spark_files`` and the ``worker_util``
-  twin) inside try/except — if a future pyspark moves them, workers
-  silently run STOCK behavior (slower, never wrong).  The conf absent
-  entirely = stock daemon, zero interaction
-  (test_no_daemon_conf_still_correct).
+  twin) and binds the helpers the memo calls up front.  If a future
+  pyspark moves any of them (``ImportError`` / ``AttributeError``),
+  nothing is patched and workers run STOCK behavior (slower, never
+  wrong); any other error propagates.  The conf absent entirely =
+  stock daemon, zero interaction (test_no_daemon_conf_still_correct).
 - **Semantics**: the memo re-runs ``importlib.invalidate_caches()``
   whenever the (files dir, includes) state changes, so
   ``sc.addPyFile`` mid-session behaves exactly as stock (covered in
@@ -70,10 +88,19 @@ Safety properties, all regression-tested (tests/test_fastworker.py):
 - **Cluster managers**: fork-server wire protocol is untouched, so
   YARN/K8s worker-reuse, ``spark.python.worker.memory``, and
   faulthandler confs compose unchanged.
+- **Heap freeze**: frozen objects are never collected, so the freeze
+  runs once, in the daemon before its first fork, and only when this
+  module runs as ``__main__``; importing it freezes nothing.  What it
+  freezes is the daemon's import-time state, which lives as long as
+  the daemon anyway.  Objects a worker allocates, task garbage
+  included, stay in the collected generations (the subprocess test
+  reads ``gc.get_freeze_count()`` and ``len(gc.get_objects())`` from
+  reused workers, over tasks that each leave cyclic garbage).
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 
@@ -89,24 +116,24 @@ def _install() -> None:
     from pyspark import worker as _worker
     from pyspark import worker_util as _worker_util
     from pyspark.serializers import read_int
-    from pyspark.worker_util import utf8_deserializer
+    from pyspark.worker_util import add_path, is_remote_only, utf8_deserializer
 
     def _setup_spark_files_memo(infile) -> None:
         global _last_files_state
         spark_files_dir = utf8_deserializer.loads(infile)
 
-        if not _worker_util.is_remote_only():
+        if not is_remote_only():
             from pyspark.core.files import SparkFiles
 
             SparkFiles._root_directory = spark_files_dir
             SparkFiles._is_running_on_worker = True
 
-        _worker_util.add_path(spark_files_dir)
+        add_path(spark_files_dir)
         includes = []
         for _ in range(read_int(infile)):
             filename = utf8_deserializer.loads(infile)
             includes.append(filename)
-            _worker_util.add_path(os.path.join(spark_files_dir, filename))
+            add_path(os.path.join(spark_files_dir, filename))
 
         state = (spark_files_dir, tuple(includes))
         if state != _last_files_state:
@@ -119,8 +146,8 @@ def _install() -> None:
 
 try:
     _install()
-except Exception:  # pragma: no cover - defensive: never break workers
-    # a future pyspark may move these hooks; stock behavior is only
+except (ImportError, AttributeError):
+    # a future pyspark moved a hook or helper; stock behavior is only
     # slower, so degrade to it rather than failing worker startup
     pass
 
@@ -129,4 +156,8 @@ except Exception:  # pragma: no cover - defensive: never break workers
 from pyspark.daemon import manager  # noqa: E402
 
 if __name__ == "__main__":
+    # freeze the daemon's heap before the first fork: the per-task
+    # gc.collect() in pyspark.daemon's reuse loop then skips it
+    gc.collect()
+    gc.freeze()
     manager()

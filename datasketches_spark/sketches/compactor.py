@@ -353,16 +353,18 @@ class CompactorSketch:
         """Population Stability Index between the two summarized
         distributions over the bins induced by ``split_points``:
         sum_i (p_a,i - p_b,i) * ln(p_a,i / p_b,i).  Exact in exact
-        mode.  An empty bin on either side yields inf/nan (no
-        smoothing is applied — choose split points that cover both
-        populations, or pre-clamp upstream).  Companion to
-        :meth:`ks_distance`; PSI is the binned drift metric model
-        monitoring conventionally thresholds at 0.1/0.25."""
+        mode.  A bin empty on both sides contributes 0; a bin empty
+        on one side yields inf (no smoothing is applied — choose split
+        points that cover both populations, or pre-clamp upstream).
+        Companion to :meth:`ks_distance`; PSI is the binned drift
+        metric model monitoring conventionally thresholds at 0.1/0.25."""
         pa = np.asarray(self.get_pmf(split_points, inclusive), dtype=np.float64)
         pb = np.asarray(other.get_pmf(split_points, inclusive), dtype=np.float64)
         if pa.size == 0 or pb.size == 0:
             return float("nan")
-        with np.errstate(divide="ignore", invalid="ignore"):
+        both = (pa > 0) | (pb > 0)
+        pa, pb = pa[both], pb[both]
+        with np.errstate(divide="ignore"):
             terms = (pa - pb) * np.log(pa / pb)
         return float(np.sum(terms))
 

@@ -7,15 +7,22 @@ JVM and the daemon module is a session-construction conf.  Covers:
 - python-worker results identical to stock (sketch two-phase path);
 - ``sc.addPyFile`` mid-session still invalidates import caches (the
   one case the stock per-task invalidation exists for);
-- worker reuse across jobs (the memo state persists per process).
+- worker reuse across jobs (the memo state persists per process);
+- the heap freeze: reused workers inherit a large frozen generation,
+  track only their own objects, and still free the cyclic garbage
+  each task leaves behind.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import subprocess
 import sys
 import textwrap
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -75,6 +82,42 @@ _SCRIPT = textwrap.dedent(
         .mapInPandas(use_mod, "v long").collect()
     )
     assert [r["v"] for r in got] == [40411] * 3, got
+
+    # 4) the daemon froze its heap before forking.  Each task reports
+    #    its worker's frozen and tracked object counts on entry, then
+    #    leaves 20k self-referencing lists behind: only a collection
+    #    frees them, and they outlive the task's young-generation passes
+    def gc_probe(it):
+        import gc, time
+        import pandas as pd
+        rows = []
+        for pdf in it:
+            rows.append((os.getpid(), time.monotonic(),
+                         gc.get_freeze_count(), len(gc.get_objects())))
+            junk = []
+            for _ in range(20000):
+                cell = []
+                cell.append(cell)
+                junk.append(cell)
+        yield pd.DataFrame(rows, columns=["pid", "t", "frozen", "tracked"])
+
+    probe_schema = "pid long, t double, frozen long, tracked long"
+    for _ in range(2):  # reuse: every worker has run tasks before
+        spark.range(0, 8, 1, 8).mapInPandas(gc_probe, probe_schema).collect()
+    rows = spark.range(0, 20, 1, 20).mapInPandas(gc_probe, probe_schema).collect()
+    assert len(rows) == 20, rows
+    by_pid = {{}}
+    for r in sorted(rows, key=lambda r: r["t"]):
+        by_pid.setdefault(r["pid"], []).append(r)
+    for pid, seen in by_pid.items():
+        frozen = {{r["frozen"] for r in seen}}
+        # frozen once, in the daemon: no worker adds to it
+        assert len(frozen) == 1, (pid, seen)
+        assert min(frozen) > 10000, (pid, seen)
+        tracked = [r["tracked"] for r in seen]
+        assert max(tracked) < min(frozen) / 10, (pid, seen)
+        # 20k garbage lists per task: an uncollected task would show
+        assert tracked[-1] - tracked[0] < 5000, (pid, seen)
 
     print("FASTWORKER_OK")
     spark.stop()
@@ -144,10 +187,8 @@ def test_no_daemon_conf_still_correct():
 
 def test_install_degrades_when_pyspark_moves_the_hooks(monkeypatch):
     """A future pyspark that renames setup_spark_files must NOT break
-    worker startup: _install() catches everything and falls back to
-    stock behavior (fastworker.py's defensive contract)."""
-    import importlib
-
+    worker startup: _install() catches the ImportError and falls back
+    to stock behavior (fastworker.py's defensive contract)."""
     import pyspark.worker as w
     import pyspark.worker_util as wu
 
@@ -168,3 +209,48 @@ def test_install_degrades_when_pyspark_moves_the_hooks(monkeypatch):
         wu.setup_spark_files = orig_wu
         monkeypatch.undo()
         importlib.reload(fw)  # restore the real patch for the session
+
+
+@pytest.mark.parametrize(
+    "module, name",
+    [
+        ("pyspark.worker_util", "utf8_deserializer"),
+        ("pyspark.worker_util", "add_path"),
+        ("pyspark.worker_util", "is_remote_only"),
+        ("pyspark.serializers", "read_int"),
+    ],
+)
+def test_moved_hook_leaves_stock_setup(monkeypatch, module, name):
+    """Any helper the memo calls that a future pyspark moves is caught
+    at install, not in every task: nothing is patched, the stock
+    setup_spark_files stays in place and the daemon is stock pyspark's."""
+    import pyspark.daemon
+    import pyspark.worker as w
+    import pyspark.worker_util as wu
+
+    import datasketches_spark.fastworker as fw
+
+    def stock(infile):
+        pass
+
+    monkeypatch.setattr(w, "setup_spark_files", stock)
+    monkeypatch.setattr(wu, "setup_spark_files", stock)
+    monkeypatch.delattr(importlib.import_module(module), name)
+    try:
+        importlib.reload(fw)
+        assert w.setup_spark_files is stock
+        assert wu.setup_spark_files is stock
+        assert fw.manager is pyspark.daemon.manager
+    finally:
+        monkeypatch.undo()
+        importlib.reload(fw)
+
+
+def test_import_does_not_freeze():
+    """The freeze runs only when the module is the daemon's __main__:
+    importing it (driver, tests, workers) leaves the heap collectable."""
+    import datasketches_spark.fastworker as fw
+
+    before = gc.get_freeze_count()
+    importlib.reload(fw)
+    assert gc.get_freeze_count() == before

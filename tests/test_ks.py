@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from datasketches_spark import register
 from datasketches_spark.aggregation import sketch_agg
-from datasketches_spark.sketches import KllSketch
+from datasketches_spark.sketches import KllSketch, QuantilesSketch, ReqSketch
 
 
 def _brute_ks(a: np.ndarray, b: np.ndarray) -> float:
@@ -96,6 +96,19 @@ class TestPsi:
         a.update(np.array([1.0, 2.0]))
         b.update(np.array([10.0, 20.0]))
         assert np.isinf(a.psi(b, [5.0]))
+
+    @pytest.mark.parametrize("cls", [KllSketch, QuantilesSketch, ReqSketch])
+    def test_bin_empty_on_both_sides_contributes_zero(self, cls):
+        # (0 - 0) * ln(0 / 0) is NaN; such a bin holds no mass on
+        # either side, so by the definition it adds nothing
+        a = cls(128)
+        a.update(np.arange(1, 101, dtype=np.float64))
+        assert a.psi(a, [50.0, 150.0]) == 0.0
+        b = cls(128)
+        b.update(np.array([1.0] * 30 + [60.0] * 70))
+        want = a.psi(b, [50.0])
+        assert np.isfinite(want) and want > 0.0
+        assert a.psi(b, [50.0, 150.0]) == want
 
     def test_sql_surface(self, spark):
         register(spark)

@@ -129,13 +129,13 @@ def main():
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("datasketches-spark-bench")
-        # memoized worker-side spark-files setup: stock pyspark re-reads
+        # targeted worker-side spark-files setup: stock pyspark re-reads
         # the pyspark.zip central directory (importlib.invalidate_caches)
         # on EVERY python task, ~115 ms/task measured -- the dominant
         # per-stage floor.  datasketches_spark/fastworker.py keeps the
-        # wire protocol identical and re-invalidates only when the
-        # files/includes state changes (sc.addPyFile still works;
-        # regression-tested in tests/test_fastworker.py).  Measured:
+        # wire protocol identical and invalidates only the import caches
+        # of the spark-files directory (sc.addFile / sc.addPyFile still
+        # work; regression-tested in tests/test_fastworker.py).  Measured:
         # trivial 1-task python stage 0.155 s -> 0.076 s, two-stage
         # 0.66 s -> 0.083 s.
         .config("spark.python.daemon.module", "datasketches_spark.fastworker")

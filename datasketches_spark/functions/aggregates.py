@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import BinaryType
 
 from ..families import aod_summaries, fold, from_arrow
 
@@ -48,7 +49,7 @@ def _aggregate(family: str, with_k: bool = True, extra: "str | None" = None):
     column's type)."""
     n_args = with_k + 1 + (extra is not None)
 
-    @arrow_udf("binary")
+    @arrow_udf(BinaryType())
     def agg(*cols: pa.Array) -> bytes:
         if len(cols) != n_args:
             raise TypeError(f"the {family} aggregate takes {n_args} arguments, got {len(cols)}")
@@ -129,7 +130,7 @@ def build_aggregate_registry() -> dict[str, object]:
     # (tuple_sketch_agg, the UDTF) — paths agree by construction.
     reg["datasketch_aod"] = _aggregate("aod", extra="summary")
 
-    @arrow_udf("binary")
+    @arrow_udf(BinaryType())
     def aod_union_agg(v: pa.Array) -> bytes:
         from ..sketches.tuple_aod import AodSketch
 

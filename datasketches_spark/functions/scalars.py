@@ -32,7 +32,7 @@ flags false, except the HLL/CPC summary flag (true); aod/fdt bounds at
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cache, reduce
 from typing import Callable
 
 import numpy as np
@@ -40,7 +40,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import DataType, _parse_datatype_string
 
 from ..families import coerce_value_batch, from_arrow
 from ..murmur import DEFAULT_SEED_HASH
@@ -137,6 +137,14 @@ def _call(fn: Callable, arrow_type: pa.DataType, decoders: tuple, opt: tuple, co
     return pa.array(out, type=arrow_type, from_pandas=True)
 
 
+@cache
+def _ret_type(ddl: str) -> DataType:
+    """``ddl`` parsed once per :func:`build_scalar_registry` call (a
+    parse is a JVM round trip against the active session; the registry
+    declares 10 distinct strings over 222 UDFs)."""
+    return _parse_datatype_string(ddl)
+
+
 def _scalar(fn: Callable, ret: str, *decoders, opt: tuple = ()):
     """The scalar ``fn(*args) -> ret`` as an Arrow UDF.
 
@@ -147,7 +155,7 @@ def _scalar(fn: Callable, ret: str, *decoders, opt: tuple = ()):
     code with every UDF.)  ``opt`` holds the defaults of the optional
     plain arguments that follow.  NULL rules: see the module
     docstring."""
-    ret_type = _parse_datatype_string(ret)
+    ret_type = _ret_type(ret)
     arrow_type = to_arrow_type(ret_type)
 
     @arrow_udf(ret_type)
@@ -168,7 +176,7 @@ def _item_probe(cls, probe: Callable, ret: str):
     deserialized once and probed in one pass.  A NULL blob or item
     gives NULL."""
 
-    @arrow_udf(ret)
+    @arrow_udf(_ret_type(ret))
     def udf(s: pa.Array, items: pa.Array) -> pa.Array:
         series, kind, _ = from_arrow(items)
         out = np.full(len(s), None, dtype=object)
@@ -192,6 +200,7 @@ _FREQ_ROW_SCHEMA = (
 
 def build_scalar_registry() -> dict[str, object]:
     """All scalar UDFs keyed by their SQL/reference name."""
+    _ret_type.cache_clear()  # parse against this call's session
     reg: dict[str, object] = {}
 
     # ---- quantile families: Quantiles, KLL, REQ ----

@@ -46,6 +46,8 @@ _FLAG_EMPTY = 1
 # parity is golden-tested against datasketches-java in
 # tests/test_murmur_wire.py.
 _WIRE_SERVER = 3
+# serial version 4: the compressed compact layout (see _compressed_entries)
+_WIRE_SERVER_COMPRESSED = 4
 _WIRE_FAMILY_COMPACT = 3
 _WIRE_FLAG_READONLY = 1 << 1
 _WIRE_FLAG_EMPTY = 1 << 2
@@ -224,7 +226,10 @@ class ThetaSketch:
 
     @classmethod
     def from_wire(cls, blob: bytes, lg_k: int = DEFAULT_LG_K) -> "ThetaSketch":
-        """Parse an Apache compact theta blob (serial version 3).
+        """Parse an Apache compact theta blob: serial version 3, or the
+        compressed serial version 4 that datasketches-java's
+        ``CompactSketch.toByteArrayCompressed()`` writes (and with it
+        Spark's ``theta_sketch_agg``).
 
         The compact format does not carry a nominal K; ``lg_k`` only
         affects later merges into this object (same as loading into an
@@ -239,7 +244,9 @@ class ThetaSketch:
         pre_longs = blob[0] & 0x3F
         ser_ver, family, flags = blob[1], blob[2], blob[5]
         (seed_hash,) = struct.unpack_from("<H", blob, 6)
-        if ser_ver != _WIRE_SERVER or family != _WIRE_FAMILY_COMPACT:
+        if family != _WIRE_FAMILY_COMPACT:
+            raise err
+        if ser_ver not in (_WIRE_SERVER, _WIRE_SERVER_COMPRESSED):
             raise err
         if pre_longs not in (1, 2, 3) or len(blob) < 8 * pre_longs:
             raise err
@@ -250,20 +257,24 @@ class ThetaSketch:
             raise SketchDeserializeError(
                 "Failed to deserialize Theta sketch: seed hash mismatch"
             )
-        theta = MAX_HASH
-        if pre_longs == 1:
-            count = 1
-            off = 8
+        if ser_ver == _WIRE_SERVER_COMPRESSED:
+            theta, raw = _compressed_entries(blob, pre_longs, err)
+            count = raw.size
         else:
-            # bytes 12-15 are the sampling probability p — ignored
-            (count,) = struct.unpack_from("<I", blob, 8)
-            off = 16
-            if pre_longs == 3:
-                (theta,) = struct.unpack_from("<Q", blob, 16)
-                off = 24
-        if len(blob) < off + 8 * count:
-            raise err
-        raw = np.frombuffer(blob, dtype=np.uint64, count=count, offset=off)
+            theta = MAX_HASH
+            if pre_longs == 1:
+                count = 1
+                off = 8
+            else:
+                # bytes 12-15 are the sampling probability p — ignored
+                (count,) = struct.unpack_from("<I", blob, 8)
+                off = 16
+                if pre_longs == 3:
+                    (theta,) = struct.unpack_from("<Q", blob, 16)
+                    off = 24
+            if len(blob) < off + 8 * count:
+                raise err
+            raw = np.frombuffer(blob, dtype=np.uint64, count=count, offset=off)
         # Screen corrupt blobs: the compact-theta invariant is DISTINCT
         # hashes in (0, theta).  np.unique sorts (covering the
         # unordered-flag case) and collapses duplicates; if anything was
@@ -276,6 +287,42 @@ class ThetaSketch:
         sk.theta = int(theta)
         sk.hashes = hashes
         return sk
+
+
+def _compressed_entries(blob: bytes, pre_longs: int, err: Exception) -> tuple[int, np.ndarray]:
+    """Theta and the hashes of a serial-version-4 compact theta blob.
+
+    Byte 3 is the bits per entry and byte 4 the width in bytes of the
+    entry count.  The preamble is one long, or two when the second
+    carries theta (estimation mode).  The entry count follows it,
+    little-endian, and then the entries: the deltas between consecutive
+    ordered hashes (the first from 0), each ``entry_bits`` wide, packed
+    most significant bit first without padding (datasketches-java
+    ``CompactSketch.toByteArrayV4`` / ``BitPacking``).
+    """
+    entry_bits, count_bytes = blob[3], blob[4]
+    if pre_longs > 2 or not 1 <= entry_bits <= 63 or not 1 <= count_bytes <= 4:
+        raise err
+    theta = struct.unpack_from("<Q", blob, 8)[0] if pre_longs == 2 else MAX_HASH
+    off = 8 * pre_longs + count_bytes
+    count = int.from_bytes(blob[off - count_bytes:off], "little")
+    if count == 0 or len(blob) < off + (count * entry_bits + 7) // 8:
+        raise err
+    deltas = np.empty(count, dtype=np.uint64)
+    # unpacked bits take 64 bytes per entry: unpack 2^16 entries at a
+    # time (a multiple of 8 entries, so each step starts on a byte)
+    step = 1 << 16
+    for lo in range(0, count, step):
+        m = min(step, count - lo)
+        at = off + lo * entry_bits // 8
+        bits = np.unpackbits(np.frombuffer(blob, np.uint8, offset=at), count=m * entry_bits)
+        padded = np.zeros((m, 64), dtype=np.uint8)
+        padded[:, 64 - entry_bits:] = bits.reshape(m, entry_bits)
+        deltas[lo:lo + m] = np.packbits(padded, axis=1).view(">u8").ravel()
+    # a zero delta repeats a hash, which from_wire's screen rejects; a
+    # sum can only wrap past 2^64 after one at or above 2^63 > theta,
+    # which the screen rejects too
+    return theta, np.cumsum(deltas, dtype=np.uint64)
 
 
 # ---- scalar set algebra (reference src/theta_sketch.cpp:221-270) ----

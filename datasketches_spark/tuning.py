@@ -167,8 +167,9 @@ def recommended_confs(local: bool = False) -> dict[str, str]:
         # batches = fewer per-batch python setups).  This is also the
         # byte-bound substitute for the disabled size check above.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        # Python-worker daemon that memoizes per-task spark-files
-        # setup (~0.13 s saved per python stage) and freezes its heap
+        # Python-worker daemon whose per-task spark-files setup skips
+        # the zip re-reads (~0.13 s saved per python stage, and ~14 MB
+        # of memory per fresh worker) and freezes its heap
         # before forking, so a reused worker's post-task gc.collect()
         # skips the ~74k inherited objects (~39 ms per task; see
         # fastworker.py).  Workers must be able to import this package

@@ -10,9 +10,9 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 @pytest.fixture(scope="session")
 def spark():
     # fastworker daemon module: cuts the ~115ms/python-task zip re-scan
-    # (see datasketches_spark/fastworker.py) AND keeps the memoized
-    # worker path exercised by the whole suite; the stock path stays
-    # covered by the grading driver's own sessions
+    # (see datasketches_spark/fastworker.py) AND keeps its patched
+    # spark-files setup exercised by the whole suite; the stock path
+    # stays covered by test_fastworker.py's no-daemon session
     os.environ["PYTHONPATH"] = _REPO + (
         os.pathsep + os.environ["PYTHONPATH"] if os.environ.get("PYTHONPATH") else ""
     )

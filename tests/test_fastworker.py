@@ -1,13 +1,18 @@
-"""fastworker daemon module: correctness under the memoized
+"""fastworker daemon module: correctness under the patched
 spark-files setup (datasketches_spark/fastworker.py).
 
-Runs in a SUBPROCESS because the shared test session already owns the
-JVM and the daemon module is a session-construction conf.  Covers:
+The session tests run in a SUBPROCESS because the shared test session
+already owns the JVM and the daemon module is a session-construction
+conf.  Covers:
 
 - python-worker results identical to stock (sketch two-phase path);
-- ``sc.addPyFile`` mid-session still invalidates import caches (the
-  one case the stock per-task invalidation exists for);
-- worker reuse across jobs (the memo state persists per process);
+- ``sc.addPyFile`` and ``sc.addFile`` of a ``.py`` mid-session, after
+  the workers exist: the new module imports inside a task (the case
+  the stock per-task invalidation exists for);
+- worker reuse across jobs;
+- in process, the patched setup on a synthetic protocol stream: it
+  invalidates the spark-files directory's finders and leaves every
+  zip importer's directory table alone;
 - the heap freeze: reused workers inherit a large frozen generation,
   track only their own objects, and still free the cyclic garbage
   each task leaves behind.
@@ -17,7 +22,9 @@ from __future__ import annotations
 
 import gc
 import importlib
+import io
 import os
+import struct
 import subprocess
 import sys
 import textwrap
@@ -55,7 +62,7 @@ _SCRIPT = textwrap.dedent(
     ).collect()
     assert out[0]["est"] == 1000, out
 
-    # 2) repeated jobs reuse workers and stay correct (memo steady state)
+    # 2) repeated jobs reuse workers and stay correct
     for _ in range(3):
         assert sketch_agg(
             df, "k", "theta", k=14,
@@ -63,8 +70,7 @@ _SCRIPT = textwrap.dedent(
             finalize_schema="est bigint",
         ).collect()[0]["est"] == 1000
 
-    # 3) addPyFile mid-session: the memo must notice the includes change
-    #    and re-invalidate, so the new module imports inside workers
+    # 3) addPyFile mid-session: the new module imports inside workers
     mod_dir = tempfile.mkdtemp()
     mod_path = os.path.join(mod_dir, "fastworker_probe_mod.py")
     with open(mod_path, "w") as fh:
@@ -82,6 +88,26 @@ _SCRIPT = textwrap.dedent(
         .mapInPandas(use_mod, "v long").collect()
     )
     assert [r["v"] for r in got] == [40411] * 3, got
+
+    # 3b) addFile of a .py after the workers exist: it lands in the
+    #     spark-files directory itself, whose listing the workers have
+    #     cached since their first task
+    file_path = os.path.join(mod_dir, "fastworker_probe_file.py")
+    with open(file_path, "w") as fh:
+        fh.write("MAGIC = 51522\\n")
+    spark.sparkContext.addFile(file_path)
+
+    def use_file(it):
+        import pandas as pd
+        import fastworker_probe_file as m
+        for pdf in it:
+            yield pd.DataFrame({{"v": [m.MAGIC] * len(pdf)}})
+
+    got = (
+        spark.range(0, 4, 1, 4).toDF("x")
+        .mapInPandas(use_file, "v long").collect()
+    )
+    assert [r["v"] for r in got] == [51522] * 4, got
 
     # 4) the daemon froze its heap before forking.  Each task reports
     #    its worker's frozen and tracked object counts on entry, then
@@ -244,6 +270,72 @@ def test_moved_hook_leaves_stock_setup(monkeypatch, module, name):
     finally:
         monkeypatch.undo()
         importlib.reload(fw)
+
+
+def _utf8(text: str) -> bytes:
+    raw = text.encode("utf-8")
+    return struct.pack(">i", len(raw)) + raw
+
+
+def test_setup_invalidates_only_spark_files_finders(tmp_path, monkeypatch):
+    """The patched setup reads the JVM's stream as stock does (files
+    dir, include count, includes) and invalidates only the FileFinder
+    entries at or under the files dir: a zip importer keeps the
+    directory table it was built with."""
+    import zipfile
+    import zipimport
+    from importlib.machinery import FileFinder
+
+    import pyspark.worker as w
+    from pyspark.core.files import SparkFiles
+
+    import datasketches_spark.fastworker as fw
+
+    importlib.reload(fw)
+
+    class CountingFinder(FileFinder):
+        calls = 0
+
+        def invalidate_caches(self):
+            self.calls += 1
+            super().invalidate_caches()
+
+    files_dir = tmp_path / "userFiles"
+    (files_dir / "pkg").mkdir(parents=True)
+    outside = tmp_path / "elsewhere"
+    outside.mkdir()
+    archive = tmp_path / "lib.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zmod.py", "X = 1\n")
+    finders = {
+        "dir": CountingFinder(str(files_dir)),
+        "sub": CountingFinder(str(files_dir / "pkg")),
+        "outside": CountingFinder(str(outside)),
+        # a sibling whose name extends the files dir's is not under it
+        "sibling": CountingFinder(str(files_dir) + "2"),
+    }
+    zipped = zipimport.zipimporter(str(archive))
+    table = zipped._files
+    cache = dict(sys.path_importer_cache)
+    cache.update({f.path: f for f in finders.values()})
+    cache[str(archive)] = zipped
+    monkeypatch.setattr(sys, "path_importer_cache", cache)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(SparkFiles, "_root_directory", SparkFiles._root_directory)
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", SparkFiles._is_running_on_worker)
+
+    payload = _utf8(str(files_dir)) + struct.pack(">i", 1) + _utf8("dep.zip")
+    for _ in range(2):  # every task, not just the first
+        stream = io.BytesIO(payload)
+        w.setup_spark_files(stream)
+        assert stream.tell() == len(payload)  # read exactly what the JVM wrote
+    assert str(files_dir) in sys.path
+    assert str(files_dir / "dep.zip") in sys.path
+    assert SparkFiles._root_directory == str(files_dir)
+    assert {k: f.calls for k, f in finders.items()} == {
+        "dir": 2, "sub": 2, "outside": 0, "sibling": 0,
+    }
+    assert zipped._files is table
 
 
 def test_import_does_not_freeze():

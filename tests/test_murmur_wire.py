@@ -38,6 +38,7 @@ from datasketches_spark.murmur import (
     smhasher_verification,
     theta_hash_values,
 )
+from datasketches_spark.hashing import MAX_HASH
 from datasketches_spark.sketches.base import SketchDeserializeError
 from datasketches_spark.sketches.theta import ThetaSketch
 
@@ -198,6 +199,71 @@ def test_wire_corrupt_raises_reference_message():
         ThetaSketch.deserialize(b"\x00\x01\x02")
 
 
+def _v4_blob(hashes, theta=None, entry_bits=None, count_bytes=None) -> bytes:
+    """A serial-version-4 (compressed) compact theta blob: the preamble,
+    theta in estimation mode, the entry count little-endian, then the
+    deltas between ordered hashes packed most significant bit first.
+    The width fields default to the ones datasketches-java computes."""
+    deltas = np.diff(np.asarray(hashes, dtype=np.uint64), prepend=np.uint64(0))
+    n = len(deltas)
+    if entry_bits is None:
+        entry_bits = int(np.bitwise_or.reduce(deltas)).bit_length()
+    if count_bytes is None:
+        count_bytes = (n.bit_length() + 7) // 8
+    head = bytes([1 if theta is None else 2, 4, 3, entry_bits, count_bytes, 0x1A])
+    head += struct.pack("<H", DEFAULT_SEED_HASH)
+    if theta is not None:
+        head += struct.pack("<Q", theta)
+    bits = "".join(format(int(d), f"0{entry_bits}b")[-entry_bits:] for d in deltas)
+    bits += "0" * (-len(bits) % 8)
+    return head + n.to_bytes(count_bytes, "little") + int(bits, 2).to_bytes(len(bits) // 8, "big")
+
+
+def test_compressed_wire_reads_exact_and_estimation():
+    for values in (list(range(1, 40)), list(range(60_000))):
+        sk = ThetaSketch.from_wire(_build(values).to_wire())
+        theta = None if sk.theta == MAX_HASH else sk.theta
+        back = ThetaSketch.from_wire(_v4_blob(sk.hashes, theta))
+        assert back.theta == sk.theta
+        assert np.array_equal(back.hashes, sk.hashes)
+        assert back.get_estimate() == sk.get_estimate()
+    # more entries than one unpacking step, entries straddling bytes
+    rng = np.random.default_rng(4)
+    hashes = np.unique(rng.integers(1, 1 << 62, size=70_001, dtype=np.uint64))
+    blob = _v4_blob(hashes)
+    assert blob[3] % 8
+    assert np.array_equal(ThetaSketch.from_wire(blob).hashes, hashes)
+
+
+def test_compressed_wire_corrupt_raises():
+    """The corrupt-blob screens hold for the compressed layout: a
+    repeated hash, a sum past 2^64, an entry at or above theta, a
+    truncated body and out-of-range width fields all fail loudly."""
+    good = [5, 900, 1 << 40, (1 << 62) + 7]
+    assert ThetaSketch.from_wire(_v4_blob(good)).num_retained == 4
+    blob = bytearray(_v4_blob(good))
+    blob[1] = 5  # unknown serial version
+    corrupt = [
+        _v4_blob([5, 5, 900]),  # zero delta: a repeated hash
+        # deltas 2^62, 2^63-1, 2^63-1: the third sum wraps past 2^64
+        _v4_blob([1 << 62, (1 << 62) + (1 << 63) - 1, (1 << 62) - 2]),
+        _v4_blob(good, theta=1 << 40),  # entries at and above theta
+        _v4_blob(good)[:-1],  # truncated body
+        _v4_blob(good, count_bytes=5),
+        _v4_blob(good, entry_bits=64),
+        bytes(blob),
+    ]
+    zero = bytearray(_v4_blob(good))
+    zero[4] = 0  # no count bytes
+    corrupt.append(bytes(zero))
+    empty = bytearray(_v4_blob(good)[:9])
+    empty[8] = 0  # a count of zero
+    corrupt.append(bytes(empty))
+    for blob in corrupt:
+        with pytest.raises(SketchDeserializeError, match="Failed to deserialize Theta"):
+            ThetaSketch.from_wire(blob)
+
+
 # ------------------------------------------------ live JVM cross-validation
 
 
@@ -232,6 +298,29 @@ def test_live_jvm_byte_parity(jvm_theta):
     ]
     for values in cases:
         assert _build(values).to_wire() == build(values)
+
+
+def test_live_jvm_compressed_blob(jvm_theta):
+    """datasketches-java's compressed writer (serial version 4, what
+    Spark's theta_sketch_agg stores) in exact and estimation mode: our
+    reader gets the state of the uncompressed blob, and the layout
+    ``_v4_blob`` forges for the corruption cases is byte-identical."""
+    jvm, _ = jvm_theta
+    for lg_k, n in ((10, 300), (6, 2000)):
+        upd = jvm.org.apache.datasketches.theta.UpdateSketch.builder()
+        upd = upd.setLogNominalEntries(lg_k).build()
+        for v in range(n):
+            upd.update(v)
+        compact = upd.compact(True, None)
+        packed = bytes(compact.toByteArrayCompressed())
+        assert packed[1] == 4
+        plain = ThetaSketch.from_wire(bytes(compact.toByteArray()))
+        back = ThetaSketch.from_wire(packed)
+        assert back.theta == plain.theta
+        assert np.array_equal(back.hashes, plain.hashes)
+        assert back.is_estimation_mode == (n > 1 << lg_k)
+        theta = None if plain.theta == MAX_HASH else plain.theta
+        assert _v4_blob(plain.hashes, theta) == packed
 
 
 def test_live_jvm_reads_our_estimation_blob(jvm_theta):

@@ -62,6 +62,14 @@ def test_declared_deps_match_imports():
     assert external <= deps, external - deps
 
 
+def test_declared_pyspark_floor_has_arrow_udf():
+    """The SQL aggregates and scalars import ``arrow_udf`` at module
+    load, and pyspark has it from 4.1: the declared floor says so."""
+    (spec,) = [d for d in _pyproject()["project"]["dependencies"] if d.startswith("pyspark")]
+    floor = tuple(int(p) for p in spec.split(">=")[1].split("."))
+    assert floor >= (4, 1), spec
+
+
 def test_all_subpackages_have_init():
     """setuptools find() drops any directory without __init__.py from
     the wheel silently — gate it."""

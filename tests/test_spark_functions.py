@@ -369,6 +369,41 @@ class TestSaltedAggregation:
 # ---------------- native JVM frequency fast paths ----------------------
 
 
+@pytest.mark.parametrize("n", [1000, 100_000])
+def test_theta_scalars_read_spark_theta_sketch_agg(spark, n):
+    """Spark's own theta_sketch_agg stores compressed compact theta
+    (serial version 4).  The datasketch_theta_* scalars answer on it in
+    exact mode (1000 values) and in estimation mode (100k values over
+    lg_k 12), and agree with Spark's theta_sketch_estimate."""
+    row = spark.sql(
+        f"""
+        WITH a AS (SELECT theta_sketch_agg(id, 12) AS native FROM range({n})),
+             b AS (SELECT datasketch_theta_lgk(12, id) AS ours FROM range({n}))
+        SELECT substring(hex(native), 1, 6) AS head,
+               theta_sketch_estimate(native) AS spark_est,
+               datasketch_theta_estimate(native) AS est,
+               datasketch_theta_is_estimation_mode(native) AS est_mode,
+               datasketch_theta_num_retained(native) AS retained,
+               datasketch_theta_lower_bound(native, 2) AS lb,
+               datasketch_theta_upper_bound(native, 2) AS ub,
+               datasketch_theta_estimate(datasketch_theta_union(native, ours)) AS union_est,
+               datasketch_theta_estimate(ours) AS ours_est,
+               theta_sketch_estimate(datasketch_theta_to_wire(native)) AS wire_est
+        FROM a CROSS JOIN b
+        """
+    ).first()
+    assert row.head in ("010403", "020403")  # serial version 4, compact
+    assert row.spark_est == round(row.est) == row.wire_est
+    assert row.union_est == row.ours_est
+    if n == 1000:
+        assert (row.est, row.lb, row.ub, row.retained) == (n, n, n, n)
+        assert not row.est_mode
+    else:
+        assert row.est_mode and row.retained >= 4096
+        assert row.lb < row.est < row.ub
+        assert row.est == pytest.approx(n, rel=3 / 64)  # 3 RSE at k = 4096
+
+
 def test_native_approx_top_k_matches_exact(spark):
     from datasketches_spark.functions import native
 

@@ -109,6 +109,11 @@ def test_theta_differential(jvm):
         back = ThetaSketch.from_wire(bytes(jsk.toByteArray()))
         assert back.get_estimate() == est
         assert back.theta == merged.theta
+        # java's compressed writer (serial version 4, what Spark's
+        # theta_sketch_agg stores) reads back to the same state
+        packed = ThetaSketch.from_wire(bytes(jsk.toByteArrayCompressed()))
+        assert packed.theta == back.theta
+        assert np.array_equal(packed.hashes, back.hashes)
         if case % 10 == 0 and len(parts) >= 2:
             # java unions OUR part blobs; same KMV math → same estimate
             u = SetOp.builder().setNominalEntries(1 << lg_k).buildUnion()

@@ -67,15 +67,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def q_theta_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid two-phase theta over l_orderkey; exact at lg_k=16.
+    """Theta distinct count of l_orderkey (aggregation.theta_agg_hybrid);
+    exact at lg_k=16.
 
-    Phase 1 (Python) folds partition-local KMV state; phase 2 is PURE
-    Catalyst (aggregation.theta_estimate_merge: flatten/array_distinct
-    over the bounded hash arrays) — one Python stage instead of two,
-    and the merge stays inside whole-stage codegen.  Bit-identical to
-    the blob path's estimate (tested in estimation mode too); the
-    classic blob pipeline stays driver-visible via
-    theta_distinct_by_flag and scalar_over_2k_stored."""
+    Spark's own theta_sketch_agg builds and merges the sketch in the
+    JVM (partial aggregate, Exchange, final aggregate); the only Python
+    is datasketch_theta_estimate over the one final blob.  Bit-identical
+    to the blob path's estimate (tested in estimation mode too); the
+    blob pipeline stays covered by theta_distinct_by_flag and
+    scalar_over_2k_stored."""
     from datasketches_spark.aggregation import theta_agg_hybrid
 
     _ensure(spark)
@@ -1758,7 +1758,11 @@ def q_theta_rollup_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketches as re-aggregable partial state: build per-nation theta
     sketches ONCE, then merge them up to region level — the reference's
     'partial aggregate as data' pattern (docs/README.md:190-192) as a
-    rollup.  Exact at lg_k=16 (distinct customers per region << 2^16)."""
+    rollup, on Spark's native theta blobs: theta_sketch_agg per nation,
+    the nation dim broadcast onto the 25 blobs, theta_union_agg per
+    region, then datasketch_theta_estimate.  No Python stage but the
+    estimate over one blob per region.  Exact at lg_k=16 (distinct
+    customers per region << 2^16)."""
     _ensure(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer").select(
@@ -1767,27 +1771,20 @@ def q_theta_rollup_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nationkey"), "n_regionkey"
     )
-    from datasketches_spark.aggregation import (
-        theta_estimate_merge,
-        theta_partial_state,
-    )
-
     fact = orders.join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-    # phase 1 emits per-(partition, nation) theta partials as plain SQL
-    # state; the nation dim is broadcast onto the tiny partial frame
-    # and the nation->region rollup merge is PURE Catalyst
-    # (theta_estimate_merge) -- one Python stage total, and the
-    # partials are still per-nation re-aggregable state.
-    per_nation = theta_partial_state(fact, "o_custkey", ["nationkey"], lg_k=16)
-    per_region_in = per_nation.join(F.broadcast(nation), "nationkey")
-    per_region = theta_estimate_merge(
-        per_region_in.select("n_regionkey", "hashes", "theta"),
-        group_cols=["n_regionkey"],
-        lg_k=16,
+    per_nation = fact.groupBy("nationkey").agg(
+        F.theta_sketch_agg("o_custkey", 16).alias("sk")
+    )
+    per_region = (
+        per_nation.join(F.broadcast(nation), "nationkey")
+        .groupBy("n_regionkey")
+        .agg(F.theta_union_agg("sk", 16).alias("sk"))
     )
     return per_region.select(
         F.col("n_regionkey").cast("long").alias("regionkey"),
-        F.round("estimate").cast("long").alias("distinct_customers"),
+        F.expr("CAST(round(datasketch_theta_estimate(sk)) AS BIGINT)").alias(
+            "distinct_customers"
+        ),
     )
 
 
@@ -3258,10 +3255,11 @@ def q_kll_arity_overloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_theta_hybrid_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped hybrid theta (aggregation.theta_agg_hybrid): the partial
-    build is the only Python stage; the KMV union merge is pure
-    Catalyst over the transparent (hashes, theta) state.  Exact at
-    lg_k=16; bit-identical to the blob path in estimation mode too
+    """Grouped theta distinct count (aggregation.theta_agg_hybrid):
+    Spark's theta_sketch_agg builds and merges one sketch per order
+    status in the JVM, and datasketch_theta_estimate reads each final
+    blob -- the only Python stage.  Exact at lg_k=16; bit-identical to
+    the blob path in estimation mode too
     (tests/test_scalepath_properties.py)."""
     from datasketches_spark.aggregation import theta_agg_hybrid
 

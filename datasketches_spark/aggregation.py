@@ -37,8 +37,6 @@ group's slices of those values:
   ``tuple_sketch_partial``: ``AodSketch(lg_k, n_values)`` / key hashes
       and summary rows prepared together / ``update_hashes`` / the
       blob.
-  ``theta_partial_state``: ``ThetaSketch(lg_k)`` / theta hashes of the
-      column / ``update_hashes`` / ``(hashes, theta)``.
   ``runtime_filter.bloomfilter_blob``: ``ApacheBloomFilter(num_bits,
       num_hashes, seed)`` / the coerced column / ``update_series`` /
       the wire bytes.
@@ -57,10 +55,10 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    LongType,
     StructField,
     StructType,
 )
@@ -517,8 +515,6 @@ def salted_sketch_agg(
     group.  Use when a handful of keys dominate the input (AQE's skew
     handling covers joins, not custom pandas aggregations).
     """
-    from pyspark.sql import functions as F
-
     group_cols = list(group_cols or [])
     salted = df.withColumn("__salt", (F.rand(seed=42) * num_salts).cast("int"))
     partial = sketch_partial(
@@ -530,184 +526,35 @@ def salted_sketch_agg(
     return sketch_merge(per_salt, family, group_cols, k, output_col)
 
 
-# ------------------------------------------------- hybrid theta (JVM merge)
-
-
-def theta_partial_state(
-    df: DataFrame,
-    input_col: str,
-    group_cols: list[str] | None = None,
-    lg_k: int = 12,
-    hashes_col: str = "hashes",
-    theta_col: str = "theta",
-) -> DataFrame:
-    """Phase 1 of the *hybrid* theta path: per-(partition, group) KMV
-    state as PLAIN SQL types instead of an opaque blob.
-
-    Emits ``group_cols + (hashes ARRAY<BIGINT> sorted unique, theta
-    BIGINT nullable)`` — theta is the exclusive 63-bit threshold, NULL
-    meaning "1.0" (exact mode; the sentinel avoids int64 overflow of
-    2^63).  Because the state is transparent, the MERGE phase needs no
-    Python at all: `theta_estimate_merge` is pure Catalyst expressions
-    (flatten / array_distinct / array_sort / element_at), which drops
-    one Python stage per query versus the blob path — the most
-    Spark-idiomatic formulation of the reference's theta union
-    semantics (src/theta_sketch.cpp: theta = min, keep k smallest).
-    State is bounded: each partial carries at most 2^lg_k hashes.
-    """
-    from .sketches.theta import ThetaSketch
-    from .hashing import MAX_HASH
-
-    group_cols = list(group_cols or [])
-    schema = StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            StructField(hashes_col, ArrayType(LongType()), True),
-            StructField(theta_col, LongType(), True),
-        ]
-    )
-    kind = spark_value_kind(df.schema[input_col].dataType)
-
-    def emit(sk: ThetaSketch) -> list:
-        sk._consolidate()
-        return [
-            sk.hashes.astype("int64").tolist(),
-            None if sk.theta == MAX_HASH else int(sk.theta),
-        ]
-
-    return _fold_partitions(
-        df, group_cols, [input_col], schema,
-        lambda: ThetaSketch(lg_k),
-        lambda pdf: [families_prepare("theta", pdf[input_col], kind)],
-        lambda sk, hashes: sk.update_hashes(hashes[0]),
-        emit,
-    )
-
-
-def _theta_union(
-    partials: DataFrame, keys: list[str], k: int, hashes_col: str, theta_col: str
-) -> DataFrame:
-    """Per ``keys`` group: ``__th`` = min threshold and ``__s`` =
-    sorted unique hashes below it (NULL threshold = 1.0 = no filter) —
-    the shared KMV-union core of the final estimate and the salted
-    pre-merge."""
-    from pyspark.sql import functions as F
-
-    agg = partials.groupBy(*keys).agg(
-        F.min(theta_col).alias("__th"),
-        F.flatten(F.collect_list(hashes_col)).alias("__h"),
-    )
-    th, h = F.col("__th"), F.col("__h")
-    return agg.withColumn(
-        "__s",
-        F.array_sort(
-            F.array_distinct(
-                F.when(th.isNull(), h).otherwise(F.filter(h, lambda x: x < th))
-            )
-        ),
-    ).drop("__h")
-
-
-def theta_premerge(
-    partials: DataFrame,
-    group_cols: list[str] | None = None,
-    lg_k: int = 12,
-    num_salts: int = 16,
-    hashes_col: str = "hashes",
-    theta_col: str = "theta",
-) -> DataFrame:
-    """Salted level-1 KMV union, pure JVM: merge partials per
-    (group, salt) and re-emit the same (hashes, theta) state purged to
-    <= 2^lg_k entries.
-
-    Why: the single-level merge materializes ALL of a group's partial
-    arrays in one aggregation buffer — at 100k input partitions x
-    2^lg_k longs that is gigabytes on one reducer.  Theta union is
-    associative (reference codegen/generated.cpp.j2:745
-    NOT_ORDER_DEPENDENT), so splitting the merge over ``num_salts``
-    reducers changes nothing about the result (asserted bit-identical
-    in tests/test_scalepath_properties.py) while bounding any one
-    buffer to ~partials/num_salts arrays.  The blob path's
-    `salted_sketch_agg` is the same trick in Python."""
-    from pyspark.sql import functions as F
-
-    group_cols = list(group_cols or [])
-    k = 1 << lg_k
-    salted = partials.withColumn(
-        "__salt", (F.rand(seed=7) * num_salts).cast("int")
-    )
-    agg = _theta_union(salted, group_cols + ["__salt"], k, hashes_col, theta_col)
-    over = F.size(F.col("__s")) > k
-    return agg.select(
-        *group_cols,
-        F.when(over, F.slice(F.col("__s"), 1, k))
-        .otherwise(F.col("__s"))
-        .alias(hashes_col),
-        F.when(over, F.element_at(F.col("__s"), k + 1))
-        .otherwise(F.col("__th"))
-        .alias(theta_col),
-    )
-
-
-def theta_estimate_merge(
-    partials: DataFrame,
-    group_cols: list[str] | None = None,
-    lg_k: int = 12,
-    output_col: str = "estimate",
-    hashes_col: str = "hashes",
-    theta_col: str = "theta",
-    pre_merge_salts: int | None = None,
-) -> DataFrame:
-    """Phase 2 of the hybrid theta path — the KMV union as pure JVM
-    expressions; see `theta_partial_state`.  Reproduces the Python
-    core's estimate exactly: TH = min(theta) (NULL = 1.0), survivors =
-    sorted unique hashes < TH, then the standard bottom-k estimator
-    with the (k+1)-th smallest as the post-purge threshold.
-
-    ``pre_merge_salts`` inserts the salted level-1 union
-    (`theta_premerge`) first — use it when a group's partial count is
-    large (wide clusters / global aggregates) to bound reducer
-    memory."""
-    from pyspark.sql import functions as F
-
-    from .hashing import MAX_HASH
-
-    group_cols = list(group_cols or [])
-    if pre_merge_salts:
-        partials = theta_premerge(
-            partials, group_cols, lg_k, pre_merge_salts, hashes_col, theta_col
-        )
-    k = 1 << lg_k
-    maxd = float(MAX_HASH)
-    agg = _theta_union(partials, group_cols, k, hashes_col, theta_col)
-    n = F.size(F.col("__s"))
-    est = F.when(
-        n > k,
-        F.lit(float(k)) / (F.element_at(F.col("__s"), k + 1).cast("double") / maxd),
-    ).otherwise(
-        F.when(F.col("__th").isNull(), n.cast("double")).otherwise(
-            n.cast("double") / (F.col("__th").cast("double") / maxd)
-        )
-    )
-    return agg.withColumn(output_col, est).drop("__th", "__s")
-
-
 def theta_agg_hybrid(
     df: DataFrame,
     input_col: str,
     group_cols: list[str] | None = None,
     lg_k: int = 12,
     output_col: str = "estimate",
-    pre_merge_salts: int | None = None,
 ) -> DataFrame:
-    """Two-phase theta distinct-count whose merge phase is Catalyst,
-    not Python: one Python stage (the partial build) + one JVM
-    aggregation.  Prefer this over `sketch_agg(..., "theta")` when only
-    the ESTIMATE is needed; use the blob path when the sketch itself is
-    stored or fed to the scalar SQL surface.  Set ``pre_merge_salts``
-    (~sqrt(input partitions)) on wide clusters so no single reducer
-    buffers every partial."""
-    parts = theta_partial_state(df, input_col, group_cols, lg_k)
-    return theta_estimate_merge(
-        parts, group_cols, lg_k, output_col, pre_merge_salts=pre_merge_salts
+    """Theta distinct-count estimate (DOUBLE) per group; use
+    ``sketch_agg(..., "theta")`` to keep the blob.
+
+    A column type Spark's ``theta_sketch_agg`` takes (INT, BIGINT,
+    FLOAT, DOUBLE, STRING, BINARY, ARRAY<INT|BIGINT>) is sketched in
+    the JVM: partial aggregate, one Exchange, final aggregate.  The
+    registered ``datasketch_theta_estimate`` reads the one blob per
+    group, so this needs :func:`datasketches_spark.register`.  Other
+    types run the blob path, where an empty global input gives no row.
+    Over numbers and strings the estimate is bit-identical to the blob
+    path's, except that NaN counts as a value, as in ``COUNT(DISTINCT)``
+    (the blob path reads it as NULL); BINARY values are hashed, where
+    the blob path merges them as sketches."""
+    group_cols = list(group_cols or [])
+    native = "int bigint float double string binary array<int> array<bigint>"
+    if df.schema[input_col].dataType.simpleString() not in native.split():
+        return sketch_agg(
+            df, input_col, "theta", group_cols, lg_k,
+            finalize=lambda sk: {output_col: float(sk.get_estimate())},
+            finalize_schema=f"`{output_col}` double",
+        )
+    est = F.call_function(
+        "datasketch_theta_estimate", F.theta_sketch_agg(input_col, lg_k)
     )
+    return df.groupBy(*group_cols).agg(est.alias(output_col))

@@ -29,6 +29,9 @@ def distinct(
 ) -> DataFrame:
     """Approximate COUNT(DISTINCT col) [GROUP BY by] via theta.
 
+    ``engine="sketch"`` is :func:`aggregation.theta_agg_hybrid`: Spark's
+    own ``theta_sketch_agg`` builds and merges the sketch for the types
+    it takes, and NaN counts as a value, as in ``COUNT(DISTINCT)``.
     ``engine="native"`` uses Spark's built-in JVM HLL
     (``hll_sketch_agg``; whole-stage codegen, zero Python transfer) —
     the raw-throughput path when you don't need theta's set algebra or
@@ -40,10 +43,8 @@ def distinct(
             F.hll_sketch_estimate(F.hll_sketch_agg(F.col(col), min(lg_k, 21)))
         ).cast("bigint").alias(output_col)
         return df.groupBy(*by).agg(est) if by else df.agg(est)
-    # estimate-only call: the hybrid path (Python partial build,
-    # Catalyst KMV merge) is bit-identical to blob theta and one
-    # Python stage cheaper; sketch_agg remains the path when the blob
-    # itself is wanted
+    # estimate-only call: no Python build or merge stage; sketch_agg
+    # remains the path when the blob itself is wanted
     from .aggregation import theta_agg_hybrid
 
     out = theta_agg_hybrid(df, col, group_cols=by, lg_k=lg_k)

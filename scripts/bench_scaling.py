@@ -1,9 +1,10 @@
 """Reproduce the docs/BASELINE_LOCAL.md scaling measurement.
 
-Times the Python two-phase theta/kll path, the JVM-native HLL path,
-and a no-op mapInPandas (the Arrow transfer floor) on synthetic 6M and
-60M-row inputs, interleaved best-of-N so JVM warmup and machine drift
-don't bias any one variant (first runs are warmup, excluded).
+Times the Python two-phase theta/kll path, the JVM-native HLL and
+theta paths, and a no-op mapInPandas (the Arrow transfer floor) on
+synthetic 6M and 60M-row inputs, interleaved best-of-N so JVM warmup
+and machine drift don't bias any one variant (first runs are warmup,
+excluded).
 
 Usage: python scripts/bench_scaling.py  → one JSON line per size.
 """
@@ -67,11 +68,9 @@ def main() -> None:
             "hll_native_jvm": lambda: df.agg(
                 F.hll_sketch_estimate(F.hll_sketch_agg("k", 12))
             ).collect(),
-            # hybrid theta: Python partial build + Catalyst KMV merge
-            # (salted pre-merge bounds reducer buffers at 32 partials)
-            "theta_hybrid": lambda: theta_agg_hybrid(
-                df, "k", lg_k=16, pre_merge_salts=8
-            ).collect(),
+            # theta estimate on Spark's own theta_sketch_agg (JVM
+            # build and merge, one Python estimate per group)
+            "theta_hybrid": lambda: theta_agg_hybrid(df, "k", lg_k=16).collect(),
             "noop_transfer_floor": lambda: df.mapInPandas(_noop, "n long").collect(),
             # A-ES weighted top-k: pure-JVM path; WindowGroupLimit's
             # partial pushdown keeps the shuffle at k rows per
@@ -145,11 +144,10 @@ def main() -> None:
                 ).select(
                     "g", F.expr("datasketch_theta_estimate(sketch)")
                 ).collect(),
-                "hybrid_skew_unsalted": lambda: theta_agg_hybrid(
+                # Spark's union buffer holds O(2^lg_k) entries, so
+                # the hot group needs no salt on this path
+                "hybrid_skew": lambda: theta_agg_hybrid(
                     skew_df, "k", group_cols=["g"], lg_k=16
-                ).collect(),
-                "hybrid_skew_salted8": lambda: theta_agg_hybrid(
-                    skew_df, "k", group_cols=["g"], lg_k=16, pre_merge_salts=8
                 ).collect(),
             }
         )

@@ -26,7 +26,6 @@ from datasketches_spark.aggregation import (
     sketch_merge,
     sketch_partial,
     theta_agg_hybrid,
-    theta_partial_state,
     tuple_sketch_agg,
     tuple_sketch_partial,
 )
@@ -37,7 +36,6 @@ from datasketches_spark.families import (
     create_sketch,
     update_sketch,
 )
-from datasketches_spark.hashing import MAX_HASH
 from datasketches_spark.runtime_filter import bloomfilter_blob
 from datasketches_spark.sketches import (
     AodSketch,
@@ -378,19 +376,6 @@ def test_golden_tuple_partial_matches_update_batch(spark, golden):
         ref = AodSketch(5, 2)
         ref.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
         assert bytes(out[g].sketch) == ref.serialize(), g
-
-
-def test_golden_theta_partial_state_matches_update_sketch(spark, golden):
-    df, groups = golden
-    with _batch_rows(spark, 2):
-        out = _by_group(theta_partial_state(df, "s", ["g"], lg_k=4).collect())
-    for g, rows in groups.items():
-        ref = _reference("theta", 4, _series(rows, "s"), None)
-        ref._consolidate()
-        theta = None if ref.theta == MAX_HASH else ref.theta
-        assert (out[g].hashes, out[g].theta) == (
-            ref.hashes.astype("int64").tolist(), theta
-        ), g
 
 
 def test_golden_bloomfilter_blob_matches_update_sketch(spark, golden):

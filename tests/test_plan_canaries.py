@@ -24,6 +24,10 @@ pattern, tests/test_arrow_sentinel_canary.py):
 6. jvm Bloom engine: ``bloom_prune`` plans Catalyst's ``might_contain``
    Filter with no Python node, and ``bloom_pruned_anti_join`` pushes
    ``IsNotNull(key)`` into both probed fact scans.
+7. theta estimate: ``theta_agg_hybrid`` over a BIGINT column builds
+   and merges in Spark's own ``theta_sketch_agg`` -- a partial and a
+   final ``ObjectHashAggregate`` around one Exchange, no
+   ``MapInPandas``.
 """
 
 import pytest
@@ -192,3 +196,22 @@ class TestJvmBloomProbe:
             if _is_node(ln, "FileScan parquet") and "PushedFilters: [IsNotNull(k)]" in ln
         ]
         assert len(probed) == 2, plan
+
+
+class TestNativeThetaEstimate:
+    def test_bigint_estimate_is_a_jvm_aggregate(self, spark):
+        from datasketches_spark.aggregation import theta_agg_hybrid
+
+        df = spark.range(0, 2000).selectExpr("id % 3 AS g", "id AS v")
+        out = theta_agg_hybrid(df, "v", ["g"], lg_k=10)
+        assert sorted(r.estimate for r in out.collect()) == [666.0, 667.0, 667.0]
+        plan = compat.physical_plan_string(out).split("== Initial Plan ==")[0]
+        assert "MapInPandas" not in plan, plan
+        lines = plan.splitlines()
+        aggs = [ln for ln in lines if _is_node(ln, "ObjectHashAggregate")]
+        assert len(aggs) == 2, plan
+        assert "partial_theta_sketch_agg(" in aggs[1], plan
+        assert "theta_sketch_agg(" in aggs[0] and "partial_" not in aggs[0], plan
+        exchanges = [i for i, ln in enumerate(lines) if _is_node(ln, "Exchange")]
+        assert len(exchanges) == 1, plan
+        assert lines.index(aggs[0]) < exchanges[0] < lines.index(aggs[1]), plan

@@ -101,35 +101,49 @@ def test_theta_hybrid_matches_blob_path(spark, lg_k):
     assert est == 500.0
 
 
-@pytest.mark.parametrize("salts", [2, 5, 16])
-def test_theta_premerge_is_free(spark, salts):
-    """The salted level-1 KMV union must be a no-op on results: theta
-    union is associative, so the pre-merged estimate is bit-identical
-    to the single-level merge, in estimation mode, for any salt
-    count."""
-    from datasketches_spark.aggregation import theta_agg_hybrid
+def _theta_estimates(spark, dtype, lg_k):
+    """(theta_agg_hybrid, blob path) estimates per group of one typed
+    column: 3 groups of ~6.7k distinct values over 8 partitions."""
+    from datasketches_spark.aggregation import sketch_agg, theta_agg_hybrid
 
     df = (
-        spark.range(0, 80_000)
-        .repartition(16)
+        spark.range(0, 30_000)
+        .repartition(8)
         .select(
-            (F.col("id") % 2).cast("string").alias("g"),
-            (F.col("id") * 104729 % 999_983).alias("v"),
+            (F.col("id") % 3).cast("string").alias("g"),
+            (F.col("id") * 7919 % 20_011).cast(dtype).alias("v"),
         )
     )
-    base = {
+    hybrid = {
         r["g"]: r["estimate"]
-        for r in theta_agg_hybrid(df, "v", ["g"], lg_k=8).collect()
+        for r in theta_agg_hybrid(df, "v", ["g"], lg_k=lg_k).collect()
     }
-    salted = {
-        r["g"]: r["estimate"]
-        for r in theta_agg_hybrid(
-            df, "v", ["g"], lg_k=8, pre_merge_salts=salts
+    blob = {
+        r["g"]: r["est"]
+        for r in sketch_agg(
+            df, "v", "theta", group_cols=["g"], k=lg_k,
+            finalize=lambda sk: {"est": float(sk.get_estimate())},
+            finalize_schema="est double",
         ).collect()
     }
-    assert base == salted
-    # estimation mode actually engaged (40k distinct per group >> 2^8)
-    assert all(v > 256 for v in base.values())
+    return hybrid, blob
+
+
+@pytest.mark.parametrize("dtype", ["int", "string", "double"])
+def test_theta_hybrid_matches_blob_path_native_types(spark, dtype):
+    """Spark's theta_sketch_agg hashes INT, STRING and DOUBLE as the
+    blob path does: the estimates are bit-identical."""
+    hybrid, blob = _theta_estimates(spark, dtype, 10)
+    assert hybrid == blob
+    assert all(v > 1024 for v in hybrid.values())  # estimation mode
+
+
+def test_theta_hybrid_other_types_take_blob_path(spark):
+    """Types theta_sketch_agg rejects run the blob path, so their
+    estimate is exactly sketch_agg theta's."""
+    for dtype in ("smallint", "decimal(10,2)", "boolean"):
+        hybrid, blob = _theta_estimates(spark, dtype, 6)
+        assert hybrid == blob, dtype
 
 
 def test_ann_recall_floor_ivf_and_lsh(spark):

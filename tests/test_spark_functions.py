@@ -515,6 +515,19 @@ def test_approx_distinct_and_quantiles(spark):
     assert abs(q["q_0_5"] - 1499.0) < 40
 
 
+def test_approx_distinct_counts_nan_like_count_distinct(spark):
+    """NaN is a value to COUNT(DISTINCT) (and -0.0 equals 0.0), so the
+    theta estimate counts it too."""
+    from datasketches_spark import approx
+
+    df = spark.sql(
+        "SELECT * FROM VALUES (-0.0D), (0.0D), (CAST('NaN' AS DOUBLE)), (NULL), (1.5D) AS t(v)"
+    )
+    want = df.selectExpr("count(DISTINCT v) n").first().n
+    assert want == 3
+    assert approx.distinct(df, "v").first().approx_distinct == want
+
+
 def test_approx_quantiles_string_routing(spark):
     """A string column routes through the string-items KLL; exact
     mode (k > n) makes the median deterministic."""

@@ -244,9 +244,6 @@ def test_stats_stream_counts_null_rows(spark, tmpdir):
 # ------------------------------------------------------------ AST audit
 
 _UPDATES = {"update_series", "update_values", "update_batch", "update_hashes", "update_coupons"}
-# (module, enclosing function, method): theta_partial_state folds
-# hashes families.prepare already computed
-_ALLOWED = {("aggregation.py", "theta_partial_state", "update_hashes")}
 
 
 def _calls(tree):
@@ -273,7 +270,7 @@ def test_no_sketch_updates_outside_families():
             bad += [
                 (fn, func, attr, line)
                 for func, attr, line in _calls(tree)
-                if attr in _UPDATES and (fn, func, attr) not in _ALLOWED
+                if attr in _UPDATES
             ]
     assert bad == [], bad
 

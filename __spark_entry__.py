@@ -1730,8 +1730,8 @@ def q_bloom_contains_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
-    # engine='auto' rides Spark's built-in JVM BloomFilter for the
-    # integral key (build = one all-JVM job, no Arrow transfer of the
+    # a classic session rides Spark's built-in JVM BloomFilter for
+    # the integral key (build = one all-JVM job, no Arrow transfer of the
     # 600k keys; probe = Catalyst's might_contain over the filter
     # bytes, a codegen'd Filter with no Python).  Measured r7
     # interleaved best-of-4: 0.65 s vs 0.79 s for the portable

@@ -14,7 +14,8 @@ applyInPandas), every SQL/Column function, io wire tables, streaming
 foreachBatch.  What the helpers shim: planner size statistics (used
 only as OPTIMIZATION gates — fallbacks pick the safe branch), task
 broadcasts (fall back to closure capture), filesystem probes, and the
-JVM-native bloom build and probe (auto picks the Python engine).
+JVM-native bloom build and probe (Bloom pruning takes the Apache
+filter and an Arrow UDF probe under Connect).
 """
 
 from __future__ import annotations

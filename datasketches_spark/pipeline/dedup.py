@@ -25,9 +25,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+from .. import compat
 from ..hashing import splitmix64
 from .text import doc_fingerprint
 
@@ -151,54 +153,6 @@ def minhash_signatures(
 
         slim = _fan_out_if_narrow(slim)
     return slim.mapInPandas(compute, schema=schema)
-
-
-def minhash_signatures_jvm(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    shingle: int = 5,
-) -> DataFrame:
-    """(id, sig array<long>) computed by pure JVM Column expressions —
-    no Python stage, no Arrow transfer.
-
-    One ``aggregate`` fold over the raw shingle array updates all
-    ``num_hashes`` minima per shingle (``least(acc_i, xxhash64(s,
-    i))``).  Duplicates need no array_distinct: the min over a
-    multiset equals the min over its set, so signatures are identical
-    either way.  The hash family (xxhash64 keyed by position) differs
-    from :func:`minhash_signatures`'s splitmix64, so the two paths'
-    signatures are not byte-compatible — but the banding recall math
-    depends only on hash uniformity, which both provide.
-
-    Caveat, MEASURED: Spark evaluates higher-order functions
-    interpreted (not WholeStageCodegen) and ``zip_with`` allocates a
-    fresh num_hashes array per shingle, so this path benches ~1.4x
-    SLOWER than the Arrow+numpy default at sf0.1.  It exists for
-    JVM-only deployments (no Python workers) and as the measured
-    record of why the engine keeps sketch cores in numpy.
-    """
-    t = F.lower(F.col(text_col))
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - (shingle - 1), F.lit(1))),
-        lambda i: t.substr(i, F.lit(shingle)),
-    )
-    init = F.array_repeat(F.lit(9223372036854775807), num_hashes)
-    sig = F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda a, i: F.least(a, F.xxhash64(s, i)),
-        ),
-    )
-    # NULL text must yield a NULL signature (matching the pandas
-    # engine); xxhash64 ignores NULL args, so the fold would otherwise
-    # give every NULL-text doc the same concrete signature
-    sig = F.when(F.col(text_col).isNotNull(), sig)
-    return df.select(F.col(id_col), sig.alias("sig"))
 
 
 def minhash_band_buckets(
@@ -331,7 +285,6 @@ def write_minhash_signatures(
     num_hashes: int = 64,
     shingle: int = 5,
     seed: int = 1,
-    engine: str = "pandas",
     mode: str = "overwrite",
     fan_out: bool = False,
 ) -> str:
@@ -350,14 +303,9 @@ def write_minhash_signatures(
     built from (signature-only verification trusts the table's ids).
     Returns ``path``.
     """
-    if engine == "jvm":  # note: the jvm hash family has no seed knob
-        sigs = minhash_signatures_jvm(df, id_col, text_col, num_hashes, shingle)
-    elif engine == "pandas":
-        sigs = minhash_signatures(
-            df, id_col, text_col, num_hashes, shingle, seed, fan_out=fan_out
-        )
-    else:
-        raise ValueError(f"unknown engine: {engine!r} (want 'jvm' or 'pandas')")
+    sigs = minhash_signatures(
+        df, id_col, text_col, num_hashes, shingle, seed, fan_out=fan_out
+    )
     # record the hash-family parameters in the column metadata
     # (survives parquet footers AND catalog schemas) so cross-corpus
     # consumers can rebuild COMPATIBLE signatures for their new side
@@ -369,11 +317,17 @@ def write_minhash_signatures(
                 "num_hashes": num_hashes,
                 "shingle": shingle,
                 "seed": seed,
-                "engine": engine,
+                "engine": "pandas",  # the one hash family; readers check it
                 "format_version": 1,
             }
         },
     )
+    return _write_signatures(sigs, id_col, path, table, buckets, mode)
+
+
+def _write_signatures(sigs, id_col, path, table, buckets, mode) -> str:
+    """``sigs`` written in the ``repartition(buckets, id)`` layout: a
+    catalog ``table`` bucketed by id at ``path``, else parquet."""
     sigs = sigs.repartition(buckets, F.col(id_col))
     if table is not None:
         (
@@ -395,10 +349,19 @@ MINHASH_META_KEY = "dsks_minhash_signatures"
 
 
 def _signature_meta(sigs: DataFrame) -> dict | None:
-    for f in sigs.schema.fields:
-        if f.name == "sig":
-            return (f.metadata or {}).get(MINHASH_META_KEY)
-    return None
+    """The table's metadata tag; raises on a table of the xxhash64
+    (``engine: "jvm"``) family, whose signatures no longer band with
+    freshly computed ones."""
+    meta = next(
+        ((f.metadata or {}).get(MINHASH_META_KEY) for f in sigs.schema.fields if f.name == "sig"),
+        None,
+    )
+    if meta is not None and meta.get("engine", "pandas") != "pandas":
+        raise ValueError(
+            f"stored signatures use the removed {meta['engine']!r} MinHash "
+            "hash family; re-write the table with write_minhash_signatures"
+        )
+    return meta
 
 
 def read_minhash_signatures(spark: SparkSession, source: str) -> DataFrame:
@@ -413,11 +376,18 @@ def read_minhash_signatures(spark: SparkSession, source: str) -> DataFrame:
     if _TABLE_NAME_RE.match(source) and not source.endswith(".parquet"):
         try:
             is_table = spark.catalog.tableExists(source)
-        except Exception:
+        except AnalysisException:  # an unknown catalog or namespace
             is_table = False
         if is_table:
             return spark.table(source)
     return spark.read.parquet(source)
+
+
+def _sig_width(sigs: DataFrame) -> int | None:
+    """Hashes per stored signature (None: no non-NULL one); one
+    limit-1 job."""
+    row = sigs.filter(F.col("sig").isNotNull()).select(F.size("sig").alias("w")).first()
+    return None if row is None else row["w"]
 
 
 def _check_sig_width(sigs: DataFrame, bands: int, rows: int) -> None:
@@ -426,15 +396,11 @@ def _check_sig_width(sigs: DataFrame, bands: int, rows: int) -> None:
     upper bands, so ``F.hash(all-NULL)`` degenerates to a CONSTANT
     band key and every doc pairs with every doc in those bands — a
     silent O(n^2) candidate blowup (the exact verify still returns
-    correct pairs, so nothing else catches it).  One limit-1 job."""
-    row = (
-        sigs.filter(F.col("sig").isNotNull())
-        .select(F.size("sig").alias("w"))
-        .first()
-    )
-    if row is not None and row["w"] < bands * rows:
+    correct pairs, so nothing else catches it)."""
+    width = _sig_width(sigs)
+    if width is not None and width < bands * rows:
         raise ValueError(
-            f"stored signatures carry {row['w']} hashes but banding "
+            f"stored signatures carry {width} hashes but banding "
             f"needs bands*rows = {bands}*{rows} = {bands * rows}; "
             "re-write the signature table with num_hashes >= bands*rows "
             "or pass matching bands=/rows=."
@@ -451,7 +417,6 @@ def upsert_minhash_signatures(
     num_hashes: int = 64,
     shingle: int = 5,
     seed: int = 1,
-    engine: str = "pandas",
 ) -> str:
     """Incrementally extend a stored signature table with NEW docs.
 
@@ -463,7 +428,7 @@ def upsert_minhash_signatures(
     Existing files are never rewritten, so the upsert costs O(new
     docs), not O(corpus).  Already-present ids are skipped, never
     duplicated: signatures are deterministic given (num_hashes,
-    shingle, seed, engine), so the stored row is already correct —
+    shingle, seed), so the stored row is already correct —
     pass the SAME parameters the table was built with (``num_hashes``
     is cross-checked against the stored signature width; the rest
     cannot be recovered from the table and are the caller's
@@ -476,36 +441,17 @@ def upsert_minhash_signatures(
     """
     spark = new_docs.sparkSession
     existing = read_minhash_signatures(spark, table if table is not None else path)
-    got = (
-        existing.filter(F.col("sig").isNotNull())
-        .select(F.size("sig").alias("w"))
-        .first()
-    )
-    if got is not None and got["w"] != num_hashes:
+    _signature_meta(existing)
+    width = _sig_width(existing)
+    if width is not None and width != num_hashes:
         raise ValueError(
-            f"stored signatures carry {got['w']} hashes but num_hashes="
+            f"stored signatures carry {width} hashes but num_hashes="
             f"{num_hashes} was requested; upserts must use the exact "
             "parameters the table was built with."
         )
     fresh = new_docs.join(existing.select(id_col), id_col, "left_anti")
-    if engine == "jvm":
-        sigs = minhash_signatures_jvm(fresh, id_col, text_col, num_hashes, shingle)
-    elif engine == "pandas":
-        sigs = minhash_signatures(fresh, id_col, text_col, num_hashes, shingle, seed)
-    else:
-        raise ValueError(f"unknown engine: {engine!r} (want 'jvm' or 'pandas')")
-    sigs = sigs.repartition(buckets, F.col(id_col))
-    if table is not None:
-        (
-            sigs.write.mode("append")
-            .option("path", path)
-            .bucketBy(buckets, id_col)
-            .sortBy(id_col)
-            .saveAsTable(table)
-        )
-    else:
-        sigs.write.mode("append").parquet(path)
-    return path
+    sigs = minhash_signatures(fresh, id_col, text_col, num_hashes, shingle, seed)
+    return _write_signatures(sigs, id_col, path, table, buckets, "append")
 
 
 def _resolve_signatures(
@@ -548,7 +494,6 @@ def lsh_verified_near_duplicates(
     seed: int = 1,
     ngram: int = 5,
     persist: bool = True,
-    engine: str = "pandas",
     signatures: "DataFrame | str | None" = None,
     fan_out: bool = False,
 ) -> DataFrame:
@@ -582,16 +527,8 @@ def lsh_verified_near_duplicates(
     pass ``persist=False`` (recomputes the signature pass per plan
     branch).
 
-    ``engine="pandas"`` (default) computes signatures with the seeded
-    splitmix64 Arrow+numpy path (:func:`minhash_signatures`);
-    ``engine="jvm"`` uses pure Column expressions
-    (:func:`minhash_signatures_jvm`).  MEASURED (sf0.1, 200 docs,
-    best-of-3 warm): pandas 0.98 s vs jvm 1.35 s — Spark's
-    higher-order functions (aggregate/zip_with/transform) are
-    interpreted, not codegen'd, and allocate a num_hashes-long array
-    per shingle, so the vectorized numpy path wins despite the Arrow
-    transfer; the JVM path remains useful where Python workers are
-    unavailable.  Signatures persist by default (both engines feed a
+    Signatures come from the seeded splitmix64 Arrow+numpy pass
+    (:func:`minhash_signatures`) and persist by default (they feed a
     self-join, which would otherwise recompute the pass per branch).
 
     ``signatures=`` (a DataFrame, parquet path, or table name from
@@ -600,7 +537,7 @@ def lsh_verified_near_duplicates(
     pre-filter become pure JVM plans over the stored (id, sig) table,
     and the raw text is touched only by the exact verify join.  This
     is the 100 TB path — the Python pass ran once, at write time.
-    ``num_hashes``/``shingle``/``seed``/``engine`` are then ignored
+    ``num_hashes``/``shingle``/``seed`` are then ignored
     (the table fixes them); build it from the same document slice.
     """
     # cand-persist stays governed by the caller's persist flag even on
@@ -612,12 +549,8 @@ def lsh_verified_near_duplicates(
         sigs = _resolve_signatures(signatures, df)
         _check_sig_width(sigs, bands, rows)
         persist = False  # the stored table IS the materialization
-    elif engine == "jvm":
-        sigs = minhash_signatures_jvm(df, id_col, text_col, num_hashes, shingle)
-    elif engine == "pandas":
-        sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle, seed)
     else:
-        raise ValueError(f"unknown engine: {engine!r} (want 'jvm' or 'pandas')")
+        sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle, seed)
     if persist:
         sigs = sigs.persist()
     cand = minhash_candidate_pairs(sigs, id_col, bands, rows)
@@ -633,12 +566,8 @@ def lsh_verified_near_duplicates(
     # synthetic documents: 4917/5000 touched, pruned 12.8 s vs 11.6 —
     # a small planned-overhead loss, bounded because the semi-join is
     # left to Spark/AQE, never a forced broadcast of the id set).
-    from .skewjoin import _plan_size_bytes  # noqa: PLC0415
-
-    try:
-        prune = _plan_size_bytes(df) > (64 << 20)
-    except Exception:  # stats unavailable (e.g. streaming source)
-        prune = True
+    size = compat.plan_size_bytes(df)  # None: stats unavailable (Connect)
+    prune = size is None or size > (64 << 20)
     verify_src = df
     if prune:
         # Signature pre-filter BEFORE the exact verify: banding
@@ -707,7 +636,6 @@ def minhash_cross_near_duplicates(
     bands: int = 16,
     rows: int = 4,
     ngram: int = 5,
-    engine: str = "pandas",
     persist: bool = True,
 ) -> DataFrame:
     """Near-duplicates of NEW documents against a STORED corpus — the
@@ -719,9 +647,10 @@ def minhash_cross_near_duplicates(
     ``history`` is the stored signature table (DataFrame, parquet
     path, or catalog name).  When the table carries the r14 metadata
     tag the hash-family parameters (``num_hashes``/``shingle``/
-    ``seed``/``engine``) are taken FROM it — the new side's
-    signatures are then compatible by construction; for pre-r14
-    tables pass the same values used at write time.
+    ``seed``) are taken FROM it — the new side's signatures are then
+    compatible by construction; for pre-r14 tables pass the same
+    values used at write time.  A table tagged with the removed
+    ``engine: "jvm"`` family raises: re-write it.
 
     ``history_docs`` (an ``(id_col, text_col)`` DataFrame of the
     historical text) enables the EXACT char-ngram verify — output
@@ -745,17 +674,7 @@ def minhash_cross_near_duplicates(
         num_hashes = int(meta.get("num_hashes", num_hashes))
         shingle = int(meta.get("shingle", shingle))
         seed = int(meta.get("seed", seed))
-        engine = meta.get("engine", engine)
-    if engine == "jvm":
-        new_sigs = minhash_signatures_jvm(
-            new_df, id_col, text_col, num_hashes, shingle
-        )
-    elif engine == "pandas":
-        new_sigs = minhash_signatures(
-            new_df, id_col, text_col, num_hashes, shingle, seed
-        )
-    else:
-        raise ValueError(f"unknown engine: {engine!r} (want 'jvm' or 'pandas')")
+    new_sigs = minhash_signatures(new_df, id_col, text_col, num_hashes, shingle, seed)
     if persist:
         # the new-side signatures feed the bucket join AND the
         # estimate filter — without caching the Python pass re-runs

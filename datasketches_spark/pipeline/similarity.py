@@ -1118,16 +1118,12 @@ def semantic_dedup(
     # a Python assignment pass, so corpus-scale plans sort-merge the
     # whole corpus against it; the Bloom split shuffles only
     # possibly-dropped rows (plain broadcast plans are kept unchanged).
-    # The STORED-assignments route keeps the plain join: its documented
-    # contract (r13, pinned by test_stored_assignments_route) is a
-    # pure-JVM query-time plan — no Python node — and the Bloom probe
-    # is a pandas UDF.
-    if assignments is None:
-        from ..runtime_filter import anti_join_pruned  # noqa: PLC0415
+    # On the stored-assignments route the plan stays pure JVM (r13,
+    # pinned by test_stored_assignments_route): on a classic session
+    # the Bloom probe is Catalyst's might_contain for every id type.
+    from ..runtime_filter import anti_join_pruned  # noqa: PLC0415
 
-        kept = anti_join_pruned(df, dropped, id_col)
-    else:
-        kept = df.join(dropped, id_col, "left_anti")
+    kept = anti_join_pruned(df, dropped, id_col)
     if keep_cluster_col:
         kept = kept.join(assigned.select(id_col, cluster_col), id_col)
     return kept

@@ -63,19 +63,6 @@ def detect_hot_keys(
     ]
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a frame (no job; same stats the
-    planner's broadcast decision reads).  Raises under Spark Connect
-    (no planner-stat surface) — every caller treats the failure as
-    'size unknown' and takes its scale-safe branch."""
-    size = compat.plan_size_bytes(df)
-    if size is None:
-        raise RuntimeError(
-            "planner statistics unavailable (Spark Connect session)"
-        )
-    return size
-
-
 def skew_join(
     left: DataFrame,
     right: DataFrame,
@@ -104,13 +91,10 @@ def skew_join(
         # auto mode only: an explicit hot_keys list forces the split
         # (callers use it to pin the plan; tests exercise it)
         thr = compat.auto_broadcast_threshold(left.sparkSession)
-        try:
-            right_bytes = _plan_size_bytes(right)
-        except RuntimeError:
-            # stats unavailable (Connect): skip the broadcast
-            # fast-path check; the hot/cold split below is exact and
-            # scale-safe regardless of the right side's size
-            right_bytes = None
+        # None: stats unavailable (Connect), so no broadcast fast path;
+        # the hot/cold split below is exact and scale-safe regardless
+        # of the right side's size
+        right_bytes = compat.plan_size_bytes(right)
         if right_bytes is not None and 0 < thr and right_bytes <= thr:
             return left.join(right, on, how)
         hot_keys = detect_hot_keys(

@@ -6,10 +6,11 @@ expensive downstream join or shuffle.  A real semi-join shuffles the
 fact side; broadcasting the raw keyset is limited by driver memory.  A
 Bloom filter of the keyset is a few KB-MB regardless of key count, so:
 
-  phase 1: build the filter over the dim keys (Spark's BloomFilter in
-           one all-JVM job, or a two-phase sketch build)
+  phase 1: build the filter over the dim keys — Spark's BloomFilter in
+           one all-JVM job on a classic session, the Apache filter's
+           two-phase sketch build under Spark Connect
   phase 2: probe every fact row — Catalyst's ``might_contain`` for
-           Spark's filter, an Arrow-vectorized UDF otherwise; the fact
+           Spark's filter, an Arrow UDF for the Apache one; the fact
            table streams through its scan, no shuffle, no driver
            collect of the keyset.
 
@@ -26,10 +27,12 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import DataType, StringType
 
 from . import compat
 from .aggregation import (
@@ -39,22 +42,8 @@ from .aggregation import (
     sketch_merge,
     sketch_partial,
 )
-from .families import coerce_value_batch, prepare, spark_value_kind, update_prepared
+from .families import coerce_value_batch, from_arrow, prepare, spark_value_kind, update_prepared
 from .sketches import ApacheBloomFilter, BloomFilterSketch
-
-
-def _declared_kind(fact: DataFrame, fact_key) -> "str | None":
-    """``"int64"`` when the probe key is a DECLARED integral column —
-    the probe must undo pandas' null-driven float64 rendering (5 int
-    and 5.0 double hash differently) exactly like the build side's
-    :func:`~datasketches_spark.families.coerce_value_batch` does.
-    Column expressions (unresolvable here) keep the raw dtype."""
-    if isinstance(fact_key, Column):
-        return None
-    try:
-        return spark_value_kind(fact.schema[fact_key].dataType)
-    except Exception:
-        return None
 
 
 def bloom_filter_of(
@@ -122,7 +111,9 @@ def bloom_prune_with(
     negatives are exact) — the dedup/novelty direction; NULL keys are
     dropped either way.
     """
-    hit = _probe(fact, fact_key, blob, "python")
+    hit = _udf_probe(
+        fact, fact_key, blob, BloomFilterSketch.deserialize, BloomFilterSketch.contains_values
+    )
     return fact.where(~hit if invert else hit)
 
 
@@ -164,34 +155,77 @@ def bloomfilter_prune_with(
     blob may come from THIS engine or from any other DataSketches
     system (java/cpp/py BloomFilter.toByteArray()) — probe semantics
     are bit-identical either way."""
-    hit = _probe(fact, fact_key, blob, "apache")
+    hit = _udf_probe(
+        fact, fact_key, blob, ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series
+    )
     return fact.where(~hit if invert else hit)
 
 
+def _join_type(spark, a: DataType, b: DataType) -> DataType:
+    """The type an equi-join compares keys of types ``a`` and ``b`` in:
+    a string meets the other type (``'012' = 12`` holds); any other
+    pair widens as ``coalesce`` widens it (analysis only, no job)."""
+    if a == b:
+        return a
+    if isinstance(a, StringType) != isinstance(b, StringType):
+        return b if isinstance(a, StringType) else a
+    both = F.coalesce(F.lit(None).cast(a), F.lit(None).cast(b))
+    return spark.range(0).select(both).schema[0].dataType
+
+
+def _as_type(df: DataFrame, key, as_type: "DataType | None" = None) -> "tuple[Column, DataType]":
+    """``df``'s ``key`` (a name or Column) compared as ``as_type``
+    (default: its own type), and that type: ``try_cast`` unless both
+    are integral, so a value ``as_type`` cannot hold is NULL."""
+    key = key if isinstance(key, Column) else F.col(key)
+    own = df.select(key).schema[0].dataType
+    if as_type in (None, own) or spark_value_kind(own) == spark_value_kind(as_type) == "int64":
+        return key, own
+    return key.try_cast(as_type), as_type
+
+
+def _filter_key(df: DataFrame, key, as_type: "DataType | None" = None) -> Column:
+    """The BIGINT a Spark BloomFilter holds for :func:`_as_type` of
+    ``df``'s ``key``, read by both the filter build and the probe: an
+    integral key's value, else its ``xxhash64`` (-0.0 and 0.0, and all
+    NaNs, hash alike, as join equality has it).  NULL stays NULL, not
+    ``xxhash64``'s seed."""
+    key, key_type = _as_type(df, key, as_type)
+    if spark_value_kind(key_type) == "int64":
+        return key.cast("long")
+    return F.when(key.isNotNull(), F.xxhash64(key))
+
+
 def jvm_bloom_filter_bytes(
-    df: DataFrame, key_col: str, lg_m: int = 22, num_hashes: int = 6
+    df: DataFrame,
+    key_col: str,
+    lg_m: int = 22,
+    num_hashes: int = 6,
+    key_type: "DataType | None" = None,
 ) -> bytes:
-    """Serialized Spark BloomFilter of an integral key column, built by
-    the JVM in one job (no Python, no Arrow).  ``2^lg_m`` bits;
-    expectedNumItems is back-derived so java picks ``num_hashes``
-    hash functions (k = round(numBits/n * ln 2)).  An input with no
-    non-NULL key yields an empty filter of the same geometry."""
+    """Serialized Spark BloomFilter of :func:`_filter_key` over
+    ``df[key_col]``, built by the JVM in one job (no Python, no Arrow).
+    ``2^lg_m`` bits; expectedNumItems is back-derived so java picks
+    ``num_hashes`` hash functions (k = round(numBits/n * ln 2)).  An
+    input with no non-NULL key yields an empty filter of the same
+    geometry."""
     from py4j.protocol import Py4JJavaError  # noqa: PLC0415
     if not compat.has_jvm(df):
         raise RuntimeError(
-            "engine='jvm' needs a classic py4j session "
-            "(DataFrameStatFunctions.bloomFilter is Scala-only); use "
-            "engine='python' or 'apache' under Spark Connect"
+            "Spark's BloomFilter needs a classic py4j session "
+            "(DataFrameStatFunctions.bloomFilter is Scala-only); under "
+            "Spark Connect build the Apache filter with bloomfilter_blob"
         )
+    key = _filter_key(df, key_col, key_type)
     num_bits = 1 << lg_m
     expected = max(1, int(round(num_bits * math.log(2) / num_hashes)))
     jvm = df.sparkSession.sparkContext._jvm
     try:
-        jbf = df._jdf.stat().bloomFilter(key_col, expected, num_bits)
+        jbf = df._jdf.stat().bloomFilter(key._jc, expected, num_bits)
     except Py4JJavaError:
         # the bloomFilter aggregate has no zero value: with no
         # non-NULL key it fails deserializing a null buffer
-        if not df.where(F.col(key_col).isNotNull()).isEmpty():
+        if not df.where(key.isNotNull()).isEmpty():
             raise
         jbf = jvm.org.apache.spark.util.sketch.BloomFilter.create(expected, num_bits)
     baos = jvm.java.io.ByteArrayOutputStream()
@@ -199,63 +233,50 @@ def jvm_bloom_filter_bytes(
     return bytes(baos.toByteArray())
 
 
-# engine -> filter build.  The apache filter (bloomfilter_blob) has the
-# same plan shape as the python one, but its blob is loadable by any
-# DataSketches system — pick it when the filter must cross systems
-_BUILDS = {
-    "jvm": jvm_bloom_filter_bytes,
-    "python": bloom_filter_blob,
-    "apache": bloomfilter_blob,
-}
-
-# engine -> (blob loader, vectorized membership) for the pandas UDF probe
-_UDF_PROBES = {
-    "python": (BloomFilterSketch.deserialize, BloomFilterSketch.contains_values),
-    "apache": (ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series),
-}
+def _probe(fact: DataFrame, fact_key, blob: bytes, key_type: "DataType | None" = None) -> Column:
+    """Boolean Column: might :func:`_filter_key` of ``fact_key`` be in
+    Spark's filter ``blob``?  Catalyst's ``might_contain`` — a
+    codegen'd Filter, no Python in the plan.  NULL for a NULL key, so
+    ``where(c)`` and ``where(~c)`` both drop NULL keys."""
+    return compat.bloom_might_contain(_filter_key(fact, fact_key, key_type), blob)
 
 
-def _probe(fact: DataFrame, fact_key, blob: bytes, engine: str) -> Column:
-    """Boolean Column: might ``fact_key`` be in ``engine``'s filter
-    ``blob``?  NULL for a NULL key, so ``where(c)`` and ``where(~c)``
-    both drop NULL keys.
-
-    The jvm filter is Spark's own BloomFilter, probed by Catalyst's
-    ``might_contain`` — a codegen'd Filter, no Python in the plan.
-    The python/apache blobs are probed by a pandas UDF; the blob
-    travels as a task broadcast and is deserialized once per Python
-    worker."""
-    key = fact_key if isinstance(fact_key, Column) else F.col(fact_key)
-    if engine == "jvm":
-        return compat.bloom_might_contain(key, blob)
-    load, contains = _UDF_PROBES[engine]
-    kind = _declared_kind(fact, fact_key)
+def _udf_probe(fact: DataFrame, fact_key, blob: bytes, load, contains) -> Column:
+    """:func:`_probe` for a sketch filter ``blob`` (``load`` decodes
+    it once per Python worker, ``contains`` probes a batch): an Arrow
+    UDF, so a NULL-bearing int batch is still probed as int64."""
     bc = compat.broadcast_value(fact.sparkSession, bytes(blob))
     holder: list = []
 
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
+    @arrow_udf("boolean")
+    def probe(keys: pa.Array) -> pa.Array:
         if not holder:
             holder.append(load(bc.value))
-        out = pd.Series(pd.NA, index=keys.index, dtype="boolean")
-        ok = keys.notna()
+        series, kind, _ = from_arrow(keys)
+        ok = series.notna().to_numpy()
+        out = np.full(len(series), None, dtype=object)
         if ok.any():
-            out[ok] = contains(holder[0], coerce_value_batch(keys[ok], kind))
-        return out
+            out[ok] = contains(holder[0], coerce_value_batch(series[ok], kind))
+        return pa.array(out.tolist(), type=pa.bool_())
 
-    return probe(key)
+    return probe(fact_key)
 
 
-def _resolve_engine(df: DataFrame, key_col: str, engine: str) -> str:
-    """``engine``, with ``auto`` resolved: the JVM filter for an
-    integral ``df[key_col]`` on a classic session, else the python
-    one."""
-    if engine not in ("auto", *_BUILDS):
-        raise ValueError(f"engine ({engine!r}) must be auto/jvm/python/apache")
-    if engine == "auto":
-        integral = spark_value_kind(df.schema[key_col].dataType) == "int64"
-        engine = "jvm" if integral and compat.has_jvm(df) else "python"
-    return engine
+def _hit(fact: DataFrame, fact_key, dim: DataFrame, dim_key: str, lg_m: int) -> Column:
+    """Might ``fact_key`` be in ``dim[dim_key]``, both compared as their
+    equi-join compares them?  Spark's filter on a classic session, the
+    Apache one under Spark Connect."""
+    key_type = _join_type(
+        fact.sparkSession, fact.select(fact_key).schema[0].dataType, dim.schema[dim_key].dataType
+    )
+    if compat.has_jvm(dim):
+        blob = jvm_bloom_filter_bytes(dim, dim_key, lg_m=lg_m, key_type=key_type)
+        return _probe(fact, fact_key, blob, key_type)
+    dim = dim.select(_as_type(dim, dim_key, key_type)[0].alias(dim_key))
+    return _udf_probe(
+        fact, _as_type(fact, fact_key, key_type)[0], bloomfilter_blob(dim, dim_key, lg_m=lg_m),
+        ApacheBloomFilter.from_wire, ApacheBloomFilter.query_series,
+    )
 
 
 def bloom_prune(
@@ -264,27 +285,22 @@ def bloom_prune(
     dim: DataFrame,
     dim_key: str,
     lg_m: int = 22,
-    engine: str = "auto",
 ) -> DataFrame:
     """Rows of ``fact`` whose key is (probably) in ``dim[dim_key]``.
 
-    No false negatives: every fact row with a genuinely matching dim key
-    survives.  Output may contain a small fraction of non-matching rows
+    No false negatives: every fact row whose key equals a dim key under
+    the equi-join ``fact_key = dim_key`` survives, whatever the two key
+    types.  Output may contain a small fraction of non-matching rows
     (FPP ~ (1-e^(-6n/m))^6); follow with an exact join if needed.
 
-    ``engine='auto'`` rides Spark's built-in JVM BloomFilter when the
-    dim key is integral (build = one all-JVM job; probe = Catalyst's
-    ``might_contain`` over the filter bytes as a plan literal — a
-    codegen'd Filter, no Python), and the portable two-phase DSKS
-    sketch path otherwise
-    (``bloom_filter_blob``: driver-merged partials when bounded, else
-    the blob-only shuffle).  Both scale unchanged when ``dim`` has
-    billions of keys; only the portable path yields a storable,
-    mergeable sketch column.
+    On a classic session the filter is Spark's own BloomFilter over
+    :func:`_filter_key`, for every key type: one all-JVM build job, and
+    Catalyst's ``might_contain`` over the filter bytes as a plan
+    literal — a codegen'd Filter, no Python.  Under Spark Connect it is
+    the Apache filter (:func:`bloomfilter_blob`), probed by an Arrow
+    UDF.  Both scale unchanged when ``dim`` has billions of keys.
     """
-    engine = _resolve_engine(dim, dim_key, engine)
-    blob = _BUILDS[engine](dim, dim_key, lg_m=lg_m)
-    return fact.where(_probe(fact, fact_key, blob, engine))
+    return fact.where(_hit(fact, fact_key, dim, dim_key, lg_m))
 
 
 def bloom_pruned_anti_join(
@@ -292,7 +308,6 @@ def bloom_pruned_anti_join(
     drop: DataFrame,
     key_col: str,
     lg_m: int = 23,
-    engine: str = "auto",
 ) -> DataFrame:
     """``fact LEFT ANTI JOIN drop ON key_col`` with the fact side
     pre-split by a Bloom filter over ``drop``'s keys — guide §3.2's
@@ -318,19 +333,15 @@ def bloom_pruned_anti_join(
     and the ``2^lg_m``-bit filter ships to every task.  Default
     ``lg_m=23`` (1 MB) holds ~1M dropped keys at <1% FPP; beyond that
     the prune degrades gracefully (more rows re-checked exactly, never
-    wrong) — raise ``lg_m`` when billions of keys are dropped.  Engine
-    dispatch matches :func:`bloom_prune`.
+    wrong) — raise ``lg_m`` when billions of keys are dropped.  The
+    filter's route matches :func:`bloom_prune`.
     """
-    engine = _resolve_engine(drop, key_col, engine)
     drop_keys = drop.select(key_col).where(F.col(key_col).isNotNull())
-    # NULL keys are routed around the probe (below): besides matching
-    # anti-join semantics, this keeps integral key batches int64 in
-    # pandas for the UDF probes (one NULL renders a batch float64, and
-    # ints hash differently from doubles).  An empty drop side builds
-    # an empty filter: every fact row takes the exact-negative branch.
+    # NULL keys can never match, so they are routed around the probe
+    # (below), as left_anti keeps them.  An empty drop side builds an
+    # empty filter: every fact row takes the exact-negative branch.
     fact_nn = fact.where(F.col(key_col).isNotNull())
-    blob = _BUILDS[engine](drop_keys, key_col, lg_m=lg_m)
-    hit = _probe(fact_nn, key_col, blob, engine)
+    hit = _hit(fact_nn, key_col, drop_keys, key_col, lg_m)
     checked = fact_nn.where(hit).join(drop_keys, key_col, "left_anti")
     out = fact_nn.where(~hit).unionByName(checked)
     if fact.schema[key_col].nullable:

@@ -403,15 +403,15 @@ lines.append(
     "collisions < 1e-5 per 100 TB-scale corpus); pass "
     "`hash_join=False` for exact string equality.")
 lines.append(
-    "- **Bloom runtime filter engine selection** "
-    "(`runtime_filter.bloom_prune(engine='auto')`): integral dimension "
-    "keys build via Spark's JVM `DataFrameStatFunctions.bloomFilter` "
-    "(whole-stage scan, no Python) and probe via Catalyst's "
-    "`might_contain` over the filter bytes — a codegen'd Filter, no "
-    "Python node (tests/test_plan_canaries.py); non-integral keys fall "
-    "back to the DSKS python builder.  Force one with "
-    "`engine='jvm'|'python'|'apache'`.  The python/apache filter BYTES "
-    "broadcast via `sc.broadcast`, never as a DataFrame column.")
+    "- **Bloom runtime filter routes** "
+    "(`runtime_filter.bloom_prune`, `bloom_pruned_anti_join`): classic: "
+    "Spark's filter for every key type — built by the JVM's "
+    "`DataFrameStatFunctions.bloomFilter` and probed by Catalyst's "
+    "`might_contain` over the filter bytes, a codegen'd Filter with no "
+    "Python node (tests/test_plan_canaries.py); integral keys enter "
+    "as BIGINT, every other type as `xxhash64(key)`.  Connect: the "
+    "Apache filter (`bloomfilter_blob`), probed by an Arrow UDF; its "
+    "BYTES broadcast via `sc.broadcast`, never as a DataFrame column.")
 lines.append(
     "- **Integer-typed quantile wire blobs**: export an int64 "
     "KLL/Quantiles/REQ sketch with the family's `*_to_wire` (emits "

@@ -50,3 +50,28 @@ def job_count(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def bloom_route(monkeypatch):
+    """``bloom_route(route, *frames)`` puts a Bloom-pruning case on
+    ``route``.  Cases parametrized over ["jvm", "python", "apache"]
+    keep the names of the engines they once chose: "jvm" keeps the
+    frames (an integral key) and "python" casts every column to STRING
+    (a hashed key), both on Spark's own filter; "apache" keeps the
+    frames and reports the py4j bridge absent until the test ends, as
+    on Spark Connect, which takes the Apache filter."""
+    from pyspark.sql import functions as F
+
+    from datasketches_spark import compat
+
+    def on(route, *frames):
+        if route == "apache":
+            monkeypatch.setattr(compat, "has_jvm", lambda obj: False)
+        if route != "python":
+            return frames
+        return tuple(
+            f.select(*[F.col(c).cast("string").alias(c) for c in f.columns]) for f in frames
+        )
+
+    return on

@@ -34,12 +34,10 @@ def fact_drop(spark):
 
 class TestBloomPrunedAntiJoin:
     @pytest.mark.parametrize("engine", ["jvm", "python", "apache"])
-    def test_matches_plain_anti_join(self, spark, fact_drop, engine):
-        fact, drop = fact_drop
+    def test_matches_plain_anti_join(self, spark, fact_drop, bloom_route, engine):
+        fact, drop = bloom_route(engine, *fact_drop)
         plain = _rows(fact.join(drop, "doc_id", "left_anti"))
-        pruned = _rows(
-            bloom_pruned_anti_join(fact, drop, "doc_id", engine=engine)
-        )
+        pruned = _rows(bloom_pruned_anti_join(fact, drop, "doc_id"))
         assert pruned == plain
         assert any("null doc" in r for r in pruned), "NULL-key row lost"
 
@@ -52,14 +50,14 @@ class TestBloomPrunedAntiJoin:
         assert _rows(bloom_pruned_anti_join(fact, drop, "doc_id", lg_m=6)) == plain
 
     @pytest.mark.parametrize("engine", ["jvm", "python", "apache"])
-    def test_empty_drop_side_keeps_everything(self, spark, fact_drop, engine):
+    def test_empty_drop_side_keeps_everything(self, spark, fact_drop, bloom_route, engine):
         # regression: Spark's stat().bloomFilter alone THROWS on an
         # empty build side (a dedup threshold that drops nothing); the
         # empty filter built instead sends every row down the
         # exact-negative branch
         fact, drop = fact_drop
-        empty = drop.where("doc_id < 0")
-        out = bloom_pruned_anti_join(fact, empty, "doc_id", engine=engine)
+        fact, empty = bloom_route(engine, fact, drop.where("doc_id < 0"))
+        out = bloom_pruned_anti_join(fact, empty, "doc_id")
         assert _rows(out) == _rows(fact)
 
     def test_string_keys(self, spark):

@@ -203,7 +203,7 @@ def _java_v1_filter(spark, members):
 
 @pytest.mark.parametrize("version", [2, 1])
 def test_jvm_probe_matches_java_might_contain(spark, version):
-    """The jvm engine's probe (Catalyst's might_contain over the blob)
+    """The classic probe (Catalyst's might_contain over the blob)
     keeps exactly the keys java's BloomFilter.mightContain accepts, on
     the V2 wire jvm_bloom_filter_bytes writes and on the V1 wire."""
     from datasketches_spark.runtime_filter import _probe, jvm_bloom_filter_bytes
@@ -224,36 +224,34 @@ def test_jvm_probe_matches_java_might_contain(spark, version):
         [members, rng.integers(-(10**12), 10**12, 500)]
     ).astype(np.int64)
     fact = spark.createDataFrame(pd.DataFrame({"k": keys}))
-    kept = {r["k"] for r in fact.where(_probe(fact, "k", blob, "jvm")).collect()}
+    kept = {r["k"] for r in fact.where(_probe(fact, "k", blob)).collect()}
     assert kept == {int(k) for k in keys if jbf.mightContain(int(k))}
     assert set(members.tolist()) <= kept  # members always hit
 
 
 def test_bloom_prune_engines_agree(spark):
-    """jvm and python engines both keep every true member; string keys
-    fall back to the portable path under engine='auto'."""
+    """Integral and string keys both keep every true member, and the
+    route is no longer a caller's choice: ``engine=`` is rejected."""
     from datasketches_spark import bloom_prune
 
     fact = spark.range(0, 3000).withColumnRenamed("id", "k")
     dim = spark.range(0, 3000, 11).withColumnRenamed("id", "d")
     expect = set(range(0, 3000, 11))
-    for engine in ("jvm", "python", "auto"):
-        got = {r["k"] for r in bloom_prune(fact, "k", dim, "d", lg_m=16,
-                                           engine=engine).collect()}
-        assert expect <= got
+    got = {r["k"] for r in bloom_prune(fact, "k", dim, "d", lg_m=16).collect()}
+    assert expect <= got
     sfact = fact.selectExpr("cast(k as string) k")
     sdim = dim.selectExpr("cast(d as string) d")
     got = {r["k"] for r in bloom_prune(sfact, "k", sdim, "d", lg_m=16).collect()}
     assert {str(k) for k in expect} <= got
-    with pytest.raises(ValueError, match="engine"):
-        bloom_prune(fact, "k", dim, "d", engine="nope")
+    with pytest.raises(TypeError, match="engine"):
+        bloom_prune(fact, "k", dim, "d", engine="jvm")
 
 
 @pytest.mark.parametrize("engine", ["jvm", "python", "apache"])
 @pytest.mark.parametrize("dim_rows", ["empty", "all_null"])
-def test_bloom_prune_empty_dim_keeps_nothing(spark, engine, dim_rows):
+def test_bloom_prune_empty_dim_keeps_nothing(spark, bloom_route, engine, dim_rows):
     """A dimension with no non-NULL key builds an empty filter on every
-    engine (Spark's stat().bloomFilter alone throws on such input)."""
+    route (Spark's stat().bloomFilter alone throws on such input)."""
     from datasketches_spark import bloom_prune
 
     fact = spark.range(0, 100).withColumnRenamed("id", "k")
@@ -261,7 +259,8 @@ def test_bloom_prune_empty_dim_keeps_nothing(spark, engine, dim_rows):
         dim = spark.range(0, 100).withColumnRenamed("id", "d").where("d < 0")
     else:
         dim = spark.range(0, 100).selectExpr("CAST(NULL AS BIGINT) AS d")
-    assert bloom_prune(fact, "k", dim, "d", lg_m=12, engine=engine).count() == 0
+    fact, dim = bloom_route(engine, fact, dim)
+    assert bloom_prune(fact, "k", dim, "d", lg_m=12).count() == 0
 
 
 def test_jvm_engine_integral_widths_no_false_negatives(spark):
@@ -275,10 +274,89 @@ def test_jvm_engine_integral_widths_no_false_negatives(spark):
         dim = spark.range(0, 120, 3).selectExpr(f"cast(id as {t}) d")
         got = {
             int(r["k"])
-            for r in bloom_prune(fact, "k", dim, "d", lg_m=16,
-                                 engine="jvm").collect()
+            for r in bloom_prune(fact, "k", dim, "d", lg_m=16).collect()
         }
         assert set(range(0, 120, 3)) <= got, t
+
+
+# ---------------- classic route: Spark's filter for every key type ----
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def _rows(df):
+    return sorted(map(str, df.collect()))
+
+
+# key type -> the key as an SQL expression over id
+_KEY_TYPES = {
+    "string": "concat('k', cast(id AS string))",
+    "double": "id / 4.0D",
+    "date": "date_add(DATE'2020-01-01', cast(id AS int))",
+}
+
+
+@pytest.mark.parametrize("key_type", sorted(_KEY_TYPES))
+def test_classic_route_has_no_python_node(spark, key_type):
+    """STRING, DOUBLE and DATE keys: ``bloom_prune`` and
+    ``bloom_pruned_anti_join`` plan Spark's filter with no Python node,
+    keep every true member, and the anti-join's row set (NULL keys
+    included) equals ``left_anti``."""
+    from datasketches_spark import compat
+    from datasketches_spark.runtime_filter import bloom_prune, bloom_pruned_anti_join
+
+    expr = _KEY_TYPES[key_type]
+    fact = spark.range(0, 600).selectExpr(f"IF(id % 50 = 7, NULL, {expr}) AS k", "id")
+    dim = spark.range(0, 600, 5).selectExpr(f"{expr} AS k")
+    pruned = bloom_prune(fact, "k", dim, "k", lg_m=14)
+    anti = bloom_pruned_anti_join(fact, dim, "k", lg_m=14)
+    for df in (pruned, anti):
+        plan = compat.physical_plan_string(df)
+        assert not any(n in plan for n in _PYTHON_NODES), plan
+    assert "might_contain(" in compat.physical_plan_string(pruned)
+    members = {r.id for r in fact.join(dim, "k", "leftsemi").collect()}
+    assert len(members) == 120
+    assert members <= {r.id for r in pruned.collect()}
+    assert _rows(anti) == _rows(fact.join(dim, "k", "left_anti"))
+
+
+def test_negative_zero_and_nan_keys_kept(spark):
+    """xxhash64 maps -0.0 to 0.0 and every NaN alike, as join equality
+    does: a -0.0 fact key is kept against a 0.0 dimension key, a NaN
+    against a NaN."""
+    from datasketches_spark.runtime_filter import bloom_prune
+
+    fact = spark.createDataFrame([(-0.0,), (float("nan"),), (1.5,)], "k double")
+    dim = spark.createDataFrame([(0.0,), (float("nan"),)], "k double")
+    kept = bloom_prune(fact, "k", dim, "k", lg_m=12).collect()
+    assert len(fact.join(dim, "k", "leftsemi").collect()) == 2
+    assert sorted(str(r.k) for r in kept if r.k != 1.5) == ["-0.0", "nan"]
+
+
+@pytest.mark.parametrize("route", ["classic", "connect"])
+@pytest.mark.parametrize("fact_type,dim_type", [("string", "bigint"), ("bigint", "string")])
+def test_mixed_key_types_lose_no_member(spark, bloom_route, fact_type, dim_type, route):
+    """Keys of two types are compared as the equi-join compares them,
+    on both routes: a STRING against a BIGINT is cast to BIGINT on
+    either side, so ``'012'`` matches 12 whichever side holds it."""
+    from datasketches_spark.runtime_filter import bloom_prune, bloom_pruned_anti_join
+
+    if route == "connect":
+        bloom_route("apache")
+    strings = ["12", "012", "7", "40", None]
+    ints = [12, 40, 99, None]
+    fact = spark.createDataFrame(
+        [(v,) for v in (strings if fact_type == "string" else ints)], f"k {fact_type}"
+    )
+    dim = spark.createDataFrame(
+        [(v,) for v in (strings if dim_type == "string" else ints)], f"k {dim_type}"
+    )
+    members = _rows(fact.join(dim, "k", "leftsemi"))
+    assert len(members) == (3 if fact_type == "string" else 2)
+    assert set(members) <= set(_rows(bloom_prune(fact, "k", dim, "k", lg_m=12)))
+    assert _rows(bloom_pruned_anti_join(fact, dim, "k", lg_m=12)) == _rows(
+        fact.join(dim, "k", "left_anti")
+    )
 
 
 def test_bloom_io_roundtrip_with_metadata(spark, tmp_path):

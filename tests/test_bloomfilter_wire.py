@@ -267,12 +267,15 @@ def test_nan_skip_documented_deviation():
 # ------------------------------------------------- Spark integration
 
 
-def test_bloom_prune_apache_engine(spark):
+def test_bloom_prune_apache_engine(spark, bloom_route):
+    """bloom_prune takes the Apache filter on Spark Connect (simulated:
+    no py4j bridge)."""
     from datasketches_spark.runtime_filter import bloom_prune
 
     dim = spark.range(0, 500).withColumnRenamed("id", "k")
     fact = spark.range(0, 5000).withColumnRenamed("id", "k")
-    got = bloom_prune(fact, "k", dim, "k", lg_m=16, engine="apache")
+    bloom_route("apache")
+    got = bloom_prune(fact, "k", dim, "k", lg_m=16)
     keys = {r.k for r in got.collect()}
     # no false negatives: every true match survives
     assert set(range(500)) <= keys

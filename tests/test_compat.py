@@ -209,8 +209,9 @@ class TestDegradedOperators:
             compat.plan_size_bytes = orig
 
     def test_bloom_prune_auto_avoids_jvm_engine(self, spark):
-        """auto engine picks the portable python path when the bridge
-        is reported absent, and the jvm engine fail-fasts by name."""
+        """With the bridge reported absent, bloom_prune takes the Apache
+        filter and its Arrow UDF probe, and Spark's filter build
+        fail-fasts by name."""
         import datasketches_spark.runtime_filter as rf
 
         fact = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
@@ -218,10 +219,9 @@ class TestDegradedOperators:
         orig = compat.has_jvm
         compat.has_jvm = lambda obj: False
         try:
-            got = sorted(
-                r.k for r in rf.bloom_prune(fact, "k", dim, "k", lg_m=16).collect()
-            )
-            assert got == [1, 3]
+            pruned = rf.bloom_prune(fact, "k", dim, "k", lg_m=16)
+            assert sorted(r.k for r in pruned.collect()) == [1, 3]
+            assert "ArrowEvalPython" in compat.physical_plan_string(pruned)
             with pytest.raises(RuntimeError, match="Spark Connect"):
                 rf.jvm_bloom_filter_bytes(dim, "k")
         finally:

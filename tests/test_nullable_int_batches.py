@@ -15,7 +15,7 @@ from datasketches_spark.aggregation import (
     theta_agg_hybrid,
     tuple_sketch_agg,
 )
-from datasketches_spark.runtime_filter import bloom_prune
+from datasketches_spark.runtime_filter import bloom_filter_blob, bloom_prune, bloom_prune_with
 
 
 @pytest.fixture(autouse=True)
@@ -97,15 +97,28 @@ def test_tuple_keys_not_inflated(spark):
 
 
 @pytest.mark.parametrize("engine", ["apache", "python"])
-def test_bloom_prune_keeps_keys_of_null_bearing_batches(spark, engine):
+def test_bloom_prune_keeps_keys_of_null_bearing_batches(spark, bloom_route, engine):
     """Keys 3 and 4 reach the filter build only inside a null-bearing
-    (float64) batch; the int64 probe must still find every dim key."""
+    (float64) batch, and fact keys 3 and 5 reach the Arrow probe only
+    inside one; every dim key must still be found.  "apache" is
+    bloom_prune on Spark Connect (simulated), "python" the DSKS filter
+    (bloom_filter_blob, bloom_prune_with): both filters hash values in
+    Python."""
     rdd = spark.sparkContext.parallelize([(1,), (2,)], 1).union(
         spark.sparkContext.parallelize([(3,), (4,), (None,)], 1)
     )
     dim = spark.createDataFrame(rdd, "v bigint")
-    fact = spark.range(0, 10).withColumnRenamed("id", "v")
-    kept = bloom_prune(fact, "v", dim, "v", lg_m=12, engine=engine)
+    fact = spark.createDataFrame(
+        spark.sparkContext.parallelize([(v,) for v in (0, 1, 2, 4)], 1).union(
+            spark.sparkContext.parallelize([(3,), (None,), (5,)], 1)
+        ),
+        "v bigint",
+    )
+    if engine == "apache":
+        bloom_route(engine)
+        kept = bloom_prune(fact, "v", dim, "v", lg_m=12)
+    else:
+        kept = bloom_prune_with(fact, "v", bloom_filter_blob(dim, "v", lg_m=12))
     assert {1, 2, 3, 4} <= {r.v for r in kept.collect()}
 
 

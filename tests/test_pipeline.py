@@ -84,7 +84,7 @@ class TestDedup:
         """Round 8: the big-input verify path (signature pre-filter +
         candidate-id prune, forced via the size-stats gate) must return
         EXACTLY the pairs the simple small-input path returns."""
-        import datasketches_spark.pipeline.skewjoin as sj
+        from datasketches_spark import compat
 
         docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
         small = sorted(
@@ -95,8 +95,8 @@ class TestDedup:
                 ).collect(),
             )
         )
-        real = sj._plan_size_bytes
-        sj._plan_size_bytes = lambda df: 1 << 40  # force the big path
+        real = compat.plan_size_bytes
+        compat.plan_size_bytes = lambda df: 1 << 40  # force the big path
         try:
             big = sorted(
                 map(
@@ -107,7 +107,7 @@ class TestDedup:
                 )
             )
         finally:
-            sj._plan_size_bytes = real
+            compat.plan_size_bytes = real
         assert len(small) > 0  # the corpus has real near-dups
         assert big == small
 
@@ -211,40 +211,6 @@ class TestDedup:
         assert (1, 5) in got
         for j in got.values():
             assert 0.5 <= j <= 1.0
-
-    def test_lsh_jvm_engine_matches_pandas(self, spark, docs):
-        """Both signature engines land the same verified pairs (hash
-        families differ; verification makes the result exact)."""
-        a = dedup.lsh_verified_near_duplicates(
-            docs, "doc_id", "text", threshold=0.5, engine="pandas"
-        )
-        b = dedup.lsh_verified_near_duplicates(
-            docs, "doc_id", "text", threshold=0.5, engine="jvm"
-        )
-        pa = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in a.collect())
-        pb = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in b.collect())
-        assert pa == pb
-
-    def test_lsh_bad_engine_rejected(self, spark, docs):
-        with pytest.raises(ValueError, match="unknown engine"):
-            dedup.lsh_verified_near_duplicates(
-                docs, "doc_id", "text", engine="nope"
-            )
-
-    def test_jvm_signatures_min_over_multiset(self, spark):
-        """Repeated shingles cannot change the signature (min over a
-        multiset == min over its set)."""
-        df = spark.createDataFrame(
-            [(1, "abcdefgh"), (2, "abcdefghabcdefgh"[:13])], "id long, text string"
-        )
-        # doc 2 = 'abcdefghabcde': shingle SET is a superset of doc 1's
-        sigs = {
-            r.id: r.sig
-            for r in dedup.minhash_signatures_jvm(df, "id", "text", 16).collect()
-        }
-        assert len(sigs[1]) == 16 and len(sigs[2]) == 16
-        # shared shingles force sig2 <= sig1 elementwise
-        assert all(s2 <= s1 for s1, s2 in zip(sigs[1], sigs[2]))
 
     def test_char_ngrams_matches_python(self, spark, docs):
         row = docs.filter(F.col("doc_id") == 0).select(
@@ -1745,17 +1711,14 @@ class TestRedaction:
 class TestNullTextMinhash:
     def test_null_text_docs_produce_no_candidates(self, spark):
         """NULL-text docs must not band together (would be O(m^2)
-        candidates); both engines emit NULL sigs which banding drops
+        candidates); NULL text gives a NULL sig, which banding drops
         (code-review regression)."""
         df = spark.createDataFrame(
             [(1, None), (2, None), (3, None), (4, "real text here ok")],
             "doc_id long, text string",
         )
-        for engine in ("pandas", "jvm"):
-            pairs = dedup.lsh_verified_near_duplicates(
-                df, "doc_id", "text", threshold=0.1, engine=engine
-            )
-            assert pairs.count() == 0, engine
+        pairs = dedup.lsh_verified_near_duplicates(df, "doc_id", "text", threshold=0.1)
+        assert pairs.count() == 0
 
 
 class TestUnigramLm:

@@ -21,9 +21,10 @@ pattern, tests/test_arrow_sentinel_canary.py):
 5. sketch-table reads: a warm ``io.read_sketch_table`` plus a scalar
    query runs exactly one job (the read's schema inference and family
    check are remembered for an unchanged file listing).
-6. jvm Bloom engine: ``bloom_prune`` plans Catalyst's ``might_contain``
-   Filter with no Python node, and ``bloom_pruned_anti_join`` pushes
-   ``IsNotNull(key)`` into both probed fact scans.
+6. classic Bloom route: ``bloom_prune`` plans Catalyst's
+   ``might_contain`` Filter with no Python node, and
+   ``bloom_pruned_anti_join`` pushes ``IsNotNull(key)`` into both
+   probed fact scans.
 7. theta estimate: ``theta_agg_hybrid`` over a BIGINT column builds
    and merges in Spark's own ``theta_sketch_agg`` -- a partial and a
    final ``ObjectHashAggregate`` around one Exchange, no
@@ -175,20 +176,20 @@ class TestJvmBloomProbe:
 
         dim = spark.range(0, 2000, 9).withColumnRenamed("id", "d")
         plan = compat.physical_plan_string(
-            bloom_prune(fact, "k", dim, "d", lg_m=12, engine="jvm")
+            bloom_prune(fact, "k", dim, "d", lg_m=12)
         )
         assert not any(n in plan for n in self._PYTHON_NODES), plan
         assert any(
             _is_node(ln, "Filter") and "might_contain(" in ln
             for ln in plan.splitlines()
-        ), "jvm probe is no longer Catalyst's might_contain"
+        ), "classic probe is no longer Catalyst's might_contain"
 
     def test_anti_join_pushes_is_not_null_into_both_fact_scans(self, spark, fact):
         from datasketches_spark.runtime_filter import bloom_pruned_anti_join
 
         drop = spark.createDataFrame([(i,) for i in range(0, 2000, 5)], "k long")
         plan = compat.physical_plan_string(
-            bloom_pruned_anti_join(fact, drop, "k", lg_m=12, engine="jvm")
+            bloom_pruned_anti_join(fact, drop, "k", lg_m=12)
         )
         assert not any(n in plan for n in self._PYTHON_NODES), plan
         probed = [

@@ -282,6 +282,21 @@ class TestReadDisambiguation:
             ).collect()
         assert "TABLE_OR_VIEW_NOT_FOUND" not in str(ei.value)
 
+    def test_unknown_catalog_name_reads_parquet(self, spark, sig_path):
+        """A three-part name whose catalog does not exist makes
+        ``tableExists`` raise AnalysisException; the name is then read
+        as a parquet path (relative to the JVM's working directory)."""
+        import shutil
+        import uuid
+
+        name = f"nocat{uuid.uuid4().hex}.db.sigs"
+        path = os.path.join(spark.sparkContext._jvm.System.getProperty("user.dir"), name)
+        D.read_minhash_signatures(spark, sig_path).write.parquet(path)
+        try:
+            assert D.read_minhash_signatures(spark, name).count() == _docs(spark).count()
+        finally:
+            shutil.rmtree(path)
+
 
 class TestCrossCorpus:
     """minhash_cross_near_duplicates — the daily-incremental shape:
@@ -343,6 +358,20 @@ class TestCrossCorpus:
         assert sorted(map(tuple, base.collect())) == sorted(
             map(tuple, skewed.collect())
         )
+
+    def test_jvm_tagged_table_raises(self, spark, split, tmp_path):
+        """A table tagged with the removed xxhash64 ``engine: "jvm"``
+        family cannot band with fresh signatures: the cross join and
+        the upsert both refuse it and say to re-write the table."""
+        hist, new, path = split
+        sigs = D.read_minhash_signatures(spark, path)
+        meta = dict(D._signature_meta(sigs), engine="jvm")
+        jvm_path = str(tmp_path / "jvm_sigs")
+        sigs.withMetadata("sig", {D.MINHASH_META_KEY: meta}).write.parquet(jvm_path)
+        with pytest.raises(ValueError, match="re-write"):
+            D.minhash_cross_near_duplicates(new, "doc_id", "text", jvm_path)
+        with pytest.raises(ValueError, match="re-write"):
+            D.upsert_minhash_signatures(new, "doc_id", "text", jvm_path)
 
     def test_estimate_only_superset_at_margin(self, spark, split):
         hist, new, path = split

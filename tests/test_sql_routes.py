@@ -293,3 +293,25 @@ def test_scalars_have_one_factory():
         if isinstance(node, ast.Name) and node.id in ("arrow_udf", "pandas_udf")
     ]
     assert sorted(makers) == ["_item_probe", "_scalar"], makers
+
+
+# modules whose optimizations fall back only on a named, expected failure
+_NAMED_FALLBACKS = ("runtime_filter.py", "pipeline/dedup.py", "pipeline/skewjoin.py")
+
+
+@pytest.mark.parametrize("module", _NAMED_FALLBACKS)
+def test_no_blanket_except(module):
+    """No ``except Exception`` and no bare ``except:`` in ``module``: a
+    route falls back on the failure it expects, by name."""
+    with open(os.path.join(PKG, module)) as f:
+        tree = ast.parse(f.read())
+    bad = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ExceptHandler)
+        and (
+            node.type is None
+            or (isinstance(node.type, ast.Name) and node.type.id in ("Exception", "BaseException"))
+        )
+    ]
+    assert bad == [], bad

@@ -131,8 +131,9 @@ def _fold_partitions(
 
     ``df`` is narrowed to ``group_cols + cols`` and read in chunks of
     up to ``_CHUNK_ROWS`` rows.  Per chunk the group codes are computed
-    once (NULL keys form one group), one stable argsort reorders the
-    chunk so each group's rows are contiguous and in input order, and
+    once (NULL keys form one group), one stable argsort (a radix sort
+    over codes narrowed to uint8 / uint16) reorders the chunk so each
+    group's rows are contiguous and in input order, and
     ``prepare(chunk)`` is called once: it returns one ``(values, keep)`` pair per builder input,
     ``values`` aligned to the rows ``keep`` marks (``None``: every row;
     see :func:`~datasketches_spark.families.prepare`).  A new key's
@@ -176,8 +177,11 @@ def _fold_partitions(
                 codes = pdf.groupby(by, dropna=False, sort=False).ngroup().to_numpy()
                 order = None
                 if (np.diff(codes) < 0).any():
-                    # line each group's rows up, in input order
-                    order = np.argsort(codes, kind="stable")
+                    # line each group's rows up, in input order; a stable
+                    # sort of <=16-bit ints is numpy's radix sort
+                    n = int(codes.max())
+                    small = np.uint8 if n < 256 else np.uint16 if n < 65536 else np.int64
+                    order = np.argsort(codes.astype(small, copy=False), kind="stable")
                     codes = codes[order]
                     pdf = pdf.take(order)
                 starts = np.flatnonzero(np.diff(codes, prepend=-1))

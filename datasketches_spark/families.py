@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 
 from .murmur import murmur3_rows, theta_hash_rows
-from .sketches.base import is_framed
+from .sketches.base import has_nulls, is_framed
 from .sketches import (
     AodSketch,
     ApacheBloomFilter,
@@ -221,8 +221,8 @@ def prepare(
         if keep is not None:
             s = series.astype("Int64")
         return s, None
-    nn = s.notna().to_numpy()
-    if not nn.all():
+    if has_nulls(s):
+        nn = s.notna().to_numpy()
         s = s[nn]
         keep = _narrow(keep, nn)
     if family in ("theta", "aod"):

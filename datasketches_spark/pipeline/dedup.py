@@ -539,6 +539,7 @@ def lsh_verified_near_duplicates(
     is the 100 TB path — the Python pass ran once, at write time.
     ``num_hashes``/``shingle``/``seed`` are then ignored
     (the table fixes them); build it from the same document slice.
+    ``fan_out``: :func:`minhash_signatures`' opt-in narrow-scan fan-out.
     """
     # cand-persist stays governed by the caller's persist flag even on
     # the table route: the filtered candidate set feeds THREE branches,
@@ -550,7 +551,9 @@ def lsh_verified_near_duplicates(
         _check_sig_width(sigs, bands, rows)
         persist = False  # the stored table IS the materialization
     else:
-        sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle, seed)
+        sigs = minhash_signatures(
+            df, id_col, text_col, num_hashes, shingle, seed, fan_out=fan_out
+        )
     if persist:
         sigs = sigs.persist()
     cand = minhash_candidate_pairs(sigs, id_col, bands, rows)

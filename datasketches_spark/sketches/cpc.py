@@ -78,6 +78,18 @@ def _bit_length_u64(v: np.ndarray) -> np.ndarray:
     return np.where(hi > 0, 32 + ehi, elo)
 
 
+def _bound_dense(sk, keys: np.ndarray) -> bool:
+    """Whether sparse ``sk`` (HLL or CPC) plus ``keys`` covers more
+    distinct slots (low lg_k bits) than its sparse limit: then it must
+    go dense, and max / OR being idempotent, promoting first is exact."""
+    if sk.sparse.size + keys.size <= sk._sparse_limit:
+        return False
+    seen = np.zeros(sk._m, dtype=bool)
+    for k in (sk.sparse, keys):
+        seen[(k & np.uint64(sk._m - 1)).astype(np.intp)] = True
+    return int(np.count_nonzero(seen)) > sk._sparse_limit
+
+
 def _expected_coupons(n: float, k: float) -> float:
     """E[#distinct coupons] after n distinct values over k rows."""
     p = (2.0 ** -(_COLS + 1)) / k
@@ -147,6 +159,8 @@ class CpcSketch:
         col = np.minimum(64 - _bit_length_u64(h2), 63)  # h2==0 → 63
         rowcol = ((row.astype(np.uint32) << np.uint32(6))
                   | col.astype(np.uint32))
+        if self.mode == _MODE_SPARSE and _bound_dense(self, h1):
+            self._promote()
         if self.mode == _MODE_DENSE:
             self._dense_update(rowcol)
             return

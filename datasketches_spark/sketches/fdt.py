@@ -135,12 +135,13 @@ class FdtSketch:
         constants the old loop paid per input row now cost per
         RETAINED row.  Returns False for inputs the Arrow path cannot
         type (non-string elements etc.) — the caller falls back."""
-        try:
-            import pyarrow as pa  # noqa: PLC0415
-            import pyarrow.compute as pc  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.compute as pc  # noqa: PLC0415
 
+        try:
             arr = pa.array(series, from_pandas=True)
-        except Exception:  # noqa: BLE001 — any inference failure falls back
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+            # mixed element types, or Python ints past int64
             return False
         t = arr.type
         if not (pa.types.is_list(t) or pa.types.is_large_list(t)):

@@ -30,7 +30,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from .base import FAMILY_FREQUENT_ITEMS, SketchDeserializeError, frame, unframe
+from .base import FAMILY_FREQUENT_ITEMS, SketchDeserializeError, frame, has_nulls, unframe
 
 DEFAULT_LG_MAX_K = 10  # src/frequent_items_sketch.cpp:25,38
 _LOAD_FACTOR = 0.75
@@ -102,7 +102,8 @@ class FrequentItemsSketch:
             self._purge()
 
     def update_series(self, s: pd.Series) -> None:
-        s = canonicalize_series(s.dropna())
+        # the fold's prepare has already dropped the NULLs
+        s = canonicalize_series(s.dropna() if has_nulls(s) else s)
         if s.empty:
             return
         vc = s.value_counts()

@@ -36,7 +36,7 @@ import numpy as np
 
 from ..murmur import murmur3_values
 from .base import FAMILY_HLL, SketchDeserializeError, frame, is_framed, unframe
-from .cpc import _bit_length_u64
+from .cpc import _bit_length_u64, _bound_dense
 
 _MODE_SPARSE = 0
 _MODE_DENSE = 1
@@ -154,6 +154,8 @@ class HllSketch:
         if keys.size == 0:
             return
         vals = vals.astype(np.uint8)
+        if self.mode == _MODE_SPARSE and _bound_dense(self, keys):
+            self._promote()
         if self.mode == _MODE_DENSE:
             self._dense_update(keys, vals)
             return

@@ -292,3 +292,23 @@ def test_to_wire_linear_time():
     w = sk.to_wire()
     dt = time.time() - t0
     assert len(w) > 120_000 * 13 and dt < 2.0
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [["a", 1], ["b", "c"]],  # str and int in one row: ArrowTypeError
+        [["a"], [1]],  # str rows next to int rows: ArrowInvalid
+        [[1.5, "a"], None],  # float then str: ArrowInvalid
+        [[2**70, "x"]],  # an int past int64: OverflowError
+    ],
+    ids=["mixed-row", "mixed-rows", "float-str", "big-int"],
+)
+def test_arrow_inference_failure_falls_back_to_row_loop(rows):
+    # the Arrow path declines the rows pa.array cannot type; the row
+    # loop stringifies each element, as java's String.valueOf does
+    sk = FdtSketch(10)
+    sk.update_series(pd.Series(rows, dtype=object))
+    ref = FdtSketch(10)
+    ref.update_tuples([tuple(str(x) for x in r) for r in rows if r is not None])
+    assert sk.serialize() == ref.serialize()

@@ -17,7 +17,8 @@ pattern, tests/test_arrow_sentinel_canary.py):
    line explode.
 4. minhash/simhash signature fan-out (r15, opt-in): ``fan_out=True``
    must put a round-robin Exchange under the Python pass on a narrow
-   scan; the default must not.
+   scan; the default must not.  ``lsh_verified_near_duplicates`` (and
+   so ``fuzzy_dedup``) passes its ``fan_out`` through.
 5. sketch-table reads: a warm ``io.read_sketch_table`` plus a scalar
    query runs exactly one job (the read's schema inference and family
    check are remembered for an unchanged file listing).
@@ -119,6 +120,42 @@ class TestSignatureFanOut:
             map(str, D.minhash_signatures(docs, "doc_id", "text").collect())
         )
         assert sorted(map(str, fanned.collect())) == base
+
+    def test_fuzzy_dedup_passes_fan_out_to_signatures(self, spark):
+        # lsh_verified_near_duplicates (under fuzzy_dedup) once dropped
+        # its fan_out, so the signature pass of a one-partition input
+        # ran on one core whatever the caller asked
+        from datasketches_spark.pipeline import dedup as D
+
+        docs = _docs(spark).coalesce(1)
+        assert docs.rdd.getNumPartitions() == 1
+        try:
+            for fan_out in (False, True):
+                lines = compat.physical_plan_string(
+                    D.lsh_verified_near_duplicates(
+                        docs, "doc_id", "text", threshold=0.8, fan_out=fan_out
+                    )
+                ).splitlines()
+                # the signature pass, once per reader of its cache, and
+                # its input: the round-robin exchange only when asked
+                sig = [i for i, ln in enumerate(lines) if "MapInPandas compute" in ln]
+                assert sig, lines
+                assert all(
+                    ("RoundRobinPartitioning" in lines[i + 1]) == fan_out for i in sig
+                ), lines
+            kept = [
+                sorted(
+                    r.doc_id
+                    for r in D.fuzzy_dedup(
+                        docs, "doc_id", "text", threshold=0.8,
+                        keep_cols=["doc_id"], fan_out=fan_out,
+                    ).collect()
+                )
+                for fan_out in (False, True)
+            ]
+            assert kept[0] == kept[1] and kept[0]
+        finally:
+            spark.catalog.clearCache()
 
     def test_simhash_fan_out_opt_in(self, spark):
         from datasketches_spark.pipeline import dedup as D

@@ -17,7 +17,6 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sketches import FAMILY_CLASSES as _BYTE_CLASSES
 from .sketches import peek_family
 
 _FAMILY_BYTES = {

@@ -31,7 +31,6 @@ from pyspark.sql.types import (
     ArrayType,
     FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,

@@ -53,13 +53,11 @@ def bloom_filter_of(
     return sketch_agg(df, key_col, "bloom", k=lg_m, output_col=output_col)
 
 
-def bloom_filter_blob(
-    df: DataFrame, key_col: str, lg_m: int = 22, driver_merge: bool | None = None
-) -> bytes:
+def bloom_filter_blob(df: DataFrame, key_col: str, lg_m: int = 22) -> bytes:
     """The serialized filter bytes, built distributed.
 
     Two merge strategies, picked by the (partitions x blob-size)
-    product when ``driver_merge`` is None:
+    product:
 
     - **driver merge** (small filters / bounded parallelism): phase-1
       partials are collected and OR-merged on the driver — one job,
@@ -73,25 +71,23 @@ def bloom_filter_blob(
     merge stage, ~0.15 s off the build job.
     """
     return _merged_filter_blob(
-        df, lg_m, driver_merge, "bloom", BloomFilterSketch(lg_m),
+        df, lg_m, "bloom", BloomFilterSketch(lg_m),
         sketch_partial(df, key_col, "bloom", k=lg_m),
     )
 
 
-def _merged_filter_blob(df, lg_m, driver_merge, family, empty, partial) -> bytes:
+def _merged_filter_blob(df, lg_m, family, empty, partial) -> bytes:
     """Merge a filter's phase-1 ``partial`` blobs (column ``sketch``)
     into ``empty`` and return its bytes: on the driver while
-    partitions x filter bytes stay bounded (or when ``driver_merge``),
-    else through the blob-only shuffle merge (:func:`sketch_merge`)."""
-    if driver_merge is None:
-        # one partial per INPUT PARTITION (not per core): gate on the
-        # actual scan partition count so the collect stays bounded on
-        # wide scans (getNumPartitions plans but runs no job)
-        parts = compat.scan_partitions(df)
-        # unknown width (Spark Connect): the blob-only shuffle merge is
-        # bounded at any cluster width, so it is the safe default
-        driver_merge = parts is not None and parts * (1 << lg_m) // 8 <= (64 << 20)
-    if not driver_merge:
+    partitions x filter bytes stay bounded, else through the blob-only
+    shuffle merge (:func:`sketch_merge`)."""
+    # one partial per INPUT PARTITION (not per core): gate on the
+    # actual scan partition count so the collect stays bounded on
+    # wide scans (getNumPartitions plans but runs no job)
+    parts = compat.scan_partitions(df)
+    # unknown width (Spark Connect): the blob-only shuffle merge is
+    # bounded at any cluster width, so it is the safe default
+    if parts is None or parts * (1 << lg_m) // 8 > (64 << 20):
         # the merge accumulator adopts the partials' geometry on the
         # first union; an empty input leaves ``empty`` as the answer
         partial = sketch_merge(partial, family, k=lg_m)
@@ -123,7 +119,6 @@ def bloomfilter_blob(
     lg_m: int = 22,
     num_hashes: int = 6,
     seed: int = 9001,
-    driver_merge: bool | None = None,
 ) -> bytes:
     """Apache-wire BloomFilter bytes of ``df[key_col]``, built
     distributed (sketches/bloom_apache.py — XXH64 bits byte-identical
@@ -145,7 +140,7 @@ def bloomfilter_blob(
         lambda sk, values: update_prepared("bloomfilter", sk, values[0]),
         lambda sk: [sk.to_wire()],
     )
-    return _merged_filter_blob(df, lg_m, driver_merge, "bloomfilter", empty(), partial)
+    return _merged_filter_blob(df, lg_m, "bloomfilter", empty(), partial)
 
 
 def bloomfilter_prune_with(

@@ -10,6 +10,12 @@ Post-processing groups the sample by any dimension subset and scales
 counts by 1/theta — answering "top groups by distinct count" where
 the exact GROUP BY COUNT(DISTINCT ...) would shuffle the world.
 
+Internals: a ``theta.BottomKSketch`` (the bottom-k core shared with
+theta and the tuple family) whose payload is the list of retained
+tuples -- the first entry of a key wins.  This module supplies the
+payload hooks, the tuple hashing, ``describe``, the DSKS frame and the
+Apache codec.
+
 Semantics recovered from the 6.2.0 bytecode and differentially tested
 against the live jar (tests/test_fdt_wire.py):
 
@@ -35,7 +41,6 @@ against the live jar (tests/test_fdt_wire.py):
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
@@ -45,8 +50,7 @@ from ..hashing import MAX_HASH
 from ..murmur import DEFAULT_SEED_HASH, murmur3_u64
 from ..xxhash import xxh64_bytes
 from .base import FAMILY_FDT, SketchDeserializeError, frame, is_framed, unframe
-
-DEFAULT_LG_K = 12
+from .theta import DEFAULT_LG_K, BottomKSketch
 
 _STR_ARR_HASH_SEED = 2050804337  # Util.stringArrHash's XxHash seed
 _THETA_SEED = 9001
@@ -84,25 +88,39 @@ def _summary_bytes(t: tuple[str, ...]) -> bytes:
     return out
 
 
-class FdtSketch:
+class FdtSketch(BottomKSketch):
     """Distinct-tuple sample with per-group post-processing."""
 
-    __slots__ = ("lg_k", "theta", "keys", "tuples", "_pend", "_adopt_k")
+    __slots__ = ()
+    _KIND = "fdt"
 
     def __init__(self, lg_k: int | None = DEFAULT_LG_K):
         # lg_k=None: a k-less merge ACCUMULATOR that adopts the first
         # merged blob's lg_k (same contract as AodSketch — k-less
         # union/rollup/store paths stay lossless)
+        super().__init__(DEFAULT_LG_K if lg_k is None else lg_k)
         self._adopt_k = lg_k is None
-        if lg_k is None:
-            lg_k = DEFAULT_LG_K
-        if not (4 <= lg_k <= 26):
-            raise ValueError(f"Invalid lg_k for fdt sketch: {lg_k}")
-        self.lg_k = lg_k
-        self.theta = MAX_HASH
-        self.keys = np.empty(0, dtype=np.uint64)
-        self.tuples: list[tuple[str, ...]] = []
-        self._pend: list[tuple[int, tuple[str, ...]]] = []
+        self.rows: list[tuple[str, ...]] = []
+
+    @property
+    def tuples(self) -> list[tuple[str, ...]]:
+        """The retained tuples, aligned with ``keys``."""
+        return self.rows
+
+    @staticmethod
+    def _take(rows: list, idx: np.ndarray) -> list:
+        if idx.dtype == bool:
+            idx = np.flatnonzero(idx)
+        return [rows[i] for i in idx.tolist()]
+
+    @staticmethod
+    def _cat(parts: list) -> list:
+        return [t for part in parts for t in part]
+
+    @staticmethod
+    def _dedup(keys: np.ndarray, rows: list):
+        uniq, first = np.unique(keys, return_index=True)  # first entry wins
+        return uniq, FdtSketch._take(rows, first)
 
     # ---- building ----
     def update_series(self, series: pd.Series) -> None:
@@ -113,12 +131,7 @@ class FdtSketch:
         java's string conversion of a null reference is ``"null"``, so
         tuples with null dimensions hash identically cross-system.
         """
-        if not len(series):
-            return
-        # DSKS_FDT_NO_ARROW: measurement hook — forces the row-loop
-        # fallback so A/B scaling runs can interleave both paths in one
-        # session (propagates to workers via spark.executorEnv.*)
-        if not os.environ.get("DSKS_FDT_NO_ARROW") and self._update_arrow(series):
+        if not len(series) or self._update_arrow(series):
             return
         tups = [
             tuple("null" if x is None else str(x) for x in v)
@@ -128,12 +141,10 @@ class FdtSketch:
         self.update_tuples(tups)
 
     def _update_arrow(self, series) -> bool:
-        """Vectorized batch path (r11 verdict item 1): the ','-join,
-        UTF-16 encode and both hashes run columnar in Arrow/numpy, and
-        Python tuples materialize ONLY for rows that survive the theta
-        filter + in-batch dedup — the per-row ``str()``/``encode``
-        constants the old loop paid per input row now cost per
-        RETAINED row.  Returns False for inputs the Arrow path cannot
+        """Vectorized batch path: the ','-join, UTF-16 encode and both
+        hashes run columnar in Arrow/numpy, and Python tuples
+        materialize ONLY for rows that survive the theta filter and the
+        in-batch dedup.  Returns False for inputs the Arrow path cannot
         type (non-string elements etc.) — the caller falls back."""
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.compute as pc  # noqa: PLC0415
@@ -181,125 +192,32 @@ class FdtSketch:
                 flat, np.cumsum([0] + [len(b) for b in bufs]), _STR_ARR_HASH_SEED
             )
         h1, _ = murmur3_u64(pre, _THETA_SEED)
-        hs = h1 >> np.uint64(1)
-        # chunked survivor materialization: consolidating between
-        # chunks drops theta early, so later chunks theta-filter BEFORE
-        # paying the to_pylist/tuple cost (the whole point of the
-        # vectorized path — per-row Python work only for retained rows)
-        cap = max(4 << self.lg_k, 1 << 16)
         mk = (
             (lambda v: tuple("null" if x is None else x for x in v))
             if null_elems
             else tuple
         )
-        n = len(arr)
-        pos = 0
-        while pos < n:
-            end = min(pos + (1 << 16), n)
-            hc = hs[pos:end]
+        self._add_hashed(h1 >> np.uint64(1), rows_np, mk)
+        return True
+
+    def update_tuples(self, tups: list[tuple[str, ...]]) -> None:
+        if tups:
+            self._add_hashed(tuple_hashes(tups), tups, tuple)
+
+    def _add_hashed(self, hs: np.ndarray, rows, mk) -> None:
+        """Buffer ``mk(rows[i])`` under ``hs[i]``, 2^16 rows at a time:
+        a consolidation between chunks drops theta early, so later
+        chunks theta-filter (and dedup) BEFORE paying the per-row
+        tuple cost -- Python work only for retained rows."""
+        for pos in range(0, hs.size, 1 << 16):
+            hc = hs[pos : pos + (1 << 16)]
             keep = np.flatnonzero((hc != 0) & (hc < np.uint64(self.theta)))
             if keep.size:
                 keep += pos
                 uniq, first = np.unique(hs[keep], return_index=True)
-                sel = keep[first]
-                tups = [mk(v) for v in rows_np[sel]]
-                self._pend.extend(zip(uniq.tolist(), tups))
-                if len(self._pend) > cap:
-                    self._consolidate()
-            pos = end
-        return True
-
-    def update_tuples(self, tups: list[tuple[str, ...]]) -> None:
-        if not tups:
-            return
-        hs = tuple_hashes(tups)
-        mask = (hs != 0) & (hs < np.uint64(self.theta))
-        if mask.all():
-            self._pend.extend(zip(hs.tolist(), tups))
-        elif mask.any():
-            hl = hs.tolist()
-            self._pend.extend(
-                (hl[i], tups[i]) for i in np.flatnonzero(mask).tolist()
-            )
-        if len(self._pend) > max(4 << self.lg_k, 1 << 16):
-            self._consolidate()
-
-    def _consolidate(self) -> None:
-        if not self._pend:
-            return
-        pk = np.fromiter(
-            (h for h, _ in self._pend), dtype=np.uint64, count=len(self._pend)
-        )
-        allk = np.concatenate([self.keys, pk])
-        allt = self.tuples + [t for _, t in self._pend]
-        self._pend = []
-        uniq, idx = np.unique(allk, return_index=True)
-        self.keys = uniq
-        self.tuples = [allt[i] for i in idx.tolist()]
-        self._purge()
-
-    def _purge(self) -> None:
-        k = 1 << self.lg_k
-        if self.keys.size > k:
-            self.theta = int(self.keys[k])
-            self.keys = self.keys[:k]
-            self.tuples = self.tuples[:k]
-
-    def merge(self, other: "FdtSketch") -> None:
-        self._consolidate()
-        if self._adopt_k and self.keys.size == 0 and not self._pend:
-            self.lg_k = other.lg_k
-            self._adopt_k = False
-        other._consolidate()
-        self.theta = min(self.theta, other.theta)
-        th = np.uint64(self.theta)
-        allk = np.concatenate([self.keys, other.keys])
-        allt = self.tuples + other.tuples
-        live = allk < th
-        if not live.all():
-            allk = allk[live]
-            allt = [t for t, ok in zip(allt, live.tolist()) if ok]
-        uniq, idx = np.unique(allk, return_index=True)
-        self.keys = uniq
-        self.tuples = [allt[i] for i in idx.tolist()]
-        self._purge()
+                self._add(uniq, [mk(rows[i]) for i in keep[first].tolist()])
 
     # ---- queries ----
-    @property
-    def is_empty(self) -> bool:
-        self._consolidate()
-        return self.keys.size == 0 and self.theta == MAX_HASH
-
-    @property
-    def is_estimation_mode(self) -> bool:
-        return self.theta < MAX_HASH
-
-    @property
-    def num_retained(self) -> int:
-        self._consolidate()
-        return int(self.keys.size)
-
-    def get_theta(self) -> float:
-        return self.theta / MAX_HASH
-
-    def get_estimate(self) -> float:
-        self._consolidate()
-        if self.theta == MAX_HASH:
-            return float(self.keys.size)
-        return self.keys.size / (self.theta / MAX_HASH)
-
-    def get_bound(self, num_std_devs: int, upper: bool) -> float:
-        if not (1 <= num_std_devs <= 3):
-            raise ValueError("num_std_devs must be 1..3")
-        self._consolidate()
-        if not self.is_estimation_mode:
-            return self.get_estimate()
-        # java tuple.Sketch bounds — the real BinomialBoundsN
-        from .binomial_bounds import lower_bound, upper_bound  # noqa: PLC0415
-
-        f = upper_bound if upper else lower_bound
-        return f(int(self.num_retained), self.theta / MAX_HASH, num_std_devs)
-
     def get_result(
         self,
         dims: list[int],
@@ -489,20 +407,9 @@ class FdtSketch:
                 off += total
         except (struct.error, IndexError, UnicodeDecodeError) as exc:
             raise err from exc
-        uk = np.unique(keys)
-        if uk.size != n or (n and not ((keys > 0) & (keys < np.uint64(theta))).all()):
-            raise err
-        order = np.argsort(keys, kind="stable")
-        if n > (1 << sk.lg_k):
-            sk.lg_k = min(26, max(4, int(n - 1).bit_length()))
-        sk.theta = int(theta)
-        sk.keys = keys[order]
-        sk.tuples = [tuples[i] for i in order.tolist()]
+        sk._load(theta, keys, err, tuples, grow=True)
         return sk
 
 
 def fdt_union(a: FdtSketch, b: FdtSketch, lg_k: int | None = None) -> FdtSketch:
-    out = FdtSketch(lg_k if lg_k is not None else max(a.lg_k, b.lg_k))
-    out.merge(a)
-    out.merge(b)
-    return out
+    return a._union(b, lg_k)

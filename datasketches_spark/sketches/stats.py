@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import struct
 
-import numpy as np
 import pandas as pd
 
 from .base import FAMILY_STATS, SketchDeserializeError, frame, unframe

@@ -57,85 +57,205 @@ _WIRE_FLAG_SINGLE = 1 << 5
 _WIRE_FLAGS = _WIRE_FLAG_READONLY | _WIRE_FLAG_COMPACT | _WIRE_FLAG_ORDERED
 
 
-class ThetaSketch:
-    __slots__ = ("lg_k", "theta", "hashes", "_pending", "_pending_n")
+class BottomKSketch:
+    """The bottom-k core of the theta-like families (theta, tuple/aod,
+    fdt): the ``k = 2^lg_k`` smallest distinct 63-bit hashes below the
+    exclusive threshold ``theta``, each with an optional payload row.
+
+    ``keys`` is sorted and unique.  ``rows`` -- ``None`` when there is
+    no payload -- stays aligned with it through every consolidate,
+    merge, purge and set operation.  A family with a payload supplies
+    the hooks: ``_dedup`` (sort the keys unique and say how the rows of
+    equal keys combine), ``_take`` (rows at a mask or an index array)
+    and, for rows other than numpy arrays, ``_cat``.  Which keys are
+    retained does not depend on when pending batches are consolidated.
+    """
+
+    __slots__ = ("lg_k", "theta", "keys", "rows", "_pk", "_pr", "_pn", "_adopt_k")
+    _KIND = "theta"  # names the family in the lg_k error
 
     def __init__(self, lg_k: int = DEFAULT_LG_K):
         if not (4 <= lg_k <= MAX_LG_K):
-            raise ValueError(f"Invalid lg_k for theta sketch: {lg_k}")
+            raise ValueError(f"Invalid lg_k for {self._KIND} sketch: {lg_k}")
         self.lg_k = lg_k
         self.theta = MAX_HASH  # exclusive threshold; MAX_HASH == "theta = 1.0"
-        self.hashes = np.empty(0, dtype=np.uint64)
+        self.keys = np.empty(0, dtype=np.uint64)
+        self.rows = None
         # update buffer: incoming batches accumulate un-deduplicated and are
         # consolidated lazily, so building over many Arrow batches is
         # amortized O(n log n) instead of a sort per batch
-        self._pending: list[np.ndarray] = []
-        self._pending_n = 0
+        self._pk: list[np.ndarray] = []
+        self._pr: list = []
+        self._pn = 0
+        # a k-less merge accumulator adopts the first merged lg_k
+        # (set by the families that offer one)
+        self._adopt_k = False
+
+    # ---- payload hooks (defaults: no payload, or numpy rows) ----
+    def _blank(self, lg_k: int) -> "BottomKSketch":
+        return type(self)(lg_k)
+
+    @staticmethod
+    def _dedup(keys: np.ndarray, rows):
+        return np.unique(keys), None
+
+    @staticmethod
+    def _take(rows, idx):
+        return rows[idx]
+
+    @staticmethod
+    def _cat(parts: list):
+        return np.concatenate(parts)
 
     # ---- building ----
-    def update_hashes(self, h: np.ndarray) -> None:
-        if h.size == 0:
-            return
+    def _below_theta(self, keys: np.ndarray, rows):
+        live = keys < np.uint64(self.theta)
+        if rows is None:
+            return keys[live], None
+        if live.all():
+            return keys, rows
+        return keys[live], self._take(rows, live)
+
+    def _add(self, keys: np.ndarray, rows=None) -> None:
+        """Buffer a batch of keys (and their payload rows)."""
         if self.theta < MAX_HASH:
-            h = h[h < np.uint64(self.theta)]
-        self._pending.append(h)
-        self._pending_n += h.size
-        if self._pending_n > max(4 << self.lg_k, 1 << 17):
+            keys, rows = self._below_theta(keys, rows)
+        self._pk.append(keys)
+        if rows is not None:
+            self._pr.append(rows)
+        self._pn += keys.size
+        if self._pn > max(4 << self.lg_k, 1 << 17):
             self._consolidate()
 
-    def update_values(self, values) -> None:
-        # Apache-compatible hashing (murmur3 x64-128, seed 9001,
-        # h1 >> 1): the same input values retain the same hashes as
-        # DuckDB/Druid/Hive theta sketches, so wire blobs genuinely
-        # merge across systems rather than merely parsing.
-        self.update_hashes(theta_hash_values(values))
-
     def _consolidate(self) -> None:
-        if self._pending:
-            self.hashes = np.unique(np.concatenate([self.hashes, *self._pending]))
-            self._pending = []
-            self._pending_n = 0
+        if self._pk:
+            keys = np.concatenate([self.keys, *self._pk])
+            rows = None if self.rows is None else self._cat([self.rows, *self._pr])
+            self._pk, self._pr, self._pn = [], [], 0
+            self.keys, self.rows = self._dedup(keys, rows)
             self._purge()
 
     def _purge(self) -> None:
         k = 1 << self.lg_k
-        if self.hashes.size > k:
-            # hashes are sorted unique; keep the k smallest, theta = (k+1)-th
-            self.theta = int(self.hashes[k])
-            self.hashes = self.hashes[:k]
+        if self.keys.size > k:
+            # keys are sorted unique; keep the k smallest, theta = (k+1)-th
+            self.theta = int(self.keys[k])
+            self.keys = self.keys[:k]
+            if self.rows is not None:
+                self.rows = self.rows[:k]
 
-    def merge(self, other: "ThetaSketch") -> None:
+    def merge(self, other: "BottomKSketch") -> None:
         self._consolidate()
+        if self._adopt_k and self.is_empty:
+            self.lg_k = other.lg_k
+            self._adopt_k = False
         other._consolidate()
         self.theta = min(self.theta, other.theta)
-        combined = np.concatenate([self.hashes, other.hashes])
-        combined = combined[combined < np.uint64(self.theta)]
-        self.hashes = np.unique(combined)
+        keys = np.concatenate([self.keys, other.keys])
+        rows = None if self.rows is None else self._cat([self.rows, other.rows])
+        self.keys, self.rows = self._dedup(*self._below_theta(keys, rows))
         self._purge()
+
+    def _load(self, theta: int, keys: np.ndarray, err: Exception, rows=None, grow=False) -> None:
+        """Install entries decoded from a blob.
+
+        They must be distinct hashes in (0, theta): np.unique sorts
+        (covering unordered input) and collapses duplicates, and if
+        anything was dropped -- zeros, duplicates, entries >= theta --
+        the blob is corrupt; every family's contract is to fail loud
+        rather than return a quietly skewed estimate.  With ``grow``,
+        lg_k is raised to hold them: a format that carries no K must
+        not purge an exact blob to the default on the next merge."""
+        live = keys[(keys > 0) & (keys < np.uint64(theta))]
+        if rows is None:
+            uniq = np.unique(live)
+        else:
+            uniq, first = np.unique(live, return_index=True)
+        if uniq.size != keys.size:
+            raise err
+        if grow and uniq.size > (1 << self.lg_k):
+            self.lg_k = min(MAX_LG_K, max(4, int(uniq.size - 1).bit_length()))
+        self.theta = int(theta)
+        self.keys = uniq
+        if rows is not None:
+            self.rows = self._take(rows, first)
+
+    def _copy_keys(self, out: "BottomKSketch") -> "BottomKSketch":
+        """``out`` given this sketch's theta and a copy of its keys."""
+        self._consolidate()
+        out.theta = self.theta
+        out.keys = self.keys.copy()
+        return out
+
+    # ---- set algebra (reference src/theta_sketch.cpp:221-270) ----
+    def _union(self, other: "BottomKSketch", lg_k: int | None) -> "BottomKSketch":
+        out = self._blank(max(self.lg_k, other.lg_k) if lg_k is None else lg_k)
+        out.merge(self)
+        out.merge(other)
+        return out
+
+    def _aligned(self, other: "BottomKSketch"):
+        """A blank result at the common theta, and each side's mask of
+        the keys below it."""
+        self._consolidate()
+        other._consolidate()
+        out = self._blank(max(self.lg_k, other.lg_k))
+        out.theta = min(self.theta, other.theta)
+        th = np.uint64(out.theta)
+        return out, self.keys < th, other.keys < th
+
+    def _intersect(self, other: "BottomKSketch", combine=None) -> "BottomKSketch":
+        """Keys retained by both; with ``combine``, a common key's row
+        is ``combine(this side's row, the other's)``."""
+        out, am, bm = self._aligned(other)
+        if combine is None:
+            out.keys = np.intersect1d(self.keys[am], other.keys[bm])
+            return out
+        out.keys, ia, ib = np.intersect1d(
+            self.keys[am], other.keys[bm], return_indices=True
+        )
+        out.rows = combine(
+            self._take(self._take(self.rows, am), ia),
+            other._take(other._take(other.rows, bm), ib),
+        )
+        return out
+
+    def _a_not_b(self, other: "BottomKSketch") -> "BottomKSketch":
+        """This side's keys not retained by the other; rows unchanged."""
+        out, am, bm = self._aligned(other)
+        keys = self.keys[am]
+        if self.rows is None:
+            out.keys = np.setdiff1d(keys, other.keys[bm])
+            return out
+        keep = ~np.isin(keys, other.keys[bm])
+        out.keys, out.rows = keys[keep], self._take(self._take(self.rows, am), keep)
+        return out
 
     # ---- queries ----
     @property
     def is_empty(self) -> bool:
         self._consolidate()
-        return self.hashes.size == 0 and self.theta == MAX_HASH
+        return self.keys.size == 0 and self.theta == MAX_HASH
 
     @property
     def is_estimation_mode(self) -> bool:
+        self._consolidate()
         return self.theta < MAX_HASH
 
     @property
     def num_retained(self) -> int:
         self._consolidate()
-        return int(self.hashes.size)
+        return int(self.keys.size)
 
     def get_theta(self) -> float:
+        self._consolidate()
         return self.theta / MAX_HASH
 
     def get_estimate(self) -> float:
         self._consolidate()
         if self.theta == MAX_HASH:
-            return float(self.hashes.size)
-        return self.hashes.size / (self.theta / MAX_HASH)
+            return float(self.keys.size)
+        return self.keys.size / (self.theta / MAX_HASH)
 
     def get_bound(self, num_std_devs: int, upper: bool) -> float:
         if not (1 <= num_std_devs <= 3):
@@ -150,7 +270,28 @@ class ThetaSketch:
         from .binomial_bounds import lower_bound, upper_bound  # noqa: PLC0415
 
         f = upper_bound if upper else lower_bound
-        return f(int(self.hashes.size), self.theta / MAX_HASH, num_std_devs)
+        return f(int(self.keys.size), self.theta / MAX_HASH, num_std_devs)
+
+
+class ThetaSketch(BottomKSketch):
+    __slots__ = ()
+
+    @property
+    def hashes(self) -> np.ndarray:
+        """The retained hashes, sorted (the core's ``keys``)."""
+        return self.keys
+
+    # ---- building ----
+    def update_hashes(self, h: np.ndarray) -> None:
+        if h.size:
+            self._add(h)
+
+    def update_values(self, values) -> None:
+        # Apache-compatible hashing (murmur3 x64-128, seed 9001,
+        # h1 >> 1): the same input values retain the same hashes as
+        # DuckDB/Druid/Hive theta sketches, so wire blobs genuinely
+        # merge across systems rather than merely parsing.
+        self.update_hashes(theta_hash_values(values))
 
     def describe(self) -> str:
         return (
@@ -168,8 +309,8 @@ class ThetaSketch:
     def serialize(self) -> bytes:
         self._consolidate()
         flags = _FLAG_EMPTY if self.is_empty else 0
-        payload = struct.pack("<BBQI", self.lg_k, flags, self.theta, self.hashes.size)
-        payload += np.ascontiguousarray(self.hashes).tobytes()
+        payload = struct.pack("<BBQI", self.lg_k, flags, self.theta, self.keys.size)
+        payload += np.ascontiguousarray(self.keys).tobytes()
         return frame(FAMILY_THETA, payload)
 
     @classmethod
@@ -188,7 +329,7 @@ class ThetaSketch:
         except (struct.error, ValueError) as exc:
             raise SketchDeserializeError("Failed to deserialize Theta sketch") from exc
         sk.theta = theta
-        sk.hashes = hashes.copy()
+        sk.keys = hashes.copy()
         return sk
 
     # ---- Apache DataSketches wire format (compact theta, serVer 3) ----
@@ -204,7 +345,7 @@ class ThetaSketch:
         head = bytearray(8)
         head[1] = _WIRE_SERVER
         head[2] = _WIRE_FAMILY_COMPACT
-        n = int(self.hashes.size)
+        n = int(self.keys.size)
         if self.is_empty:
             # datasketches-java writes seed hash 0 for the empty sketch
             head[0] = 1
@@ -212,7 +353,7 @@ class ThetaSketch:
             return bytes(head)
         head[6:8] = struct.pack("<H", DEFAULT_SEED_HASH)
         head[5] = _WIRE_FLAGS
-        body = np.ascontiguousarray(self.hashes).tobytes()
+        body = np.ascontiguousarray(self.keys).tobytes()
         if self.theta == MAX_HASH:
             if n == 1:  # single-item short form (flag bit 5)
                 head[0] = 1
@@ -259,7 +400,6 @@ class ThetaSketch:
             )
         if ser_ver == _WIRE_SERVER_COMPRESSED:
             theta, raw = _compressed_entries(blob, pre_longs, err)
-            count = raw.size
         else:
             theta = MAX_HASH
             if pre_longs == 1:
@@ -275,17 +415,7 @@ class ThetaSketch:
             if len(blob) < off + 8 * count:
                 raise err
             raw = np.frombuffer(blob, dtype=np.uint64, count=count, offset=off)
-        # Screen corrupt blobs: the compact-theta invariant is DISTINCT
-        # hashes in (0, theta).  np.unique sorts (covering the
-        # unordered-flag case) and collapses duplicates; if anything was
-        # dropped -- zeros, duplicates, >= theta entries -- the blob is
-        # corrupt, and every family's contract is to fail loud rather
-        # than return a quietly skewed estimate.
-        hashes = np.unique(raw[(raw > np.uint64(0)) & (raw < np.uint64(theta))])
-        if hashes.size != count:
-            raise err
-        sk.theta = int(theta)
-        sk.hashes = hashes
+        sk._load(theta, raw, err)
         return sk
 
 
@@ -325,37 +455,18 @@ def _compressed_entries(blob: bytes, pre_longs: int, err: Exception) -> tuple[in
     return theta, np.cumsum(deltas, dtype=np.uint64)
 
 
-# ---- scalar set algebra (reference src/theta_sketch.cpp:221-270) ----
+# ---- scalar set algebra ----
 
 def theta_union(a: ThetaSketch, b: ThetaSketch, lg_k: int = DEFAULT_LG_K) -> ThetaSketch:
-    out = ThetaSketch(lg_k)
-    out.merge(a)
-    out.merge(b)
-    return out
+    return a._union(b, lg_k)
 
 
 def theta_intersect(a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:
-    a._consolidate()
-    b._consolidate()
-    out = ThetaSketch(max(a.lg_k, b.lg_k))
-    theta = min(a.theta, b.theta)
-    ah = a.hashes[a.hashes < np.uint64(theta)]
-    bh = b.hashes[b.hashes < np.uint64(theta)]
-    out.theta = theta
-    out.hashes = np.intersect1d(ah, bh)
-    return out
+    return a._intersect(b)
 
 
 def theta_a_not_b(a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:
-    a._consolidate()
-    b._consolidate()
-    out = ThetaSketch(max(a.lg_k, b.lg_k))
-    theta = min(a.theta, b.theta)
-    ah = a.hashes[a.hashes < np.uint64(theta)]
-    bh = b.hashes[b.hashes < np.uint64(theta)]
-    out.theta = theta
-    out.hashes = np.setdiff1d(ah, bh)
-    return out
+    return a._a_not_b(b)
 
 
 def jaccard_bounds(a: ThetaSketch, b: ThetaSketch) -> tuple[float, float, float]:
@@ -383,7 +494,7 @@ def jaccard_bounds(a: ThetaSketch, b: ThetaSketch) -> tuple[float, float, float]
         return (0.0, 0.0, 0.0)
     theta_u = min(a.theta, b.theta)
     th = np.uint64(theta_u)
-    uh = np.unique(np.concatenate([a.hashes, b.hashes]))
+    uh = np.unique(np.concatenate([a.keys, b.keys]))
     uh = uh[uh < th]
     # java's union nominal clamp at 2^26: slicing the SORTED-unique
     # array to the 2^26 smallest with theta = the (2^26+1)-th IS java's
@@ -399,11 +510,11 @@ def jaccard_bounds(a: ThetaSketch, b: ThetaSketch) -> tuple[float, float, float]
     cu = int(uh.size)
     # java's exactly-equal early-out: identical retained sets at one theta
     if (
-        cu == int(a.hashes.size) == int(b.hashes.size)
+        cu == int(a.keys.size) == int(b.keys.size)
         and a.theta == b.theta == theta_u
     ):
         return (1.0, 1.0, 1.0)
-    ih = np.intersect1d(a.hashes, b.hashes)
+    ih = np.intersect1d(a.keys, b.keys)
     ci = int(ih[ih < th].size)
     if cu <= 0:  # BoundsOnRatiosInThetaSketchedSets countA<=0 paths
         return (0.0, 0.5, 1.0)
@@ -426,10 +537,10 @@ def theta_exactly_equal(a: ThetaSketch, b: ThetaSketch) -> bool:
     if a.is_empty or b.is_empty:
         return False
     theta_u = min(a.theta, b.theta)
-    uh = np.unique(np.concatenate([a.hashes, b.hashes]))
+    uh = np.unique(np.concatenate([a.keys, b.keys]))
     cu = int(uh[uh < np.uint64(theta_u)].size)
     return (
-        cu == int(a.hashes.size) == int(b.hashes.size)
+        cu == int(a.keys.size) == int(b.keys.size)
         and a.theta == b.theta == theta_u
     )
 

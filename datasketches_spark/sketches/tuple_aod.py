@@ -19,11 +19,12 @@ distinct keys the sketch answers, in one bounded blob:
 Exact mode (retained <= nominal k, theta == 1) makes every one of
 those answers exact, which is the oracle surface.
 
-Internals mirror theta.py's bottom-k ("KMV with theta") core with a
-parallel ``(n, num_values)`` float64 matrix: retained keys are the k
-smallest Apache-compatible murmur hashes, theta is the (k+1)-th
-smallest.  Keys are kept sorted; the summary matrix rows stay aligned
-with the key array through every unique/merge/purge.
+Internals: a ``theta.BottomKSketch`` -- the bottom-k ("KMV with
+theta") core shared with theta and fdt -- whose payload is a
+``(n, num_values)`` float64 matrix: retained keys are the k smallest
+Apache-compatible murmur hashes, theta is the (k+1)-th smallest.  This
+module supplies only the payload hook (duplicate keys sum their rows),
+``describe``, the DSKS frame and the Apache codec.
 
 Wire format (Apache tuple serial version 1, Family.TUPLE = 9,
 recovered from the bundled datasketches-java 6.2.0 bytecode —
@@ -67,8 +68,8 @@ import pandas as pd
 from ..hashing import MAX_HASH
 from ..murmur import DEFAULT_SEED_HASH, theta_hash_rows
 from .base import FAMILY_AOD, SketchDeserializeError, frame, is_framed, unframe
+from .theta import DEFAULT_LG_K, BottomKSketch, ThetaSketch
 
-DEFAULT_LG_K = 12
 MAX_NUM_VALUES = 127
 
 _FLAG_EMPTY = 1
@@ -82,38 +83,18 @@ _WIRE_FLAG_EMPTY = 1 << 2
 _WIRE_FLAG_HAS_ENTRIES = 1 << 3
 
 
-def _sum_duplicates(
-    keys: np.ndarray, values: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collapse duplicate keys, summing their summary rows.
-
-    Returns sorted unique keys and the aligned summed matrix."""
-    uniq, inv = np.unique(keys, return_inverse=True)
-    if uniq.size == keys.size:
-        order = np.argsort(keys)
-        return keys[order], values[order]
-    acc = np.zeros((uniq.size, values.shape[1]), dtype=np.float64)
-    np.add.at(acc, inv, values)
-    return uniq, acc
-
-
 def _copy_widened(sk: "AodSketch", m: int) -> "AodSketch":
-    out = AodSketch(sk.lg_k, sk.num_values)
-    out.theta = sk.theta
-    sk._consolidate()
-    out.keys = sk.keys.copy()
-    out.values = sk.values.copy()
+    out = sk._copy_keys(AodSketch(sk.lg_k, sk.num_values))
+    out.rows = sk.rows
     out._widen_to(m)
     return out
 
 
-class AodSketch:
+class AodSketch(BottomKSketch):
     """ArrayOfDoubles tuple sketch (Apache-wire-compatible)."""
 
-    __slots__ = (
-        "lg_k", "num_values", "theta", "keys", "values",
-        "_pk", "_pv", "_pn", "_adopt_k",
-    )
+    __slots__ = ("num_values",)
+    _KIND = "tuple"
 
     def __init__(self, lg_k: int | None = DEFAULT_LG_K, num_values: int = 1):
         # lg_k=None: a generic merge ACCUMULATOR with no declared K —
@@ -122,42 +103,39 @@ class AodSketch:
         # (datasketch_aod_union_agg, io.rollup_sketch_table) instead
         # of silently purging to the 4096 default.  An EXPLICIT lg_k
         # is respected (Apache mixed-K degradation).
+        super().__init__(DEFAULT_LG_K if lg_k is None else lg_k)
         self._adopt_k = lg_k is None
-        if lg_k is None:
-            lg_k = DEFAULT_LG_K
-        if not (4 <= lg_k <= 26):
-            raise ValueError(f"Invalid lg_k for tuple sketch: {lg_k}")
         if not (1 <= num_values <= MAX_NUM_VALUES):
             raise ValueError(f"Invalid num_values for tuple sketch: {num_values}")
-        self.lg_k = lg_k
         self.num_values = num_values
-        self.theta = MAX_HASH
-        self.keys = np.empty(0, dtype=np.uint64)
-        self.values = np.empty((0, num_values), dtype=np.float64)
-        # pending (hash, summary-rows) batches, consolidated lazily so
-        # many small Arrow batches amortize to O(n log n) total
-        self._pk: list[np.ndarray] = []
-        self._pv: list[np.ndarray] = []
-        self._pn = 0
+        self.rows = np.empty((0, num_values), dtype=np.float64)
+
+    @property
+    def values(self) -> np.ndarray:
+        """The ``(retained, num_values)`` summary matrix, row-aligned
+        with ``keys``."""
+        return self.rows
+
+    def _blank(self, lg_k: int) -> "AodSketch":
+        return AodSketch(lg_k, self.num_values)
+
+    @staticmethod
+    def _dedup(keys: np.ndarray, values: np.ndarray):
+        """Sorted unique keys, summing the summary rows of duplicates."""
+        uniq, inv = np.unique(keys, return_inverse=True)
+        if uniq.size == keys.size:
+            order = np.argsort(keys)
+            return keys[order], values[order]
+        acc = np.zeros((uniq.size, values.shape[1]), dtype=np.float64)
+        np.add.at(acc, inv, values)
+        return uniq, acc
 
     # ---- building ----
     def update_hashes(self, h: np.ndarray, vals: np.ndarray) -> None:
-        if h.size == 0:
-            return
-        vals = np.ascontiguousarray(vals, dtype=np.float64).reshape(
-            h.size, self.num_values
-        )
-        if self.theta < MAX_HASH:
-            live = h < np.uint64(self.theta)
-            if not live.all():
-                h, vals = h[live], vals[live]
-                if h.size == 0:
-                    return
-        self._pk.append(h)
-        self._pv.append(vals)
-        self._pn += h.size
-        if self._pn > max(4 << self.lg_k, 1 << 17):
-            self._consolidate()
+        if h.size:
+            self._add(h, np.ascontiguousarray(vals, dtype=np.float64).reshape(
+                h.size, self.num_values
+            ))
 
     def update_batch(self, keys, vals) -> None:
         """Feed aligned (key, summary-row) batches.
@@ -183,98 +161,34 @@ class AodSketch:
             v = v.reshape(-1, 1)
         self.update_hashes(h, v[keep])
 
-    def _consolidate(self) -> None:
-        if self._pk:
-            allk = np.concatenate([self.keys, *self._pk])
-            allv = np.concatenate([self.values, *self._pv])
-            self._pk, self._pv, self._pn = [], [], 0
-            self.keys, self.values = _sum_duplicates(allk, allv)
-            self._purge()
-
-    def _purge(self) -> None:
-        k = 1 << self.lg_k
-        if self.keys.size > k:
-            # keys are sorted unique; keep the k smallest, theta = (k+1)-th
-            self.theta = int(self.keys[k])
-            self.keys = self.keys[:k]
-            self.values = self.values[:k]
-
     def _widen_to(self, m: int) -> None:
         """Grow the summary width — legal only while every retained
         summary is zero (an all-NULL-summaries group: its keys carried
         no column mass, so zero-padding is exact)."""
         self._consolidate()
-        if self.values.size and self.values.any():
+        if self.rows.size and self.rows.any():
             raise ValueError(
                 "Cannot merge tuple sketches with different num_values: "
                 f"{self.num_values} vs {m}"
             )
         self.num_values = m
-        self.values = np.zeros((self.keys.size, m), dtype=np.float64)
+        self.rows = np.zeros((self.keys.size, m), dtype=np.float64)
 
     def merge(self, other: "AodSketch") -> None:
-        if self._adopt_k and self.is_empty and not self._pk:
-            self.lg_k = other.lg_k
-            self._adopt_k = False
         if other.num_values != self.num_values:
-            if self.is_empty and not self._pk:
+            if self.is_empty:
                 # a fresh accumulator adopts the first input's width
                 # (the generic merge path can't know num_values before
                 # it sees a blob)
                 self.num_values = other.num_values
-                self.values = np.empty((0, other.num_values), dtype=np.float64)
+                self.rows = np.empty((0, other.num_values), dtype=np.float64)
             elif other.num_values > self.num_values:
                 self._widen_to(other.num_values)
             else:
                 other = _copy_widened(other, self.num_values)
-        self._consolidate()
-        other._consolidate()
-        self.theta = min(self.theta, other.theta)
-        allk = np.concatenate([self.keys, other.keys])
-        allv = np.concatenate([self.values, other.values])
-        live = allk < np.uint64(self.theta)
-        if not live.all():
-            allk, allv = allk[live], allv[live]
-        self.keys, self.values = _sum_duplicates(allk, allv)
-        self._purge()
+        super().merge(other)
 
     # ---- queries ----
-    @property
-    def is_empty(self) -> bool:
-        self._consolidate()
-        return self.keys.size == 0 and self.theta == MAX_HASH
-
-    @property
-    def is_estimation_mode(self) -> bool:
-        return self.theta < MAX_HASH
-
-    @property
-    def num_retained(self) -> int:
-        self._consolidate()
-        return int(self.keys.size)
-
-    def get_theta(self) -> float:
-        return self.theta / MAX_HASH
-
-    def get_estimate(self) -> float:
-        self._consolidate()
-        if self.theta == MAX_HASH:
-            return float(self.keys.size)
-        return self.keys.size / (self.theta / MAX_HASH)
-
-    def get_bound(self, num_std_devs: int, upper: bool) -> float:
-        if not (1 <= num_std_devs <= 3):
-            raise ValueError("num_std_devs must be 1..3")
-        self._consolidate()
-        if not self.is_estimation_mode:
-            return self.get_estimate()
-        # java tuple.Sketch.getLower/UpperBound(numStdDev) — the real
-        # BinomialBoundsN (tests/test_binomial_bounds.py)
-        from .binomial_bounds import lower_bound, upper_bound  # noqa: PLC0415
-
-        f = upper_bound if upper else lower_bound
-        return f(int(self.num_retained), self.theta / MAX_HASH, num_std_devs)
-
     def column_sums_retained(self) -> list[float]:
         """Raw per-column sums over the retained entries."""
         self._consolidate()
@@ -344,15 +258,7 @@ class AodSketch:
             raise err from exc
         if not (theta == MAX_HASH or 0 < theta < MAX_HASH):
             raise err
-        if count and (
-            keys.size != np.unique(keys).size
-            or not ((keys > 0) & (keys < np.uint64(theta))).all()
-        ):
-            raise err
-        order = np.argsort(keys, kind="stable")
-        sk.theta = int(theta)
-        sk.keys = keys[order]
-        sk.values = vals.reshape(count, num_values)[order].copy()
+        sk._load(theta, keys, err, vals.reshape(count, num_values))
         return sk
 
     # ---- Apache wire ----
@@ -456,8 +362,6 @@ class AodSketch:
             vals = np.frombuffer(
                 blob, dtype=np.float64, count=count * num_values, offset=24 + 8 * count
             ).reshape(count, num_values)
-            if count > (1 << sk.lg_k):
-                sk.lg_k = min(26, max(4, int(count - 1).bit_length()))
         else:  # QuickSelect image: full table, zero keys = empty slots
             if len(blob) < 32:
                 raise err
@@ -476,76 +380,38 @@ class AodSketch:
             keys, vals = tk[live], tv[live]
             if keys.size != count:
                 raise err
-        ukeys = keys.view(np.uint64)
-        if keys.size and (
-            np.unique(ukeys).size != keys.size
-            or not ((ukeys > 0) & (ukeys < np.uint64(theta))).all()
-        ):
-            raise err
-        order = np.argsort(ukeys, kind="stable")
-        sk.theta = int(theta)
-        sk.keys = ukeys[order].copy()
-        sk.values = np.ascontiguousarray(vals[order], dtype=np.float64)
+        sk._load(
+            theta, keys.view(np.uint64), err, vals, grow=stype == _WIRE_TYPE_COMPACT
+        )
         return sk
 
 
-def aod_to_theta(sk: AodSketch):
+def aod_to_theta(sk: AodSketch) -> ThetaSketch:
     """Project the key set to a plain theta sketch — the tuple
     family's hash space IS theta's, so the projection is lossless
     (same theta, same retained hashes) and composes with every theta
     scalar/set-op/wire path (mirrors java's
     ArrayOfDoublesSketch.compact() ancestry in the tuple hierarchy)."""
-    from .theta import ThetaSketch
-
-    sk._consolidate()
-    out = ThetaSketch(sk.lg_k)
-    out.theta = sk.theta
-    out.hashes = sk.keys.copy()
-    return out
+    return sk._copy_keys(ThetaSketch(sk.lg_k))
 
 
 # ---- scalar set algebra (summaries carried through) ----
 
 def aod_union(a: AodSketch, b: AodSketch, lg_k: int | None = None) -> AodSketch:
-    out = AodSketch(lg_k if lg_k is not None else max(a.lg_k, b.lg_k), a.num_values)
-    out.merge(a)
-    out.merge(b)
-    return out
+    return a._union(b, lg_k)
 
 
 def aod_intersect(a: AodSketch, b: AodSketch) -> AodSketch:
     """Keys present in both; summaries combined by element-wise SUM
     (the canonical ArrayOfDoublesCombiner)."""
-    a._consolidate()
-    b._consolidate()
     if a.num_values != b.num_values:
         raise ValueError(
             "Cannot intersect tuple sketches with different num_values: "
             f"{a.num_values} vs {b.num_values}"
         )
-    out = AodSketch(max(a.lg_k, b.lg_k), a.num_values)
-    theta = min(a.theta, b.theta)
-    amask = a.keys < np.uint64(theta)
-    bmask = b.keys < np.uint64(theta)
-    common, ia, ib = np.intersect1d(
-        a.keys[amask], b.keys[bmask], return_indices=True
-    )
-    out.theta = theta
-    out.keys = common
-    out.values = a.values[amask][ia] + b.values[bmask][ib]
-    return out
+    return a._intersect(b, np.add)
 
 
 def aod_a_not_b(a: AodSketch, b: AodSketch) -> AodSketch:
     """Keys in A and not in B; A's summaries survive unchanged."""
-    a._consolidate()
-    b._consolidate()
-    out = AodSketch(max(a.lg_k, b.lg_k), a.num_values)
-    theta = min(a.theta, b.theta)
-    amask = a.keys < np.uint64(theta)
-    ak, av = a.keys[amask], a.values[amask]
-    keep = ~np.isin(ak, b.keys[b.keys < np.uint64(theta)])
-    out.theta = theta
-    out.keys = ak[keep]
-    out.values = av[keep]
-    return out
+    return a._a_not_b(b)

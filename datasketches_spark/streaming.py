@@ -110,19 +110,26 @@ class SketchStore(_EpochGuard):
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
 
-    def absorb(self, batch_df: DataFrame, input_col: str) -> None:
-        """Fold a (micro-)batch of raw rows into the store."""
+    def _stored(self, spark: SparkSession, batch_df: DataFrame) -> DataFrame:
+        """The stored rows a batch of raw rows can update."""
+        return self.read(spark)
+
+    def _merged(self, batch_df: DataFrame, input_col: str, keys: list[str]) -> DataFrame:
+        """The store after absorbing ``batch_df``, as a plan: the batch's
+        partition-local sketches, unioned with the stored blobs they
+        update, end in ONE ``sketch_merge`` -- one blob shuffle per
+        batch, store present or absent."""
         spark = batch_df.sparkSession
-        partial = sketch_agg(
-            batch_df, input_col, self.family, self.group_cols, self.k, self.sketch_col
+        partial = sketch_partial(
+            batch_df, input_col, self.family, keys, self.k, self.sketch_col
         )
         if self.exists(spark):
-            combined = self.read(spark).unionByName(partial)
-            merged = sketch_merge(
-                combined, self.family, self.group_cols, self.k, self.sketch_col
-            )
-        else:
-            merged = partial
+            partial = self._stored(spark, batch_df).unionByName(partial)
+        return sketch_merge(partial, self.family, keys, self.k, self.sketch_col)
+
+    def absorb(self, batch_df: DataFrame, input_col: str) -> None:
+        """Fold a (micro-)batch of raw rows into the store."""
+        merged = self._merged(batch_df, input_col, self.group_cols)
         # materialize BEFORE overwriting the path the merge plan reads
         # from (same pattern as PartitionedSketchStore) -- one parquet
         # write per batch instead of the former staging double-write.
@@ -168,20 +175,14 @@ class PartitionedSketchStore(SketchStore):
         super().__init__(path, family, group_cols, k, sketch_col)
         self.bucket_col = bucket_col
 
+    def _stored(self, spark: SparkSession, batch_df: DataFrame) -> DataFrame:
+        # the raw batch's bucket column: no sketch fold runs for the probe
+        touched = [r[0] for r in batch_df.select(self.bucket_col).distinct().collect()]
+        return self.read(spark).filter(F.col(self.bucket_col).isin(touched))
+
     def absorb(self, batch_df: DataFrame, input_col: str) -> None:
         spark = batch_df.sparkSession
-        keys = [self.bucket_col, *self.group_cols]
-        partial = sketch_agg(
-            batch_df, input_col, self.family, keys, self.k, self.sketch_col
-        )
-        if self.exists(spark):
-            touched = [r[0] for r in partial.select(self.bucket_col).distinct().collect()]
-            old = self.read(spark).filter(F.col(self.bucket_col).isin(touched))
-            merged = sketch_merge(
-                old.unionByName(partial), self.family, keys, self.k, self.sketch_col
-            )
-        else:
-            merged = partial
+        merged = self._merged(batch_df, input_col, [self.bucket_col, *self.group_cols])
         # materialize before overwriting the partitions we just read
         merged = merged.localCheckpoint(eager=True)
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

@@ -283,14 +283,26 @@ def test_bloom_prune_apache_engine(spark, bloom_route):
     assert len(keys) < 600
 
 
-def test_bloomfilter_blob_cross_merge_paths(spark):
-    """Driver-merge and two-phase builds produce the SAME wire bytes
-    (deterministic bits; OR-merge is order-free)."""
+def _both_routes(monkeypatch, df, **kw):
+    """``bloomfilter_blob`` built on the driver-merge route, then on
+    the shuffle route: the route follows ``compat.scan_partitions`` (a
+    known partition count merges on the driver, an unknown one through
+    the blob-only shuffle)."""
+    from datasketches_spark import compat
     from datasketches_spark.runtime_filter import bloomfilter_blob
 
+    out = []
+    for parts in (1, None):
+        monkeypatch.setattr(compat, "scan_partitions", lambda _df, p=parts: p)
+        out.append(bloomfilter_blob(df, "k", **kw))
+    return out
+
+
+def test_bloomfilter_blob_cross_merge_paths(spark, monkeypatch):
+    """Driver-merge and two-phase builds produce the SAME wire bytes
+    (deterministic bits; OR-merge is order-free)."""
     df = spark.range(0, 2000).withColumnRenamed("id", "k").repartition(4)
-    a = bloomfilter_blob(df, "k", lg_m=14, driver_merge=True)
-    b = bloomfilter_blob(df, "k", lg_m=14, driver_merge=False)
+    a, b = _both_routes(monkeypatch, df, lg_m=14)
     assert bytes(a) == bytes(b)
 
 
@@ -343,20 +355,14 @@ def test_sql_empty_probe(spark):
     assert [(r.s, r.hit) for r in rows] == [("", False), ("a", True), ("b", True)]
 
 
-def test_blob_custom_geometry_both_paths(spark):
+def test_blob_custom_geometry_both_paths(spark, monkeypatch):
     """num_hashes/seed flow into BOTH build paths and survive the
     merge — a filter meant to union with an existing java filter must
     match its full geometry."""
-    from datasketches_spark.runtime_filter import bloomfilter_blob
-
     df = spark.range(0, 1000).withColumnRenamed("id", "k").repartition(3)
-    a = ApacheBloomFilter.from_wire(
-        bloomfilter_blob(df, "k", lg_m=12, num_hashes=8, seed=1234,
-                         driver_merge=True)
-    )
-    b = ApacheBloomFilter.from_wire(
-        bloomfilter_blob(df, "k", lg_m=12, num_hashes=8, seed=1234,
-                         driver_merge=False)
+    a, b = (
+        ApacheBloomFilter.from_wire(blob)
+        for blob in _both_routes(monkeypatch, df, lg_m=12, num_hashes=8, seed=1234)
     )
     for f in (a, b):
         assert f.num_hashes == 8 and f.seed == 1234 and f.capacity == 4096

@@ -13,12 +13,14 @@ group however many Arrow batches carry it, -0.0 equals 0.0, and the
 global merge of an empty input is zero rows."""
 
 from contextlib import contextmanager
+from unittest import mock
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from datasketches_spark import compat
 from datasketches_spark.aggregation import (
     _sketch_partials,
     sketch_agg,
@@ -75,17 +77,21 @@ def _hybrid(df):
     return {r.g: r.estimate for r in theta_agg_hybrid(df, "v", ["g"]).collect()}
 
 
+def _bloomfilter(df, lg_m, parts):
+    """``bloomfilter_blob`` on a forced merge route: a known partition
+    count (1) takes the driver merge, an unknown one (None) the
+    shuffle merge."""
+    with mock.patch.object(compat, "scan_partitions", lambda _df: parts):
+        return bytes(bloomfilter_blob(df, "v", lg_m=lg_m))
+
+
 BUILDERS = {
     "sketch_agg_theta": _theta,
     "sketch_agg_multi": _multi,
     "tuple_sketch_agg": _tuple,
     "theta_agg_hybrid": _hybrid,
-    "bloomfilter_driver": lambda df: bytes(
-        bloomfilter_blob(df, "v", lg_m=12, driver_merge=True)
-    ),
-    "bloomfilter_shuffle": lambda df: bytes(
-        bloomfilter_blob(df, "v", lg_m=12, driver_merge=False)
-    ),
+    "bloomfilter_driver": lambda df: _bloomfilter(df, 12, 1),
+    "bloomfilter_shuffle": lambda df: _bloomfilter(df, 12, None),
 }
 
 
@@ -381,7 +387,7 @@ def test_golden_tuple_partial_matches_update_batch(spark, golden):
 def test_golden_bloomfilter_blob_matches_update_sketch(spark, golden):
     df, _ = golden
     with _batch_rows(spark, 2):
-        got = bytes(bloomfilter_blob(df, "v", lg_m=10, driver_merge=True))
+        got = _bloomfilter(df, 10, 1)
     ref = ApacheBloomFilter(1 << 10, 6, 9001)
     update_sketch("bloomfilter", ref, coerce_value_batch(
         _series(df.collect(), "v"), "int64"

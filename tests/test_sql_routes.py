@@ -317,3 +317,45 @@ def test_no_blanket_except(module):
         )
     ]
     assert bad == [], bad
+
+
+def _module_imports(tree):
+    """Import statements at module level, inside top-level if/try too."""
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            yield node
+        elif isinstance(node, (ast.If, ast.Try)):
+            stack += node.body + node.orelse + getattr(node, "finalbody", [])
+            for handler in getattr(node, "handlers", []):
+                stack += handler.body
+
+
+def test_no_unused_module_imports():
+    """Every name a module imports at module level is used in it.
+    ``__init__.py`` re-exports and ``# noqa: F401`` lines are exempt."""
+    bad = []
+    for dirpath, dirs, files in os.walk(PKG):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            if not fn.endswith(".py") or fn == "__init__.py":
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path) as f:
+                src = f.read()
+            tree = ast.parse(src)
+            lines = src.splitlines()
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for node in _module_imports(tree):
+                if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                    continue
+                span = lines[node.lineno - 1:node.end_lineno]
+                if any("noqa: F401" in ln for ln in span):
+                    continue
+                bad += [
+                    (os.path.relpath(path, PKG), node.lineno, a.asname or a.name)
+                    for a in node.names
+                    if (a.asname or a.name).split(".")[0] not in used | {"*"}
+                ]
+    assert bad == [], bad

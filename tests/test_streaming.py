@@ -1005,3 +1005,52 @@ def test_ngram_cms_store_matches_exact_at_sized_width(spark, tmpdir):
     store.store._record_epoch(5)
     fn(docs.limit(10), 3)
     assert sorted(map(tuple, store.spans(docs, min_count=2).collect())) == got
+
+
+@pytest.mark.parametrize(
+    "family,k,partitioned",
+    [("theta", 12, False), ("hll", 12, False), ("kll", 2000, False), ("theta", 12, True)],
+)
+def test_store_absorb_merges_once(spark, tmpdir, family, k, partitioned):
+    """Each absorb is one plan with ONE blob shuffle: the batch's
+    partition-local sketches and the stored blobs they update end in a
+    single sketch_merge, store present or absent.  Three absorbs leave
+    the store equal to one sketch_agg over the union of the batches."""
+    from datasketches_spark.aggregation import sketch_agg
+    from datasketches_spark.families import FAMILY_CLASSES
+    from datasketches_spark.streaming import PartitionedSketchStore
+
+    path = f"{tmpdir}/{family}_store"
+    if partitioned:
+        store = PartitionedSketchStore(path, family, bucket_col="hr", group_cols=["g"], k=k)
+    else:
+        store = SketchStore(path, family, group_cols=["g"], k=k)
+    keys = ["hr", "g"] if partitioned else ["g"]
+    batches = [
+        spark.range(300 * i, 300 * i + 500).selectExpr(
+            "id % 2 AS hr", "id % 3 AS g", "CAST(id * 7 % 1000 AS BIGINT) AS v"
+        )
+        for i in range(3)
+    ]
+    for batch in batches:
+        plan = store._merged(batch, "v", keys)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        store.absorb(batch, "v")
+
+    union = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = {
+        tuple(r[c] for c in keys): bytes(r.sketch)
+        for r in sketch_agg(union, "v", family, keys, k).collect()
+    }
+    got = {tuple(r[c] for c in keys): bytes(r.sketch) for r in store.read(spark).collect()}
+    assert got.keys() == want.keys()
+    if family != "kll":
+        assert got == want
+        return
+    cls = FAMILY_CLASSES[family]
+    for key, blob in want.items():
+        a, b = cls.deserialize(got[key]), cls.deserialize(blob)
+        assert not a.is_estimation_mode and a.n == b.n
+        assert (a.get_min_item(), a.get_max_item()) == (b.get_min_item(), b.get_max_item())
+        for q in (0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0):
+            assert a.get_quantile(q) == b.get_quantile(q)
